@@ -3,15 +3,22 @@
 # running graft.Bench on a query subset, N rounds, and leave per-leg
 # JSON records in $OUTDIR. Decision rule: compare per-query min across
 # legs of the same binary (Bench itself takes min-of-2 per leg).
-# Usage: OLD=/tmp/r15_oldbin/classes NEW=target/scala-2.13/classes \
+# Usage: OLD=<baseline classes dir> [NEW=target/scala-2.13/classes] \
 #   ROUNDS=3 OUTDIR=/tmp/ab SF=/root/testdata/sf0.1 scripts/interleave_ab.sh q_a q_b ...
+# OLD is required (build the baseline commit in its own checkout and
+# point at its target/scala-2.13/classes). CPUS defaults to nproc.
 set -u
-OLD="${OLD:-/tmp/r15_oldbin/classes}"
+usage() { sed -n '2,9p' "$0" >&2; exit 2; }
+OLD="${OLD:-}"
+if [ -z "$OLD" ] || [ ! -d "$OLD" ]; then
+  echo "interleave_ab.sh: OLD must name an existing classes directory" >&2
+  usage
+fi
 NEW="${NEW:-target/scala-2.13/classes}"
 ROUNDS="${ROUNDS:-3}"
-OUTDIR="${OUTDIR:-/tmp/r15_ab}"
+OUTDIR="${OUTDIR:-/tmp/ab}"
 SF="${SF:-/root/testdata/sf0.1}"
-CPUS="${CPUS:-32}"
+CPUS="${CPUS:-$(nproc)}"
 mkdir -p "$OUTDIR"
 for r in $(seq 1 "$ROUNDS"); do
   for leg in old new; do

@@ -90,15 +90,10 @@ object Checkpoints {
       // queries ~10-25% faster, none slower. The clone only exists
       // when partitions were LOWERED (small working sets); at 100 TB
       // loopSession returns the parent unchanged and AQE stays on.
-      // NOT unconditional: loops whose per-round joins depend on AQE's
-      // runtime broadcast conversion (connectedComponents' star joins:
-      // 4.7 -> 9.2 s when AQE went off — truncated frames advertise the
-      // default sizeInBytes, so the STATIC planner can't broadcast
-      // them) pass keepAqe=true. SPARK_GRAFT_LOOP_AQE=on restores AQE
-      // everywhere for A/B.
-      if (!keepAqe && !sys.props.get("spark.graft.loop.aqe")
-            .orElse(sys.env.get("SPARK_GRAFT_LOOP_AQE")).contains("on"))
-        s.conf.set("spark.sql.adaptive.enabled", "false")
+      // NOT unconditional: loops whose per-round joins still gain from
+      // AQE's runtime re-planning (connectedComponents' star joins,
+      // r15: 5.15 s with AQE vs 9.10 s without) pass keepAqe=true.
+      if (!keepAqe) s.conf.set("spark.sql.adaptive.enabled", "false")
       s
     }
   }
@@ -110,14 +105,6 @@ object Checkpoints {
     * checkpoints. */
   def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-
-  /** Session conf key: attach MEASURED statistics (rowCount +
-    * sizeInBytes summed over the materialized UnsafeRows) to truncated
-    * leaves. Default ON — real sizes let the STATIC planner broadcast
-    * small truncated frames (loop label/result frames) without relying
-    * on AQE's runtime rescue. OFF restores the r14 behavior (session
-    * default sizeInBytes) for A/B. */
-  val RealStatsConfKey = "spark.graft.truncate.realStats"
 
   /** Truncate `df`'s lineage eagerly, honoring the session's durability
     * conf. Both paths are eager (the returned frame is materialized), so
@@ -146,8 +133,7 @@ object Checkpoints {
     * compounding above, which came from carrying forward ESTIMATES),
     * and accurate enough that the static planner can broadcast a small
     * truncated frame without AQE's runtime rescue (the r14 verdict's
-    * connectedComponents finding). `spark.graft.truncate.realStats=false`
-    * restores the default-sized leaves for A/B. */
+    * connectedComponents finding). */
   def truncate(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftext.Bridge
     materialize(df, Bridge.internalRdd(df).map(_.copy()), None)._1
@@ -225,7 +211,7 @@ object Checkpoints {
         (n + pn, b + pb, f + pf)
       }
     }
-    val measured =
+    val (rows, bytes, flags) =
       if (reliable(df)) {
         if (spark.sparkContext.getCheckpointDir.isEmpty)
           throw new IllegalStateException(
@@ -245,10 +231,6 @@ object Checkpoints {
         rdd.localCheckpoint()
         sizingJob()
       }
-    val realStats =
-      spark.conf.get(RealStatsConfKey, "true").toBoolean
-    val frame = Bridge.truncatedFrame(df, rdd,
-      if (realStats) Some((measured._1, measured._2)) else None)
-    (frame, measured._1, measured._3)
+    (Bridge.truncatedFrame(df, rdd, rows, bytes), rows, flags)
   }
 }

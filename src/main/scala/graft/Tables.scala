@@ -127,13 +127,11 @@ object Tables {
     * q_attribution +4.8 s when off), and even the sub-second family in
     * aggregate got WORSE off (45.4→52.2 s) once landings/writes lost
     * coalescing. So the policy is AQE ON — Spark's default and the
-    * 100 TB posture — with `SPARK_GRAFT_AQE=off` as the recorded A/B
-    * hook, not a size heuristic. Returns the decision for the
-    * caller's record. */
+    * 100 TB posture — not a size heuristic. Returns the decision
+    * (always true) for the caller's record. */
   def applyAdaptivePolicy(spark: SparkSession): Boolean = {
-    val enabled = !sys.env.get("SPARK_GRAFT_AQE").contains("off")
-    spark.conf.set("spark.sql.adaptive.enabled", enabled.toString)
-    enabled
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    true
   }
 
   /** Register all tables as temp views for SQL access. Idempotent, and

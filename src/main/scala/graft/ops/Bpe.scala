@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed byte-pair-encoding merge learning (Sennrich et al. 2016,
@@ -43,26 +43,17 @@ object Bpe {
   /** One learned merge. */
   final case class Merge(round: Int, a: String, b: String, count: Long)
 
-  /** Session conf key: merge rounds between lineage truncations in
-    * [[learnMerges]] (default [[DefaultTruncateEvery]], min 1). Between
-    * truncations a round's merge rides as one chained `replace`
+  /** Merge rounds between lineage truncations in [[learnMerges]].
+    * Between truncations a round's merge rides as one chained `replace`
     * projection over the last materialized vocab — a narrow map the
     * next round's aggregate recomputes for pennies — so a tokenizer
     * training thousands of merges pays one materialization (and, in
-    * reliable-checkpoint mode, one checkpoint WRITE) per `every` rounds
-    * instead of per round. Set to 1 to restore truncate-every-round. */
-  val TruncateEveryConfKey = "spark.graft.bpe.truncateEvery"
-
-  /** Default truncation cadence: lineage stays ≤8 cheap projections
-    * deep (plan stats don't compound across projections — only joins
+    * reliable-checkpoint mode, one checkpoint WRITE) per 8 rounds
+    * instead of per round. Lineage stays ≤8 cheap projections deep
+    * (plan stats don't compound across projections — only joins
     * multiply sizeInBytes — so the duplicateClusters stats-blowup
     * failure mode cannot arise between truncations). */
   val DefaultTruncateEvery = 8
-
-  private def truncateEvery(spark: SparkSession): Int =
-    spark.conf.getOption(TruncateEveryConfKey)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(DefaultTruncateEvery)
 
   private def symbols(seq: Column): Column =
     split(trim(seq, "|"), "\\|\\|")
@@ -79,13 +70,21 @@ object Bpe {
     * ([[graft.Checkpoints.loopSession]]) — thousands of rounds × a
     * 32-partition aggregate is pure scheduling overhead when the vocab
     * fits in a handful of partitions. Lineage is truncated every
-    * [[TruncateEveryConfKey]] rounds rather than every round; the
+    * [[DefaultTruncateEvery]] rounds rather than every round; the
     * rounds in between chain their merges as `replace` projections
     * over the last materialized snapshot. */
   def learnMerges(
-      df: DataFrame, textCol: String, rounds: Int): DataFrame = {
+      df: DataFrame, textCol: String, rounds: Int): DataFrame =
+    learnMerges(df, textCol, rounds, DefaultTruncateEvery)
+
+  /** [[learnMerges]] with an explicit truncation cadence `every` (≥1),
+    * so a spec can pin that the cadence never changes the merges. */
+  private[ops] def learnMerges(
+      df: DataFrame, textCol: String, rounds: Int,
+      every: Int): DataFrame = {
     val spark = df.sparkSession
     require(rounds >= 1, "rounds must be >= 1")
+    require(every >= 1, "every must be >= 1")
     // each char c becomes "|c|"; concatenation yields "|a||b||c|"
     val (vocab0, vocabRows) = graft.Checkpoints.truncateCount(
       wordFreq(df, textCol)
@@ -99,7 +98,6 @@ object Bpe {
     val loopSpark = graft.Checkpoints.loopSession(
       spark, vocabRows, rowsPerPartition = 100000L)
     var vocab = org.apache.spark.sql.graftext.Bridge.rebind(vocab0, loopSpark)
-    val every = truncateEvery(spark)
     var sinceTruncate = 0
     val merges = Seq.newBuilder[Merge]
     var r = 1

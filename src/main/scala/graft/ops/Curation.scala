@@ -52,11 +52,11 @@ object Curation {
     * dropped); NULL text stays NULL (no evidence).
     *
     * Scale shape (r13): the keep rule is a pure PER-LINE function — no
-    * corpus-wide evidence — so the default plan is MAP-ONLY: the keep
+    * corpus-wide evidence — so the plan is MAP-ONLY: the keep
     * predicate runs inside `filter(array, …)` higher-order functions on
     * the un-exploded line array, zero shuffles, zero sorts, one
     * codegen'd projection. The pre-r13 explode → flag → regroup plan
-    * (kept behind SPARK_GRAFT_C4_MODE=agg for A/Bs) paid a full
+    * (map-only won 157–448× in the r13 A/B) paid a full
     * doc-keyed exchange plus the collect_list sort-fallback just to
     * reassemble an order the array never lost — that fallback was the
     * operator's measured above-linear 100× slope (PERF_NOTES r11/r12;
@@ -71,38 +71,15 @@ object Curation {
       trim(l).rlike("[.!?\"]$") &&
         size(TextOps.tokens(l)) >= minWords &&
         !lower(l).rlike("[{}]|lorem ipsum|javascript|cookie")
-    if (!sys.props.get("spark.graft.c4.mode")
-        .orElse(sys.env.get("SPARK_GRAFT_C4_MODE")).contains("agg")) {
-      val arr = lineUnits(col(textCol))
-      val kept = filter(arr, l => keepLine(l))
-      df.select(col(idCol),
-        when(col(textCol).isNotNull, size(arr)).otherwise(lit(0))
-          .cast("long").as("n_lines"),
-        when(col(textCol).isNotNull, size(kept)).otherwise(lit(0))
-          .cast("long").as("n_kept"),
-        when(col(textCol).isNotNull, array_join(kept, "\n"))
-          .as("text_clean"))
-    } else {
-      // The has-text bit is projected BEFORE the explode as plan
-      // hygiene: it makes the pruning of raw textCol off the exploded
-      // rows explicit instead of relying on the optimizer.
-      val lines = df.select(col(idCol), col(textCol).isNotNull.as("__ht"),
-        posexplode_outer(lineUnits(col(textCol))).as(Seq("pos", "line")))
-      val keep = col("line").isNotNull && keepLine(col("line"))
-      val flagged = lines.withColumn("__keep", keep)
-      flagged.groupBy(col(idCol)).agg(
-        count(col("line")).as("n_lines"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("n_kept"),
-        // every text is non-NULL within a group (posexplode_outer emits
-        // a single NULL line only for NULL text, where n_lines counts 0)
-        max(col("__ht")).as("__has_text"),
-        array_join(transform(
-          array_sort(collect_list(when(col("__keep"),
-            struct(col("pos"), col("line"))))),
-          t => t.getField("line")), "\n").as("__clean"))
-        .select(col(idCol), col("n_lines"), col("n_kept"),
-          when(col("__has_text"), col("__clean")).as("text_clean"))
-    }
+    val arr = lineUnits(col(textCol))
+    val kept = filter(arr, l => keepLine(l))
+    df.select(col(idCol),
+      when(col(textCol).isNotNull, size(arr)).otherwise(lit(0))
+        .cast("long").as("n_lines"),
+      when(col(textCol).isNotNull, size(kept)).otherwise(lit(0))
+        .cast("long").as("n_kept"),
+      when(col(textCol).isNotNull, array_join(kept, "\n"))
+        .as("text_clean"))
   }
 
   /** Remove boilerplate units: a unit occurring in at least `minDocs`

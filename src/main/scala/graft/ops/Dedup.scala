@@ -107,37 +107,6 @@ object Dedup {
   private[ops] def derivedEagerRows(heapBytes: Long, executors: Int): Long =
     math.max(8L * 1000 * 1000, heapBytes / 256 * math.max(1, executors))
 
-  /** Session conf key selecting [[paragraphDedup]]'s reassembly tail:
-    * "agg" (default) = per-doc sorted-collect aggregate; "sorted" =
-    * [[reassembleSorted]]'s one-exchange streaming run detector. The
-    * default is MEASURED on local[32] with node-local shuffle
-    * (bench_results/r13_reassembly_ab.json: agg wins 1.68× at 30×,
-    * 1.77× at 100× — the Row-codec boundary plus the full partition
-    * sort cost more than the per-doc array_sorts); on a cluster whose
-    * shuffle/spill tier makes external sort cheap relative to
-    * per-group buffers that call can invert, and this conf is the
-    * switch — no rebuild. Resolution order: session conf, then the
-    * system property / SPARK_GRAFT_REASSEMBLY env the A/B harness
-    * sets; anything other than "sorted" means the default tail. */
-  val ReassemblyConfKey = "spark.graft.reassembly"
-
-  /** Session conf key selecting [[similarityJoinExact]]'s verify tail:
-    * unset/"array" (default, r14) = per-pair codegen'd array_intersect
-    * over the attached distinct-unit arrays; "join" = the pre-r14
-    * exploded pair×token join + pair-count aggregate. See the tail
-    * comment in [[similarityJoinExact]] for the measured rationale. */
-  val VerifyConfKey = "spark.graft.simjoin.verify"
-
-  private def reassemblyMode(
-      spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.getOption(ReassemblyConfKey)
-      .orElse(sys.props.get(ReassemblyConfKey))
-      .orElse(sys.env.get("SPARK_GRAFT_REASSEMBLY"))
-      .map(_.trim.toLowerCase(java.util.Locale.ROOT)) match {
-      case Some("sorted") => "sorted"
-      case _ => "agg"
-    }
-
   /** One-slot registry for [[similarityJoinExact]]'s eager working-set
     * cache — same lifecycle discipline as [[lastGuardCache]]: the
     * caller's lazy result frame still reads it after the method
@@ -1236,13 +1205,11 @@ object Dedup {
     // path a dedicated one-pass count prices it), so the decision is
     // made from measurement, not guesswork: persist when the working
     // set exceeds [[eagerWorkingSetRows]] (threshold via the
-    // spark.graft.simjoin.eagerRows conf; SPARK_GRAFT_SIMJOIN_EAGER=
-    // on|off forces either regime for A/B probes).
+    // spark.graft.simjoin.eagerRows conf; "1" forces the eager regime,
+    // a huge value the lazy one).
     val expl = base.select(col("id"), size(col("toks")).as("n"),
       explode(col("toks")).as("tok"))
     val dfc = expl.groupBy(col("tok")).agg(count(lit(1)).as("__df"))
-    val eagerEnv = sys.props.get("spark.graft.simjoin.eager")
-      .orElse(sys.env.get("SPARK_GRAFT_SIMJOIN_EAGER"))
     def persistWorkingSet(): Unit = {
       // r14: the cached frame is BASE (id, toks array), not the explode
       // — every consumer (dfc, both pref sides, both verify sides)
@@ -1255,7 +1222,6 @@ object Dedup {
       swapWorkingSetCache(base) // release prev FIRST (see its Scaladoc)
       base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eagerEnv.contains("on")) persistWorkingSet()
     if (maxCandidates != UncappedCandidates) {
       // MEMORY_ONLY: the df table is unit-vocabulary-sized (2 narrow
       // columns), the guard aggregate materializes it, and the prefix
@@ -1276,8 +1242,7 @@ object Dedup {
       val head = dfc.select(pairSum(col("__df")), sum(col("__df"))).first()
       val bound = asPairs(head)
       val explRows = if (head.isNullAt(1)) 0L else head.getLong(1)
-      if (eagerEnv.isEmpty &&
-          explRows >= eagerWorkingSetRows(df.sparkSession))
+      if (explRows >= eagerWorkingSetRows(df.sparkSession))
         persistWorkingSet()
       if (bound > BigDecimal(maxCandidates)) {
         val exact = asPairs(
@@ -1306,7 +1271,7 @@ object Dedup {
               "shingleSize" -> shingleSize.toString))
         }
       }
-    } else if (eagerEnv.isEmpty) {
+    } else {
       // UncappedCandidates skips the pricing guard, but the size-based
       // eager decision is general (the regime note above), with two
       // orderings that matter at scale. (1) A clearly-tiny corpus skips
@@ -1365,8 +1330,8 @@ object Dedup {
       .filter(least(col("pa"), col("pb")) +
         least(col("na") - col("pa"), col("nb") - col("pb")) >= alpha)
       .select(col("a"), col("b"), col("na"), col("nb")).distinct()
-    // Verify tail — count |A∩B| per surviving candidate pair. Default
-    // ("array", r14): attach both documents' distinct-unit ARRAYS from
+    // Verify tail — count |A∩B| per surviving candidate pair (r14):
+    // attach both documents' distinct-unit ARRAYS from
     // `base` (two 1:1 id joins) and count the intersection per pair
     // with one codegen'd array_intersect. The replaced pair×token
     // exploded join + corpus-wide pair-count aggregate multiplied the
@@ -1376,35 +1341,19 @@ object Dedup {
     // from its bytes (1.9 MB) with no view of that 70× downstream
     // expansion, so the whole verify ran single-threaded (1.1 s of a
     // 3.9 s query, r14 StageProbe). The explicit-width repartition
-    // pins the verify's parallelism for exactly that reason. Old tail
-    // kept behind spark.graft.simjoin.verify=join (conf, sysprop, or
-    // SPARK_GRAFT_SIMJOIN_VERIFY env) for A/B; both tails count the
-    // same distinct-unit intersection (toks is array_distinct'd, so
-    // per-pair token matches ARE the intersection set, see the
-    // VerifySpec equivalence pin).
-    val verifyJoin = df.sparkSession.conf.getOption(VerifyConfKey)
-      .orElse(sys.props.get(VerifyConfKey))
-      .orElse(sys.env.get("SPARK_GRAFT_SIMJOIN_VERIFY"))
-      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).contains("join")
-    val verified =
-      if (verifyJoin)
-        cand
-          .join(expl.select(col("id").as("a"), col("tok")), Seq("a"))
-          .join(expl.select(col("id").as("b"), col("tok")), Seq("b", "tok"))
-          .groupBy(col("a"), col("b"), col("na"), col("nb"))
-          .agg(count(lit(1)).as("n_inter"))
-      else
-        cand
-          .repartition(df.sparkSession.sparkContext.defaultParallelism,
-            col("a"), col("b"))
-          .join(base.select(col("id").as("a"), col("toks").as("__ta")),
-            Seq("a"))
-          .join(base.select(col("id").as("b"), col("toks").as("__tb")),
-            Seq("b"))
-          .select(col("a"), col("b"), col("na"), col("nb"),
-            size(array_intersect(col("__ta"), col("__tb"))).cast("long")
-              .as("n_inter"))
-    verified
+    // pins the verify's parallelism for exactly that reason. toks is
+    // array_distinct'd, so the intersection size is exact (pinned
+    // against brute-force all-pairs Jaccard in OpsSpec).
+    cand
+      .repartition(df.sparkSession.sparkContext.defaultParallelism,
+        col("a"), col("b"))
+      .join(base.select(col("id").as("a"), col("toks").as("__ta")),
+        Seq("a"))
+      .join(base.select(col("id").as("b"), col("toks").as("__tb")),
+        Seq("b"))
+      .select(col("a"), col("b"), col("na"), col("nb"),
+        size(array_intersect(col("__ta"), col("__tb"))).cast("long")
+          .as("n_inter"))
       .withColumn("n_union", col("na") + col("nb") - col("n_inter"))
       .filter(lit(100) * col("n_inter") >= lit(p) * col("n_union"))
       .select(col("a"), col("b"), col("n_inter"), col("n_union"),
@@ -1500,9 +1449,7 @@ object Dedup {
       .withColumn("__keep", col("line").isNotNull &&
         (length(trim(col("line"))) < minChars ||
           key === col("__first") || col("__first").isNull))
-    if (reassemblyMode(df.sparkSession) == "sorted")
-      reassembleSorted(flagged, idCol)
-    else flagged.groupBy(col(idCol)).agg(
+    flagged.groupBy(col(idCol)).agg(
       count(col("line")).as("n_lines"),
       sum(when(col("__keep"), 1L).otherwise(0L)).as("n_kept"),
       // NULL text emits a single NULL line (posexplode_outer), where
@@ -1514,62 +1461,5 @@ object Dedup {
         t => t.getField("line")), "\n").as("__clean"))
       .select(col(idCol), col("n_lines"), col("n_kept"),
         when(col("__has_text"), col("__clean")).as("text_clean"))
-  }
-
-  /** Streaming sorted reassembly — the A/B alternative to
-    * [[paragraphDedup]]'s aggregate tail ([[ReassemblyConfKey]] =
-    * "sorted"): ONE hash exchange on the doc id + ONE spillable
-    * within-partition sort on (id, pos), then a run-detecting
-    * mapPartitions that string-builds each document's clean text as
-    * its rows stream past. Removes both the per-doc array_sort and
-    * the collect_list aggregate whose sort-based fallback is the
-    * measured above-linear 100× slope — the order comes from the
-    * shuffle machinery's external sort instead of per-group buffers.
-    * Row order within a doc is GUARANTEED by the explicit sort (the
-    * pre-sorted-collect_list trick is not used precisely because the
-    * object-hash aggregate's sort fallback sorts by group key only
-    * and is not stable). NULL ids group together, matching groupBy's
-    * single-NULL-group semantics. */
-  private[ops] def reassembleSorted(
-      flagged: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val sorted = flagged
-      .select(col(idCol), col("__ht"), col("pos"), col("line"),
-        col("__keep"))
-      .repartition(col(idCol))
-      .sortWithinPartitions(col(idCol), col("pos"))
-    val schema = StructType(Seq(
-      sorted.schema.fields(0),
-      StructField("n_lines", LongType, nullable = false),
-      StructField("n_kept", LongType, nullable = false),
-      StructField("text_clean", StringType, nullable = true)))
-    sorted.mapPartitions { rows =>
-      new Iterator[Row] {
-        private var pending: Row = if (rows.hasNext) rows.next() else null
-        override def hasNext: Boolean = pending != null
-        override def next(): Row = {
-          val id = pending.get(0)
-          var nLines = 0L; var nKept = 0L; var hasText = false
-          val sb = new java.lang.StringBuilder
-          var continue = true
-          while (continue) {
-            val r = pending
-            if (!r.isNullAt(1) && r.getBoolean(1)) hasText = true
-            if (!r.isNullAt(3)) nLines += 1
-            if (!r.isNullAt(4) && r.getBoolean(4)) {
-              if (nKept > 0) sb.append('\n')
-              sb.append(r.getString(3))
-              nKept += 1
-            }
-            pending = if (rows.hasNext) rows.next() else null
-            continue = pending != null &&
-              java.util.Objects.equals(pending.get(0), id)
-          }
-          Row(id, nLines, nKept, if (hasText) sb.toString else null)
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-      .toDF(idCol, "n_lines", "n_kept", "text_clean")
   }
 }

@@ -449,17 +449,12 @@ object Graph {
     // job. Star contraction also shrinks the edge set every round, so
     // the session-wide default is wrong for the loop's tail even on
     // big inputs; the initial sizing is the conservative upper bound.
-    // keepAqe (conf-gated, default true): this loop's star joins need
-    // broadcast conversion every round. In r14 only AQE's RUNTIME stats
-    // could provide it (truncated frames advertised the default
-    // sizeInBytes; static planner sort-merged; 4.7 -> 9.2 s with loop
-    // AQE off). r15's measured leaf statistics let the STATIC planner
-    // broadcast too — spark.graft.cc.keepAqe=false drops the per-stage
-    // AQE job tax and relies on them (A/B'd; see OPTIMIZATION_r15.md).
-    val loopSpark =
-      graft.Checkpoints.loopSession(raw.sparkSession, rawCount,
-        keepAqe = raw.sparkSession.conf
-          .get("spark.graft.cc.keepAqe", "true").toBoolean)
+    // keepAqe: this loop's star joins need broadcast conversion every
+    // round. Even with r15's measured leaf statistics letting the
+    // STATIC planner broadcast, dropping AQE here measured 9.10 s vs
+    // 5.15 s kept (OPTIMIZATION_r15.md), so the clone keeps AQE on.
+    val loopSpark = graft.Checkpoints.loopSession(
+      raw.sparkSession, rawCount, keepAqe = true)
     val rawT = org.apache.spark.sql.graftext.Bridge.rebind(rawT0, loopSpark)
     org.apache.spark.sql.graftext.Bridge.rebind({
       // Init fused with a PREFIX small-star pass, one materialization:

@@ -48,7 +48,17 @@ object IngestPipeline {
     * carry the same id twice (re-fetches); duplicate ids would fan out
     * every id-keyed join below, so the funnel keeps exactly one row per
     * id up front — deterministically (smallest text first, NULL text
-    * last), never dropDuplicates' arbitrary survivor. */
+    * last), never dropDuplicates' arbitrary survivor.
+    *
+    * Eager: calling `ingest` runs Spark jobs before it returns. The
+    * exact-dup mark (which joins the corpus fingerprints), the near-dup
+    * mark (which probes the corpus signatures) and the span-cleaned
+    * survivors are each materialized on the spot. The returned frame
+    * reads those batch-sized snapshots, so column pruning and filters
+    * on it do not reach back past them: the whole batch, text
+    * included, is materialized even if the caller keeps only ids and
+    * status. Build the frame only when it will be used; discarding it
+    * still pays for the three jobs. */
   def ingest(
       newBatch: DataFrame, corpusFps: DataFrame, corpusSigs: DataFrame,
       weights: DataFrame, idCol: String, textCol: String,

@@ -1,52 +1,42 @@
 package graft.tools
 
-/** Same-session A/B of optimizer-rule exclusions (r14): for each named
-  * query, alternate legs with and without the exclusions, 2 samples per
-  * leg per round. Usage:
-  *   runMain graft.tools.RuleAB <sfDir> <mode> <query ...>
-  * mode: gen | constraints | both
+/** Same-session A/B of two session-conf legs: for each named query,
+  * alternate the legs, 2 samples per leg per round, 3 rounds. Usage:
+  *   runMain graft.tools.RuleAB <sfDir> <baseline-conf> <test-conf> <query ...>
+  * A leg is `key=value[,key=value]`, or `-` for the session defaults.
+  * A value may itself hold commas (e.g. an excludedRules list): a comma
+  * starts a new pair only when the next `=` comes before the next comma.
+  * A key set on one leg only is unset (session default) on the other.
+  * Example (the r14 InferFiltersFromGenerate exclusion):
+  *   RuleAB <sf> - spark.sql.optimizer.excludedRules=org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate q_simjoin_exact
   */
 object RuleAB {
+  private[tools] def parseLeg(spec: String): Map[String, String] =
+    if (spec.trim.isEmpty || spec.trim == "-") Map.empty
+    else spec.split(",(?=[^,=]+=)").map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => sys.error(s"bad conf pair '$kv' (want key=value)")
+      }
+    }.toMap
+
   def main(args: Array[String]): Unit = {
+    require(args.length >= 4,
+      "usage: RuleAB <sfDir> <baseline-conf> <test-conf> <query ...>")
     val dir = args(0)
-    val mode = args(1)
-    val names = args.drop(2).toSeq
+    val legs = Seq(false -> parseLeg(args(1)), true -> parseLeg(args(2))).toMap
+    val names = args.drop(3).toSeq
     val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     graft.Tables.applyAdaptivePolicy(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    val genRule =
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    val conRule =
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"
-    def setLeg(on: Boolean): Unit = mode match {
-      case "gen" =>
-        if (on) spark.conf.set("spark.sql.optimizer.excludedRules", genRule)
-        else spark.conf.unset("spark.sql.optimizer.excludedRules")
-      case "constraints" =>
-        spark.conf.set("spark.sql.constraintPropagation.enabled",
-          (!on).toString)
-      case "infercon" =>
-        // baseline keeps the (default, r14) gen exclusion on BOTH legs;
-        // the test leg additionally excludes InferFiltersFromConstraints
-        spark.conf.set("spark.sql.optimizer.excludedRules",
-          if (on) s"$genRule,$conRule" else genRule)
-      case "loopaqe" =>
-        // baseline = pre-r14 behavior (AQE stays on inside loop
-        // clones); "excluded" = the r14 default (AQE off in the clone)
-        if (on) sys.props.remove("spark.graft.loop.aqe")
-        else sys.props("spark.graft.loop.aqe") = "on"
-        ()
-      case "realstats" =>
-        // baseline = r14 behavior (truncated leaves carry the default
-        // sizeInBytes); test = r15 measured statistics
-        spark.conf.set(graft.Checkpoints.RealStatsConfKey, on.toString)
-      case "ccaqe" =>
-        // baseline = r14 behavior (connectedComponents keeps AQE in its
-        // loop clone); test = AQE off, static broadcasts from the r15
-        // measured stats carrying the star joins. Both legs keep
-        // realStats at its default (on).
-        spark.conf.set("spark.graft.cc.keepAqe", (!on).toString)
-      case other => sys.error(s"unknown mode $other")
+    // session values of every key either leg touches, restored per leg
+    val keys = legs.values.flatMap(_.keys).toSet
+    val initial = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    def setLeg(test: Boolean): Unit = keys.foreach { k =>
+      legs(test).get(k).orElse(initial(k)) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
     }
     def sample(name: String): Double = {
       val t0 = System.nanoTime()
@@ -63,11 +53,12 @@ object RuleAB {
           (leg, s)
         }
       }
-      val off = res.filter(!_._1).map(_._2)
-      val on = res.filter(_._1).map(_._2)
-      println(f"[ruleab] $name mode=$mode baseline=${off.sorted.apply(off.size / 2)}%.2f s " +
-        f"excluded=${on.sorted.apply(on.size / 2)}%.2f s " +
-        f"(baseline=${off.map(v => f"$v%.2f").mkString(",")} vs excluded=${on.map(v => f"$v%.2f").mkString(",")})")
+      val base = res.filter(!_._1).map(_._2)
+      val test = res.filter(_._1).map(_._2)
+      def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+      def fmt(xs: Seq[Double]) = xs.map(v => f"$v%.2f").mkString(",")
+      println(f"[ruleab] $name baseline=${med(base)}%.2f s test=${med(test)}%.2f s " +
+        s"(baseline=${fmt(base)} vs test=${fmt(test)})")
     }
     spark.stop()
   }

@@ -98,11 +98,11 @@ object Bridge {
     * Spark's own rule) and `outputOrdering` are preserved — so a loop
     * round that ends hash-partitioned on its join key does NOT pay a
     * fresh Exchange next round — while the statistics are pinned to the
-    * MEASURED (rows, bytes) of the materialized RDD itself when the
-    * caller has them (graft.Checkpoints sizes the RDD in the same pass
-    * that materializes it), else the session default. Never the origin
-    * plan's eagerly-computed estimate, whose BigInt compounds across
-    * iterative rounds (see graft.Checkpoints.truncate) — measured
+    * MEASURED (rows, bytes) of the materialized RDD itself
+    * (graft.Checkpoints sizes the RDD in the same pass that
+    * materializes it). Never the origin plan's eagerly-computed
+    * estimate, whose BigInt compounds across iterative rounds (see
+    * graft.Checkpoints.truncate) — measured
     * values are re-derived fresh from actual data each round, so their
     * digit count is bounded by the data, structurally immune to the
     * compounding. Real sizes are what let the STATIC planner broadcast
@@ -113,7 +113,7 @@ object Bridge {
     * origin stats: both derive from the origin plan walk we must
     * avoid. */
   def truncatedFrame(df: DataFrame, rdd: RDD[InternalRow],
-      measured: Option[(Long, Long)] = None): DataFrame = {
+      rows: Long, bytes: Long): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
     import org.apache.spark.sql.execution.LogicalRDD
@@ -124,15 +124,11 @@ object Bridge {
       case c: PartitioningCollection => firstLeafPartitioning(c.partitionings.head)
       case other => other
     }
-    val stats = measured match {
-      case Some((rows, bytes)) =>
-        // sizeInBytes >= 1: Spark treats 0 as "empty relation" in some
-        // pruning paths; a 0-row frame still planning as a (tiny)
-        // broadcast side is the behavior we want.
-        Statistics(sizeInBytes = BigInt(math.max(bytes, 1L)),
-          rowCount = Some(BigInt(rows)))
-      case None => Statistics(session.sessionState.conf.defaultSizeInBytes)
-    }
+    // sizeInBytes >= 1: Spark treats 0 as "empty relation" in some
+    // pruning paths; a 0-row frame still planning as a (tiny)
+    // broadcast side is the behavior we want.
+    val stats = Statistics(sizeInBytes = BigInt(math.max(bytes, 1L)),
+      rowCount = Some(BigInt(rows)))
     val executed = ds.queryExecution.executedPlan
     val plan = LogicalRDD(
       ds.logicalPlan.output, rdd,

@@ -273,21 +273,21 @@ class MaterializerSpec extends SparkSpec {
     val n = Warehouse.resolveNumFiles(df, numFiles = 0,
       targetFileBytes = Warehouse.DefaultTargetFileBytes)
     assert(n >= 1 && n <= 4, s"tiny truncated frame sized to $n files")
-    // The legacy sentinel path (spark.graft.truncate.realStats=false)
-    // must STILL not divide the defaultSizeInBytes sentinel by the byte
-    // target (that hits the 2^20 cap -> a million-file write) but fall
-    // back to rows x schema width.
-    spark.conf.set(graft.Checkpoints.RealStatsConfKey, "false")
-    try {
-      val legacy = graft.Checkpoints.truncate(
-        (0 until 1000).map(i => (i.toLong, s"p$i")).toDF("id", "payload"))
-      assert(legacy.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        spark.sessionState.conf.defaultSizeInBytes,
-        "precondition: legacy truncated frame must carry the stats sentinel")
-      val l = Warehouse.resolveNumFiles(legacy, numFiles = 0,
-        targetFileBytes = Warehouse.DefaultTargetFileBytes)
-      assert(l >= 1 && l <= 4, s"tiny sentinel-stats frame sized to $l files")
-    } finally spark.conf.unset(graft.Checkpoints.RealStatsConfKey)
+    // A materialized-RDD frame WITHOUT measured stats (createDataFrame
+    // over an RDD[Row] advertises the defaultSizeInBytes sentinel) must
+    // STILL not divide the sentinel by the byte target (that hits the
+    // 2^20 cap -> a million-file write) but fall back to rows x schema
+    // width.
+    val sentinel = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        (0 until 1000).map(i => org.apache.spark.sql.Row(i.toLong, s"p$i"))),
+      df.schema)
+    assert(sentinel.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      spark.sessionState.conf.defaultSizeInBytes,
+      "precondition: RDD[Row] frame must carry the stats sentinel")
+    val l = Warehouse.resolveNumFiles(sentinel, numFiles = 0,
+      targetFileBytes = Warehouse.DefaultTargetFileBytes)
+    assert(l >= 1 && l <= 4, s"tiny sentinel-stats frame sized to $l files")
     // and a frame WITH real stats still sizes from the plan estimate
     val plain = (0 until 1000).map(i => (i.toLong, s"p$i")).toDF("id", "p")
     val m = Warehouse.resolveNumFiles(plain, 0, Warehouse.DefaultTargetFileBytes)

@@ -80,21 +80,37 @@ class AnalyticsSpec extends SparkSpec {
     assert(out(2L) == ((0L, 0L, None)))
   }
 
-  test("c4: map-only HOF plan ≡ explode/agg plan (mode equivalence)") {
-    val df = Seq(
-      (1L, "keep this proper line.\nno terminator\nanother good line stays!"),
-      (2L, null.asInstanceOf[String]),
-      (3L, ""),
-      (4L, "every line cut here"),
-      (5L, "accept our cookie policy now.\nbut this line survives fine."))
-      .toDF("doc_id", "text")
-    def run() = Curation.c4LineClean(df, "doc_id", "text").collect()
+  test("c4: map-only HOF plan ≡ per-line Scala reference") {
+    val fixed = Seq(
+      "keep this proper line.\nno terminator\nanother good line stays!",
+      null, "", "every line cut here",
+      "accept our cookie policy now.\nbut this line survives fine.",
+      "two words.\n  padded line ends here.  \n\nLorem Ipsum dolor sit.")
+    val pieces = Seq("short.", "a line that is long enough.", "no stop here",
+      "x {y} z.", "Quote ends \"here.\"", "ok then, go!", "")
+    val generated = (0 until 40).map(i =>
+      (0 to i % 5).map(j => pieces((i * 3 + j * 5) % pieces.size)).mkString("\n"))
+    val texts = (fixed ++ generated).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val df = texts.toDF("doc_id", "text")
+    val got = Curation.c4LineClean(df, "doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         Option(r.getString(3)))).toSet
-    val hof = run() // default since r13: zero-shuffle HOF plan
-    sys.props("spark.graft.c4.mode") = "agg"
-    try assert(run() == hof)
-    finally sys.props.remove("spark.graft.c4.mode")
+    // Spark's trim strips spaces only; tokens = split of the lowered,
+    // space-trimmed, whitespace-collapsed line
+    def sparkTrim(l: String) = l.replaceAll("^ +| +$", "")
+    def keep(l: String) =
+      "[.!?\"]$".r.findFirstIn(sparkTrim(l)).isDefined &&
+        sparkTrim(l.toLowerCase).replaceAll("\\s+", " ").split(" ", -1).length >= 3 &&
+        "[{}]|lorem ipsum|javascript|cookie".r.findFirstIn(l.toLowerCase).isEmpty
+    val want = texts.map {
+      case (id, null) => (id, 0L, 0L, None)
+      case (id, t) =>
+        val lines = t.split("\n", -1).toSeq
+        val kept = lines.filter(keep)
+        (id, lines.size.toLong, kept.size.toLong, Some(kept.mkString("\n")))
+    }.toSet
+    assert(got == want, s"only-engine=${got.diff(want).take(3)} " +
+      s"only-reference=${want.diff(got).take(3)}")
   }
 
   // ---------------------------------------- C80: BPE merge learning
@@ -132,18 +148,17 @@ class AnalyticsSpec extends SparkSpec {
     val df = (1L to 40L).map { i =>
       (i, Seq.fill(3 + (i % 4).toInt)(s"w${i % 7}abcde").mkString(" "))
     }.toDF("doc_id", "text")
-    def rules(every: Option[String]) = {
-      every.foreach(spark.conf.set(Bpe.TruncateEveryConfKey, _))
-      try Bpe.learnMerges(df, "text", 12).orderBy("round").collect()
+    def rules(every: Option[Int]) = {
+      val out = every.fold(Bpe.learnMerges(df, "text", 12))(
+        Bpe.learnMerges(df, "text", 12, _))
+      out.orderBy("round").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(3))).toSeq
-      finally spark.conf.unset(Bpe.TruncateEveryConfKey)
     }
-    val everyRound = rules(Some("1"))
+    val everyRound = rules(Some(1))
     assert(everyRound.size == 12)
-    assert(rules(Some("3")) == everyRound)
+    assert(rules(Some(3)) == everyRound)
     assert(rules(None) == everyRound)       // default cadence (8)
-    assert(rules(Some("bogus")) == everyRound) // malformed -> default
   }
 
   test("bpe encode: merges replay in learned order") {

@@ -315,13 +315,11 @@ class OpsSpec extends SparkSpec {
       s"guard caches accumulated across calls: $after1 -> $after4")
   }
 
-  test("similarityJoinExact verify tails are equivalent (array vs join)") {
-    // r14: the default verify counts |A∩B| per candidate pair with a
-    // codegen'd array_intersect over the attached distinct-unit arrays;
-    // the pre-r14 exploded pair×token join + pair-count aggregate stays
-    // behind spark.graft.simjoin.verify=join. Both must emit identical
-    // rows (n_inter/n_union/jaccard included) on token AND shingle
-    // units — this is the equivalence pin the tail comment cites.
+  test("similarityJoinExact verify tail: n_inter/n_union/jaccard ≡ brute force") {
+    // The prefix join + array_intersect verify must emit exactly the
+    // pairs (n_inter/n_union/jaccard included) an all-pairs set
+    // comparison finds, on token AND shingle units — the pin the
+    // verify-tail comment cites.
     val vocab = ('a' to 'x').map(c => s"w$c")
     val docs = (1L to 80L).map { i =>
       val len = 3 + (i * 7 % 10).toInt
@@ -330,13 +328,20 @@ class OpsSpec extends SparkSpec {
     }
     val df = docs.toDF("doc_id", "text")
     for ((p, sh) <- Seq((50, 1), (60, 2), (80, 1))) {
-      def rows() = Dedup.similarityJoinExact(df, "doc_id", "text", p, sh)
+      val got = Dedup.similarityJoinExact(df, "doc_id", "text", p, sh)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
-      val arrayTail = rows()
-      sys.props(Dedup.VerifyConfKey) = "join"
-      val joinTail = try rows() finally sys.props.remove(Dedup.VerifyConfKey)
-      assert(arrayTail == joinTail, s"p=$p shingle=$sh: verify tails diverge")
+      val units = docs.map { case (id, t) =>
+        id -> t.split(" ").sliding(sh).map(_.mkString(" ")).toSet
+      }
+      val want = (for {
+        (a, ua) <- units; (b, ub) <- units if a < b
+        inter = (ua & ub).size.toLong; union = (ua | ub).size.toLong
+        if 100 * inter >= p * union
+      } yield (a, b, inter, union, inter.toDouble / union.toDouble)).toSet
+      assert(want.nonEmpty, s"p=$p shingle=$sh: fixture has no pairs")
+      assert(got == want, s"p=$p shingle=$sh: " +
+        s"missing=${want.diff(got).take(3)} extra=${got.diff(want).take(3)}")
     }
   }
 
@@ -355,7 +360,7 @@ class OpsSpec extends SparkSpec {
     val lazyRes = Dedup.similarityJoinExact(df, "doc_id", "text", 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    sys.props("spark.graft.simjoin.eager") = "on"
+    spark.conf.set(Dedup.EagerRowsConfKey, "1") // force the eager regime
     try {
       def run() = Dedup.similarityJoinExact(df, "doc_id", "text", 50)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -366,7 +371,7 @@ class OpsSpec extends SparkSpec {
       val after3 = spark.sparkContext.getPersistentRDDs.size
       assert(after3 <= after1,
         s"working-set caches accumulated: $after1 -> $after3")
-    } finally sys.props.remove("spark.graft.simjoin.eager")
+    } finally spark.conf.unset(Dedup.EagerRowsConfKey)
   }
 
   test("simjoin eager threshold: conf override, heap default, uncapped auto-eager") {
@@ -1029,29 +1034,43 @@ class OpsSpec extends SparkSpec {
     assert(out(Some(3L)) == "shared")
   }
 
-  test("paragraphDedup: sorted streaming reassembly ≡ aggregate reassembly") {
+  test("paragraphDedup ≡ keep-first-by-(id, pos) reference") {
     import spark.implicits._
-    // multi-partition corpus with duplicated/unique/short lines, NULL
-    // ids and NULL/empty texts — every branch both tails must agree on
+    // multi-partition corpus with duplicated/unique lines, NULL ids
+    // (one shared NULL group, never claiming firstness) and NULL/empty
+    // texts, against a plain Scala keep-first over (id, pos)
     val docs = (1L to 200L).map { i =>
       val lines = (0 to (i % 7).toInt).map(j => s"line ${(i + j) % 23} body text")
-      (if (i % 31 == 0) null else java.lang.Long.valueOf(i),
-        if (i % 17 == 0) null
-        else if (i % 13 == 0) ""
-        else lines.mkString("\n"))
+      (if (i % 31 == 0) None else Some(i),
+        if (i % 17 == 0) None
+        else if (i % 13 == 0) Some("")
+        else Some(lines.mkString("\n")))
     }
-    val df = docs.toDF("doc_id", "text").repartition(7)
-    def run() = Dedup.paragraphDedup(df, "doc_id", "text").collect()
-      .map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2),
-        Option(r.getString(3)))).toSet
-    val agg = run()
-    sys.props("spark.graft.reassembly") = "sorted"
-    try {
-      val sorted = run()
-      assert(sorted == agg,
-        s"tails disagree: only-agg=${agg.diff(sorted).take(3)} " +
-          s"only-sorted=${sorted.diff(agg).take(3)}")
-    } finally sys.props.remove("spark.graft.reassembly")
+    val df = docs.map { case (id, t) =>
+      (id.map(java.lang.Long.valueOf).orNull, t.orNull)
+    }.toDF("doc_id", "text").repartition(7)
+    val got = Dedup.paragraphDedup(df, "doc_id", "text").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1),
+        r.getLong(2), Option(r.getString(3)))).toSet
+    val occ = docs.flatMap { case (id, t) =>
+      t.toSeq.flatMap(_.split("\n", -1).zipWithIndex).map { case (l, pos) =>
+        (id, pos, l)
+      }
+    }
+    val first = occ.collect { case (Some(id), pos, l) if l.trim.nonEmpty =>
+      l -> (id, pos)
+    }.groupMapReduce(_._1)(_._2)((x, y) => Ordering[(Long, Int)].min(x, y))
+    def keep(id: Option[Long], pos: Int, l: String) =
+      l.trim.isEmpty || first.get(l).forall(f => id.contains(f._1) && f._2 == pos)
+    val want = docs.groupBy(_._1).map { case (id, group) =>
+      val rows = occ.filter(_._1 == id)
+      val kept = rows.filter { case (_, pos, l) => keep(id, pos, l) }
+        .map { case (_, pos, l) => (pos, l) }.sorted.map(_._2)
+      (id, rows.size.toLong, kept.size.toLong,
+        if (group.exists(_._2.isDefined)) Some(kept.mkString("\n")) else None)
+    }.toSet
+    assert(got == want, s"only-engine=${got.diff(want).take(3)} " +
+      s"only-reference=${want.diff(got).take(3)}")
   }
 
   // ---------- C106: consensus near-dup (minhash ∩ simhash bands)
