@@ -2,31 +2,22 @@
 """Dev-only driver mimic: compare Verify output parquet against DuckDB
 oracle SQL over the same tables. Usage:
   python3 scripts/check.py [sfdir] [outdir] [--run]
---run executes graft.Verify first via java (fast path, no sbt).
+--run executes graft.Verify first through scripts/runjava.sh (no sbt).
 """
 import sys, os, json, glob, subprocess
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
-ADD_OPENS = [f"--add-opens={p}=ALL-UNNAMED" for p in [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"]]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 only = next((a.split("=", 1)[1] for a in sys.argv if a.startswith("--only=")), None)
 
 if "--run" in sys.argv:
-    cp = "/root/repo/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
-    cmd = ["java"] + ADD_OPENS + [
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-Xmx8g", "-cp", cp, "graft.Verify", sfdir, outdir] + \
+    cmd = [f"{REPO}/scripts/runjava.sh", "graft.Verify", sfdir, outdir] + \
         ([only] if only else [])
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, SPARK_GRAFT_CPUS="8",
+               CLASSES=f"{REPO}/target/scala-2.13/classes")
     r = subprocess.run(cmd, env=env, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-5000:]); sys.exit(1)

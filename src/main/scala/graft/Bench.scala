@@ -71,14 +71,6 @@ object Bench {
   private def jd(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" else f"$d%.4f"
 
-  /** JSON string escape — exception messages carry newlines/controls
-    * (Spark analysis errors are routinely multi-line) and must not break
-    * the one-JSON-line contract. */
-  private def js(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
   final case class QRes(name: String, sec: Double, samples: Seq[Double],
       ok: Boolean, err: Option[String], resampled: Boolean,
       refExceeded: Boolean = false)
@@ -168,14 +160,14 @@ object Bench {
       extraFields: Seq[String] = Nil,
       withSamples: Boolean = false): String = {
     val cpusJson = cpus.toIntOption.map(_.toString)
-      .getOrElse("\"" + js(cpus) + "\"")
+      .getOrElse(Json.str(cpus))
     val okResults = results.filter(_.ok)
     val qs = okResults.map(r => "\"" + r.name + "\":" + jd(r.sec))
       .mkString("{", ",", "}")
     val oks = results.map(r => "\"" + r.name + "\":" + r.ok)
       .mkString("{", ",", "}")
     val errs = results.flatMap(r => r.err.map(e =>
-        "\"" + r.name + "\":\"" + js(e) + "\""))
+        "\"" + r.name + "\":" + Json.str(e)))
       .mkString("{", ",", "}")
     val resampledNames = results.filter(_.resampled)
       .map(r => "\"" + r.name + "\"").mkString("[", ",", "]")
@@ -194,7 +186,7 @@ object Bench {
     // timeout case — see IdleLoad for the absolute-threshold rationale.
     val contended = !loadStart.isNaN && loadStart > IdleLoad
     (s"""{"metric":"total","value":${jd(total)},"unit":"sec","queries":$qs,""" +
-      s""""sf":"${js(sfDir)}","ok":$oks,"failed":$failed,"errors":$errs,""" +
+      s""""sf":"${Json.esc(sfDir)}","ok":$oks,"failed":$failed,"errors":$errs,""" +
       s""""resampled":$resampledNames,"ref_exceeded":$refExceededNames,""" +
       s""""load_avg_start":${jd(loadStart)},""" +
       s""""load_avg_end":${jd(loadEnd)},"host_contended":$contended,""" +
@@ -214,23 +206,23 @@ object Bench {
       extraFields: Seq[String] = Nil,
       detailPath: String = ""): String = {
     val cpusJson = cpus.toIntOption.map(_.toString)
-      .getOrElse("\"" + js(cpus) + "\"")
+      .getOrElse(Json.str(cpus))
     val okResults = results.filter(_.ok)
     val total = okResults.map(_.sec).sum
     val failed = results.count(!_.ok)
     val errs = results.flatMap(r => r.err.map(e =>
-        "\"" + r.name + "\":\"" + js(e) + "\""))
+        "\"" + r.name + "\":" + Json.str(e)))
       .mkString("{", ",", "}")
     val contended = !loadStart.isNaN && loadStart > IdleLoad
     val fixed =
-      s"""{"metric":"total","value":${jd(total)},"unit":"sec","sf":"${js(sfDir)}",""" +
+      s"""{"metric":"total","value":${jd(total)},"unit":"sec","sf":"${Json.esc(sfDir)}",""" +
       s""""n_queries":${results.size},"failed":$failed,"errors":$errs,""" +
       s""""resampled_n":${results.count(_.resampled)},""" +
       s""""ref_exceeded_n":${results.count(_.refExceeded)},""" +
       s""""load_avg_start":${jd(loadStart)},"load_avg_end":${jd(loadEnd)},""" +
       s""""host_contended":$contended,"cpus":$cpusJson""" +
       extraFields.map("," + _).mkString +
-      (if (detailPath.isEmpty) "" else s""","detail":"${js(detailPath)}"""")
+      (if (detailPath.isEmpty) "" else s""","detail":"${Json.esc(detailPath)}"""")
     // Slowest-first query entries, added while the line stays inside the
     // driver's capture window (strict budget, counted per entry). The
     // window is 2000 chars of COMBINED stdout+stderr, and streaming
@@ -266,7 +258,12 @@ object Bench {
         System.err.println(s"bench audit write failed for $path: $e")
     }
 
-  def session(cpus: String): SparkSession = {
+  /** Local core count for every main's session (`SPARK_GRAFT_CPUS`). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The one session builder behind every main: `local[cpus]`, as many
+    * shuffle partitions as cores, no UI, and [[Tables.sessionConfigs]]. */
+  def session(): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -279,10 +276,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val idleWait = awaitIdleHost()
-    val spark = session(cpus)
-    val aqe = Tables.applyAdaptivePolicy(spark)
+    val spark = session()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val loadStart = loadAvg()
     // JVM/codegen warmup so the first measured query isn't charged for it.
     try {

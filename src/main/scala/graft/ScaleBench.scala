@@ -121,10 +121,9 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_x${factor}_" + new java.io.File(baseDir).getName)
-    val spark = Bench.session(cpus)
+    val spark = Bench.session()
     buildScaled(spark, baseDir, scaledDir, factor)
     val selected =
       if (args.isEmpty) SparkEntry.queries.keys.toSeq
@@ -132,11 +131,12 @@ object ScaleBench {
     // The scaled-dir build above is our own (attributable) load; wait
     // for the HOST to be idle only after it finishes settling.
     val idleWait = Bench.awaitIdleHost()
-    val aqe = Tables.applyAdaptivePolicy(spark)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val loadStart = Bench.loadAvg()
     val results = Bench.measure(spark, scaledDir, selected)
     val loadEnd = Bench.loadAvg()
-    val json = Bench.renderJson(results, scaledDir, cpus, loadStart, loadEnd,
+    val json = Bench.renderJson(results, scaledDir, Bench.cpus,
+      loadStart, loadEnd,
       extraFields = Seq(s""""factor":$factor,"base_sf":"$baseDir"""",
         f""""idle_wait_sec":${idleWait}%.1f""", s""""aqe":$aqe"""),
       withSamples = true)

@@ -85,6 +85,9 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
+    // AQE on, measured: the full 171-query A/B at sf0.1 read 143.9 s on
+    // vs 175.2 s off — post-shuffle coalescing carries the loop stages
+    // and the landings (PERF_NOTES.md round 10).
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // InferFiltersFromGenerate is a pessimization for this engine
@@ -113,22 +116,7 @@ object Tables {
     "spark.sql.streaming.checkpointLocation" ->
       Scratch.dir("graft_stream_ck_"))
 
-  /** AQE switch for harness sessions (Bench/Verify/ScaleBench call
-    * this at session setup) — kept as an explicit, recorded
-    * decision point because it was a live hypothesis: AQE runs every
-    * shuffle stage as its OWN job and waits on materialized stats
-    * between stages, a fixed scheduling tax that an isolated
-    * floor-query probe (sf0.01, warm) measured at 30-50% of sub-second
-    * plans (q_sample_stratified 0.33→0.17 s with AQE off). The FULL
-    * 171-query A/B at sf0.1 then measured the opposite in the whole:
-    * 143.9 s ON vs 175.2 s OFF — AQE's post-shuffle coalescing carries
-    * the iterative loop stages not covered by loop-session
-    * right-sizing (q_connected_components +4.9 s, q_pagerank +3.4 s,
-    * q_attribution +4.8 s when off), and even the sub-second family in
-    * aggregate got WORSE off (45.4→52.2 s) once landings/writes lost
-    * coalescing. So the policy is AQE ON — Spark's default and the
-    * 100 TB posture — not a size heuristic. Returns the decision
-    * (always true) for the caller's record. */
+  /** Kept only because the benchmark harness calls it; [[sessionConfigs]] turns AQE on. */
   def applyAdaptivePolicy(spark: SparkSession): Boolean = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     true

@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -87,16 +88,24 @@ final class ModelRunner(
     * `fullRefresh`, `is_incremental()` renders false even when the table
     * exists, so the model selects its full history. */
   def render(name: String, variables: Map[String, String] = Map.empty,
-      fullRefresh: Boolean = false): String = {
-    val incremental = modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
+      fullRefresh: Boolean = false): String =
+    renderSql(name, modelSql(name), variables, incrementalRun(name, fullRefresh))
+
+  private def incrementalRun(name: String, fullRefresh: Boolean): Boolean =
+    modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
+
+  /** Render `sql` — the model body or one of its hooks — with `{{ ref }}`
+    * bound to warehouse relations and `{{ source }}` to this runner's
+    * sources. */
+  private def renderSql(name: String, sql: String,
+      variables: Map[String, String], incremental: Boolean): String =
     SqlTemplate.render(
-      modelSql(name), name,
+      sql, name,
       resolveRef = m => wh.relation(m),
       resolveSource = (s, t) => sources.getOrElse((s, t),
         throw new ConfigError(s"unknown source $s.$t", Map("model" -> name))),
       isIncremental = incremental,
       variables = variables)
-  }
 
   /** Render one hook statement against the same template surface as the
     * model body ({{ this }} resolves to the model's own relation) and
@@ -106,18 +115,43 @@ final class ModelRunner(
     * hooks statement-shaped. */
   private def runHook(
       name: String, hookSql: String, variables: Map[String, String],
-      fullRefresh: Boolean): Unit = {
-    val incremental =
-      modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
-    val rendered = SqlTemplate.render(
-      hookSql, name,
-      resolveRef = m => wh.relation(m),
-      resolveSource = (s, t) => sources.getOrElse((s, t),
-        throw new ConfigError(s"unknown source $s.$t in hook",
-          Map("model" -> name))),
-      isIncremental = incremental,
-      variables = variables)
-    wh.spark.sql(rendered).collect()
+      fullRefresh: Boolean): Unit =
+    wh.spark.sql(renderSql(name, hookSql, variables,
+      incrementalRun(name, fullRefresh))).collect()
+
+  /** The gate every output passes BEFORE materialization, so a drifted
+    * schema never reaches storage or dependents: the contract (dbt
+    * contract:enforced), and schema.yml column docs, which must name
+    * REAL output columns — a doc'd column missing from the model is a
+    * loud ConfigError (the sidecar has drifted from the SQL). */
+  private def checkOutput(name: String, cfg: ModelConfig, df: DataFrame): Unit = {
+    cfg.enforceContract(df.schema)
+    cfg.columns.map(_.name).filterNot(df.schema.fieldNames.contains)
+      .sorted.headOption.foreach { missing =>
+        throw new ConfigError(
+          s"schema.yml documents column '$missing' but model '$name' " +
+            "does not output it", Map("model" -> name))
+      }
+  }
+
+  /** The tail after a materialization: declarative tests (reference
+    * testing.py:134 run_model_tests), where error-severity failures fail
+    * the model — run()'s failure path records the failed execution in
+    * state and blocks dependents — and warn-severity ones only report;
+    * then the success is recorded in state with the change-detection
+    * hashes. */
+  private def finishModel(name: String, cfg: ModelConfig,
+      result: MaterializeResult): MaterializeResult = {
+    val outcomes = runModelTests(name)
+    val hard = outcomes.filter(o => !o.passed && o.severity == "error")
+    if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
+    val now = java.time.Instant.now().toString
+    wh.state.markExecution(name, success = true, now)
+    wh.state.setHashes(name,
+      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
+    val warned = outcomes.count(o => !o.passed)
+    if (warned == 0) result
+    else result.copy(status = s"${result.status} ($warned test warnings)")
   }
 
   def executeModel(
@@ -131,37 +165,13 @@ final class ModelRunner(
     // temp view the body reads).
     cfg.preHooks.foreach(h => runHook(name, h, variables, fullRefresh))
     val df = wh.spark.sql(render(name, variables, fullRefresh))
-    // Contract gate BEFORE materialization (dbt contract:enforced):
-    // a drifted schema must never reach storage or dependents.
-    cfg.enforceContract(df.schema)
-    // schema.yml column docs must name REAL output columns — a doc'd
-    // column missing from the model is a loud ConfigError (the sidecar
-    // has drifted from the SQL), checked before storage like contracts.
-    cfg.columns.map(_.name).filterNot(df.schema.fieldNames.contains)
-      .sorted.headOption.foreach { missing =>
-        throw new ConfigError(
-          s"schema.yml documents column '$missing' but model '$name' " +
-            "does not output it", Map("model" -> name))
-      }
+    checkOutput(name, cfg, df)
     val result = mat.materialize(cfg, df, batchTs, fullRefresh)
     // dbt post-hooks: run once the relation exists ({{ this }} is
     // readable), BEFORE declared tests — a failing test must not skip
     // the audit/grant trail of a materialization that DID happen.
     cfg.postHooks.foreach(h => runHook(name, h, variables, fullRefresh))
-    // Declarative post-materialization tests (reference testing.py:134
-    // run_model_tests): error-severity failures fail the model — state
-    // records the failure and run() blocks dependents — warn only reports.
-    val outcomes = runModelTests(name)
-    val hard = outcomes.filter(o => !o.passed && o.severity == "error")
-    // run()'s failure path records the failed execution in state
-    if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
-    val now = java.time.Instant.now().toString
-    wh.state.markExecution(name, success = true, now)
-    wh.state.setHashes(name,
-      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
-    val warned = outcomes.count(o => !o.passed)
-    if (warned == 0) result
-    else result.copy(status = s"${result.status} ($warned test warnings)")
+    finishModel(name, cfg, result)
   }
 
   /** True when `name`'s SQL renders identically under
@@ -171,28 +181,21 @@ final class ModelRunner(
     * different rows depending on whether an earlier chunk already
     * created the table, so it must keep the serial chunk loop. */
   def incrementalInvariant(
-      name: String, variables: Map[String, String] = Map.empty): Boolean = {
-    def r(inc: Boolean) = SqlTemplate.render(
-      modelSql(name), name,
-      resolveRef = m => wh.relation(m),
-      resolveSource = (s, t) => sources.getOrElse((s, t),
-        throw new ConfigError(s"unknown source $s.$t", Map("model" -> name))),
-      isIncremental = inc,
-      variables = variables)
-    r(true) == r(false)
-  }
+      name: String, variables: Map[String, String] = Map.empty): Boolean =
+    renderSql(name, modelSql(name), variables, incremental = true) ==
+      renderSql(name, modelSql(name), variables, incremental = false)
 
   /** Execute one model over MANY variable bindings as ONE
     * materialization: each binding's rendered plan unions into a single
     * frame, written once. The fused path for independent chunks
     * ([[Backfill]]'s append-strategy fast path) — Catalyst plans the
     * union as parallel scans into one write instead of N sequential
-    * materialization round-trips. Contract enforcement, declared tests,
-    * and state marking run once over the fused batch (the final table
-    * is identical to the serial loop's; a chunk that would have failed
-    * its tests mid-loop fails here at the end instead). Callers are
-    * responsible for the fusibility guards (strategy, hooks,
-    * [[incrementalInvariant]]). */
+    * materialization round-trips. The pre-materialization gate
+    * (contract, column docs), declared tests, and state marking run
+    * once over the fused batch (the final table is identical to the
+    * serial loop's; a chunk that would have failed its tests mid-loop
+    * fails here at the end instead). Callers are responsible for the
+    * fusibility guards (strategy, hooks, [[incrementalInvariant]]). */
   def executeModelBatch(
       name: String,
       variablesSeq: Seq[Map[String, String]],
@@ -203,18 +206,8 @@ final class ModelRunner(
     val df = variablesSeq
       .map(v => wh.spark.sql(render(name, v, fullRefresh)))
       .reduce(_.unionByName(_))
-    cfg.enforceContract(df.schema)
-    val result = mat.materialize(cfg, df, batchTs, fullRefresh)
-    val outcomes = runModelTests(name)
-    val hard = outcomes.filter(o => !o.passed && o.severity == "error")
-    if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
-    val now = java.time.Instant.now().toString
-    wh.state.markExecution(name, success = true, now)
-    wh.state.setHashes(name,
-      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
-    val warned = outcomes.count(o => !o.passed)
-    if (warned == 0) result
-    else result.copy(status = s"${result.status} ($warned test warnings)")
+    checkOutput(name, cfg, df)
+    finishModel(name, cfg, mat.materialize(cfg, df, batchTs, fullRefresh))
   }
 
   /** Run a model's declared `-- test:` suite against its materialized
@@ -242,8 +235,7 @@ final class ModelRunner(
       .flatMap(runModelTests)
   }
 
-  /** Run models (targets + transitive deps, or all) level-by-level. */
-  /** Run models level-by-level. With `continueOnError` (the reference's
+  /** Run models (targets + transitive deps, or all) level-by-level. With `continueOnError` (the reference's
     * graceful-degradation posture — its executor logs failures and keeps
     * going, executor.py:153-190), a failed model is recorded in state as
     * a failure, its transitive dependents are skipped (their inputs are
@@ -394,14 +386,10 @@ final class ModelRunner(
 
   private def logEvent(fields: (String, String)*): Unit =
     logSink.foreach { sink =>
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
       val quoted = fields.map { case (k, v) =>
         val vv = // numbers/booleans ride unquoted, everything else quoted
-          if (v.matches("-?\\d+|true|false")) v else "\"" + esc(v) + "\""
-        "\"" + esc(k) + "\":" + vv
+          if (v.matches("-?\\d+|true|false")) v else Json.str(v)
+        Json.str(k) + ":" + vv
       }
       val line = quoted.mkString("{", ",", "}")
       logLock.synchronized { sink(line) }
@@ -487,13 +475,9 @@ final class ModelRunner(
 
   /** JSON export (executor.py:450 export_metrics_json). */
   def metricsJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
     val ms = metrics
     val models = ms.map { m =>
-      s""""${esc(m.model)}":{"status":"${esc(m.status)}","duration_ms":${m.durationMs},"attempts":${m.attempts}}"""
+      s"""${Json.str(m.model)}:{"status":${Json.str(m.status)},"duration_ms":${m.durationMs},"attempts":${m.attempts}}"""
     }.mkString(",")
     s"""{"models":{$models},"total_duration_ms":${ms.map(_.durationMs).sum},""" +
       s""""succeeded":${ms.count(!_.failed)},"failed":${ms.count(_.failed)}}"""

@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.Json
 import org.apache.spark.sql.SparkSession
 
 /** Cross-model column lineage — the Spark re-expression of the
@@ -68,18 +69,14 @@ final class ProjectLineage(
   /** JSON export of the whole column graph
     * (lineage.py:160-180 export_lineage). */
   def toJson: String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val models = perModel.toSeq.sortBy(_._1).map { case (m, cols) =>
       val colJson = cols.map { cl =>
-        s"""{"column":"${esc(cl.column)}","sources":[${
-          cl.sources.toSeq.sorted.map(s => s""""${esc(s)}"""").mkString(",")}],"transformations":[${
-          cl.transformations.toSeq.sorted.map(t => s""""${esc(t)}"""").mkString(",")}]}"""
+        s"""{"column":${Json.str(cl.column)},"sources":[${
+          cl.sources.toSeq.sorted.map(Json.str).mkString(",")}],"transformations":[${
+          cl.transformations.toSeq.sorted.map(Json.str).mkString(",")}]}"""
       }.mkString(",")
-      s""""${esc(m)}":{"columns":[$colJson],"dependencies":[${
-        runner.graph.dependencies(m).toSeq.sorted.map(d => s""""${esc(d)}"""").mkString(",")}]}"""
+      s"""${Json.str(m)}:{"columns":[$colJson],"dependencies":[${
+        runner.graph.dependencies(m).toSeq.sorted.map(Json.str).mkString(",")}]}"""
     }.mkString(",")
     s"{$models}"
   }

@@ -56,7 +56,7 @@ object CurationPipeline {
     val evalFlag = coalesce(isEval, lit(false))
     val evalSide = df.filter(evalFlag)
     val trainSide = df.filter(!evalFlag)
-    // Eager phases are labeled (guide §1.5) so the UI / StageProbe can
+    // Eager phases are labeled (guide §1.5) so the UI / tools/Probe can
     // attribute this pipeline's jobs; thread-local, cleared at the end.
     val sc = df.sparkSession.sparkContext
     def labeled[T](desc: String)(body: => T): T = {
@@ -68,11 +68,11 @@ object CurationPipeline {
     // Truncated (r15): exactKept feeds BOTH the LSH pair generation
     // (materialized by the cluster loop's seed truncation) and the
     // deduped corpus below — uncached it was evaluated twice (full
-    // scan + fingerprint groupBy + semi-join per evaluation, StageProbe
+    // scan + fingerprint groupBy + semi-join per evaluation, tools/Probe
     // r15). A truncate, not a cache: LogicalRDD leaves canonicalize by
     // their RDD, so downstream self-referencing subtrees keep AQE
     // exchange reuse — an InMemoryRelation in the lineage BREAKS reuse
-    // (measured, tools/CurateProbe: the contamination explode+window
+    // (measured, OPTIMIZATION_r15.md: the contamination explode+window
     // exchange executed twice over a cached frame, ReusedExchange over
     // a truncated one).
     val exactKept = labeled("materialize exact-deduped corpus")(
@@ -96,7 +96,7 @@ object CurationPipeline {
     // sides share one shingle exchange ONLY if the subtrees stay
     // canonically equal, and an InMemoryRelation leaf breaks that
     // (AQE ran the full explode+window twice, ~1.5 s of the pipeline's
-    // heaviest stage duplicated; tools/CurateProbe A/B/C shapes).
+    // heaviest stage duplicated; OPTIMIZATION_r15.md A/B/C shapes).
     val deduped = labeled("materialize near-deduped corpus")(
       graft.Checkpoints.truncate(
         exactKept.join(nearDropped, Seq(idCol), "left_anti")))
@@ -125,7 +125,7 @@ object CurationPipeline {
     // them under canChangeCachedPlanOutputPartitioning), and ONLY AQE's
     // runtime stage reuse dedupes the contamination operator's two
     // shingle-exchange sides (the static ReuseExchange rule never
-    // fired on them; StageProbe r15 measured the full explode+window
+    // fired on them; tools/Probe r15 measured the full explode+window
     // running twice inside the cache fill, the pipeline's two heaviest
     // stages). As a top-level truncation job the reuse fires, and
     // downstream consumers read materialized blocks either way.

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Json
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -771,15 +772,7 @@ object FuzzDiff {
     val outDir = args.lift(1).getOrElse("/tmp/fuzz_out")
     val n = args.lift(2).map(_.toInt).getOrElse(200)
     val seed = args.lift(3).map(_.toLong).getOrElse(11L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     graft.Tables.registerAll(spark, sfDir)
     new java.io.File(outDir).mkdirs()
 
@@ -797,14 +790,10 @@ object FuzzDiff {
         System.err.println(s"[fuzz] $name SPARK-SIDE FAILURE: $sql")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val failed = failures.result()
     val okSqls = sqls.filterNot(s => failed.exists(_._1 == s._1))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      okSqls.map { case (name, _, sql) => s"${q(name)}: ${q(sql)}" }
+      okSqls.map { case (name, _, sql) => s"${Json.str(name)}: ${Json.str(sql)}" }
         .mkString("{", ",", "}"))
     val streamRounds = args.lift(4).map(_.toInt).getOrElse(9)
     val streamDiv =
@@ -815,8 +804,8 @@ object FuzzDiff {
       s""""kinds":{${kindCounts.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":$v""" }.mkString(",")}},""" +
       s""""stream_rounds":$streamRounds,"stream_divergences":${streamDiv.size},""" +
-      s""""stream_diffs":[${streamDiv.map(q).mkString(",")}],""" +
-      s""""failed":[${failed.map(f => q(f._1) + ":" + q(f._2)).mkString(",")}]}""")
+      s""""stream_diffs":[${streamDiv.map(Json.str).mkString(",")}],""" +
+      s""""failed":[${failed.map(f => Json.str(f._1) + ":" + Json.str(f._2)).mkString(",")}]}""")
     spark.stop()
     if (failed.nonEmpty || streamDiv.nonEmpty) sys.exit(1)
   }

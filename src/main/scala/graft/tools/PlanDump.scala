@@ -16,8 +16,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.Tables.applyAdaptivePolicy(spark)
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -235,14 +236,7 @@ object PropFuzz {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.map(_.toInt).getOrElse(200)
     val seed = args.lift(1).map(_.toLong).getOrElse(11L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val props: Seq[(String, (java.util.Random, DataFrame,
         String => Unit) => Unit)] = Seq(
@@ -271,15 +265,11 @@ object PropFuzz {
           System.err.println(s"[propfuzz] CRASH round=$i $name: $e")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val vs = violations.result()
     println(s"""{"gen":5,"mode":"property","seed":$seed,"rounds":$rounds,""" +
       s""""properties":{${props.map(p => s""""${p._1}":${perProp(p._1)}""")
         .mkString(",")}},""" +
-      s""""violations":${vs.size},"details":[${vs.take(20).map(q)
+      s""""violations":${vs.size},"details":[${vs.take(20).map(Json.str)
         .mkString(",")}]}""")
     spark.stop()
     if (vs.nonEmpty) sys.exit(1)

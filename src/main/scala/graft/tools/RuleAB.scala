@@ -26,8 +26,7 @@ object RuleAB {
     val dir = args(0)
     val legs = Seq(false -> parseLeg(args(1)), true -> parseLeg(args(2))).toMap
     val names = args.drop(3).toSeq
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.Tables.applyAdaptivePolicy(spark)
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     // session values of every key either leg touches, restored per leg
     val keys = legs.values.flatMap(_.keys).toSet

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
+import graft.Json
 
 /** Memory-pressure probe: run selected queries against a replicated
   * scale directory under a HARD executor-memory cap and record, per
@@ -29,71 +28,45 @@ import java.util.concurrent.atomic.AtomicLong
   *   java -Xmx8g ... graft.tools.SpillBench [query ...]
   */
 object SpillBench {
-
-  private final class MetricsListener extends SparkListener {
-    val memSpilled = new AtomicLong(0)
-    val diskSpilled = new AtomicLong(0)
-    val peakTaskMem = new AtomicLong(0)
-    val tasks = new AtomicLong(0)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        memSpilled.addAndGet(m.memoryBytesSpilled)
-        diskSpilled.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
-        tasks.incrementAndGet()
-      }
-    }
-    def snapshot: (Long, Long, Long, Long) =
-      (memSpilled.get, diskSpilled.get, peakTaskMem.get, tasks.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "30").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Bench.cpus
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_x${factor}_" + new java.io.File(baseDir).getName)
-    val spark = graft.Bench.session(cpus)
+    val spark = graft.Bench.session()
     graft.ScaleBench.buildScaled(spark, baseDir, scaledDir, factor)
-    graft.Tables.applyAdaptivePolicy(spark)
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = Probe.Listener.attach(spark)
     val selected =
       (if (args.isEmpty) graft.SparkEntry.queries.keys.toSeq
        else graft.SparkEntry.queries.keys.filter(args.contains).toSeq).sorted
     val maxMem = Runtime.getRuntime.maxMemory()
     val rows = selected.map { name =>
-      org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
-      val before = listener.snapshot
-      val t0 = System.nanoTime()
-      val res =
-        try { graft.SparkEntry.queries(name)(spark, scaledDir).count(); None }
-        catch { case scala.util.control.NonFatal(e) =>
-          Some(e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(160).replaceAll("\\s+", " "))
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
-      val after = listener.snapshot
-      val memSp = after._1 - before._1
-      val diskSp = after._2 - before._2
+      val ((sec, res), p) = listener.measure(spark) {
+        val t0 = System.nanoTime()
+        val res =
+          try { graft.SparkEntry.queries(name)(spark, scaledDir).count(); None }
+          catch { case scala.util.control.NonFatal(e) =>
+            Some(e.getClass.getSimpleName + ": " +
+              Option(e.getMessage).getOrElse("").take(160).replaceAll("\\s+", " "))
+          }
+        ((System.nanoTime() - t0) / 1e9, res)
+      }
       System.err.println(f"[spill] $name%-28s ${sec}%8.2f s  " +
-        f"mem_spilled=${memSp / 1e6}%9.1f MB  disk_spilled=${diskSp / 1e6}%9.1f MB  " +
-        f"tasks=${after._4 - before._4}%5d" +
+        f"mem_spilled=${p.memSpilled / 1e6}%9.1f MB  disk_spilled=${p.diskSpilled / 1e6}%9.1f MB  " +
+        f"tasks=${p.tasks}%5d" +
         res.map(e => s"  ERROR $e").getOrElse(""))
-      (name, sec, memSp, diskSp, after._3, after._4 - before._4, res)
+      (name, sec, p.memSpilled, p.diskSpilled, p.peakTaskMem, p.tasks, res)
     }
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val json =
-      s"""{"metric":"spill_probe","factor":$factor,"base_sf":${q(baseDir)},""" +
+      s"""{"metric":"spill_probe","factor":$factor,"base_sf":${Json.str(baseDir)},""" +
       s""""cpus":$cpus,"jvm_max_mem_bytes":$maxMem,""" +
       s""""total_sec":${rows.map(_._2).sum.formatted("%.2f")},""" +
       s""""failed":${rows.count(_._7.isDefined)},""" +
       s""""queries":{""" + rows.map { case (n, sec, m, d, _, tk, err) =>
-        q(n) + ":{" + f""""sec":$sec%.2f,"mem_spilled_bytes":$m,""" +
+        Json.str(n) + ":{" + f""""sec":$sec%.2f,"mem_spilled_bytes":$m,""" +
           s""""disk_spilled_bytes":$d,"tasks":$tk""" +
-          err.map(e => s""","error":${q(e)}""").getOrElse("") + "}"
+          err.map(e => s""","error":${Json.str(e)}""").getOrElse("") + "}"
       }.mkString(",") + "}," +
       s""""peak_task_mem_bytes":${rows.map(_._5).max}}"""
     println(json)

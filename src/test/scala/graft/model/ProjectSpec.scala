@@ -347,6 +347,19 @@ class BackfillFusionSpec extends SparkSpec {
     assert(a == b, "fused and serial backfills must load identical rows")
   }
 
+  test("fused backfill refuses a documented column its SELECT lacks") {
+    val (wh, runner) = fixture()
+    runner.addModel("bf", appendSql,
+      ModelConfig("bf", columns = Seq(ColumnDoc("value"), ColumnDoc("user_id"))))
+    val e = intercept[ConfigError] {
+      Backfill.run(runner, "bf",
+        java.time.LocalDate.parse("2024-01-01"),
+        java.time.LocalDate.parse("2024-01-31"), intervalDays = 6)
+    }
+    assert(e.getMessage.contains("'user_id'"))
+    assert(wh.currentVersion("bf").isEmpty, "no version may be written")
+  }
+
   test("is_incremental() branch keeps the serial loop") {
     val (_, runner) = fixture()
     runner.addModel("cond",
