@@ -5,10 +5,11 @@
 # legs of the same binary (Bench itself takes min-of-2 per leg).
 # Usage: OLD=<baseline classes dir> [NEW=target/scala-2.13/classes] \
 #   ROUNDS=3 OUTDIR=/tmp/ab SF=/root/testdata/sf0.1 scripts/interleave_ab.sh q_a q_b ...
-# OLD is required (build the baseline commit in its own checkout and
-# point at its target/scala-2.13/classes). CPUS defaults to nproc.
+# OLD is required: build the baseline with
+# `scripts/build_classes.sh <commit> <dir>` and pass <dir>/classes.
+# CPUS defaults to nproc.
 set -u
-usage() { sed -n '2,9p' "$0" >&2; exit 2; }
+usage() { sed -n '2,10p' "$0" >&2; exit 2; }
 OLD="${OLD:-}"
 if [ -z "$OLD" ] || [ ! -d "$OLD" ]; then
   echo "interleave_ab.sh: OLD must name an existing classes directory" >&2

@@ -43,7 +43,8 @@ final class Materializer(wh: Warehouse) {
             // `-- config: bucket_by=c1;c2, buckets=N` → CLUSTERED BY
             // catalog table; equi-joins between co-bucketed models on the
             // bucket keys plan without a shuffle.
-            wh.writeVersionBucketed(cfg.name, df, bucketCols, n, sortCols(cfg))
+            wh.writeVersionBucketed(cfg.name, df, bucketCols, n, sortCols(cfg),
+              partitionCols(cfg))
             MaterializeResult(cfg.name, "table", status = s"bucketed:$n")
           case None =>
             // `-- config: sort_by=c1;c2` clusters files for min/max pruning.
@@ -81,72 +82,92 @@ final class Materializer(wh: Warehouse) {
           Map("model" -> cfg.name))
     }
 
+  private def isInitialLoad(cfg: ModelConfig, fullRefresh: Boolean): Boolean =
+    fullRefresh || !wh.exists(cfg.name)
+
+  /** First load (or forced full refresh) of an incremental/CDC model: a
+    * fresh version of `df` in the model's partition layout. Returns the
+    * status. */
+  private def initialLoad(cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): String = {
+    wh.writeVersion(cfg.name, df, partitionCols(cfg))
+    if (fullRefresh) "full_refresh" else "initial_load"
+  }
+
   /** Time watermark strategy (materialization.py:203-310): first run
     * loads everything; later runs append only rows with
     * time_column > watermark. The watermark advances to max(time_column)
     * actually ingested (exact, unlike the reference's wall-clock stamp —
-    * no rows can fall between watermark and now). */
+    * no rows can fall between watermark and now). The batch max is taken
+    * before the write: a NULL max means an empty batch, which appends
+    * nothing and leaves version and watermark untouched. */
   private def timeIncremental(
-      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean = false): MaterializeResult = {
+      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): MaterializeResult = {
     val tc = cfg.timeColumn.get
-    if (fullRefresh || !wh.exists(cfg.name)) {
-      wh.writeVersion(cfg.name, df, partitionCols(cfg))
-      advanceWatermark(cfg.name, tc, df)
-      MaterializeResult(cfg.name, "incremental_time",
-        status = if (fullRefresh) "full_refresh" else "initial_load")
-    } else {
+    val initial = isInitialLoad(cfg, fullRefresh)
+    val batch = if (initial) df else {
       val wm = wh.state.watermark(cfg.name, WatermarkKey)
         .getOrElse(wh.read(cfg.name).agg(max(col(tc)).cast("string")).head().getString(0))
-      val fresh = df.filter(col(tc) > lit(wm).cast(df.schema(tc).dataType))
-      wh.append(cfg.name, fresh)
-      // Advance from the batch only (O(batch), not O(table)); empty batch
-      // leaves the watermark untouched.
-      advanceWatermark(cfg.name, tc, fresh)
-      MaterializeResult(cfg.name, "incremental_time", status = "appended")
+      df.filter(col(tc) > lit(wm).cast(df.schema(tc).dataType))
     }
-  }
-
-  private def advanceWatermark(model: String, tc: String, df: DataFrame): Unit = {
-    val mx = df.agg(max(col(tc)).cast("string")).head().getString(0)
-    if (mx != null) wh.state.setWatermark(model, WatermarkKey, mx)
+    // O(batch), not O(table)
+    val mx = batch.agg(max(col(tc)).cast("string")).head().getString(0)
+    val status =
+      if (initial) initialLoad(cfg, batch, fullRefresh)
+      else {
+        if (mx != null) wh.append(cfg.name, batch)
+        "appended"
+      }
+    if (mx != null) wh.state.setWatermark(cfg.name, WatermarkKey, mx)
+    MaterializeResult(cfg.name, "incremental_time", status = status)
   }
 
   /** Upsert-by-key strategy (materialization.py:312-400's MERGE):
     * existing rows whose key appears in the batch are replaced. One
-    * anti-join + union + versioned write; the key set is broadcast when
-    * small enough for Catalyst's threshold.
+    * anti-join + union + versioned write ([[merge]]); the key set is
+    * broadcast when small enough for Catalyst's threshold. */
+  private def mergeIncremental(
+      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): MaterializeResult = {
+    val status =
+      if (isInitialLoad(cfg, fullRefresh)) initialLoad(cfg, df, fullRefresh)
+      else {
+        val keys = df.select(col(cfg.uniqueKey.get)).distinct()
+        merge(cfg, live = identity, inserted = df, keys = keys,
+          rewrite = _.join(keys, Seq(cfg.uniqueKey.get), "left_anti"))
+      }
+    MaterializeResult(cfg.name, "incremental_unique_key", status = status)
+  }
+
+  /** The keyed merge behind unique_key, cdc and cdc_scd2: the new version
+    * is `rewrite(existing) ∪ inserted`.
     *
     * With `partition_by` set, the rewrite is PARTITION-SCOPED: only
-    * partitions holding batch keys (or receiving batch rows) are read,
-    * merged, and rewritten; every other partition is carried into the new
-    * version by hard link ([[Warehouse.writeVersionScoped]]). A small
-    * batch against a 100 TB table then costs O(touched partitions), and
-    * the partition filter prunes the `existing` scan to those partitions
-    * too. */
-  private def mergeIncremental(
-      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean = false): MaterializeResult = {
-    val key = cfg.uniqueKey.get
-    if (fullRefresh || !wh.exists(cfg.name)) {
-      wh.writeVersion(cfg.name, df, partitionCols(cfg))
-      MaterializeResult(cfg.name, "incremental_unique_key",
-        status = if (fullRefresh) "full_refresh" else "initial_load")
+    * partitions holding `live` rows whose key is in `keys`, or receiving
+    * `inserted` rows, are read, rewritten and unioned; every other
+    * partition is carried into the new version by hard link
+    * ([[Warehouse.writeVersionScoped]]). A small batch against a 100 TB
+    * table then costs O(touched partitions), and the partition filter
+    * prunes the `existing` scan to those partitions too. A current
+    * version in another layout (written flat, or before `partition_by`
+    * changed) has no partition directories to carry, so it takes the full
+    * rewrite, into the `partition_by` layout. Returns the status. */
+  private def merge(
+      cfg: ModelConfig,
+      live: DataFrame => DataFrame,
+      inserted: DataFrame,
+      keys: DataFrame,
+      rewrite: DataFrame => DataFrame): String = {
+    val existing = wh.read(cfg.name)
+    val pcs = partitionCols(cfg)
+    if (pcs.isEmpty || wh.partitionColumns(cfg.name) != pcs) {
+      wh.writeVersion(cfg.name, rewrite(existing).unionByName(inserted), pcs)
+      "merged"
     } else {
-      val existing = wh.read(cfg.name)
-      val keys = df.select(col(key)).distinct()
-      partitionCols(cfg) match {
-        case pcs if pcs.nonEmpty =>
-          val affected = affectedPartitions(existing, df, keys, key, pcs)
-          val touched = existing.filter(partFilter(pcs, affected.map(_._1)))
-          val kept = touched.join(keys, Seq(key), "left_anti")
-          wh.writeVersionScoped(cfg.name, kept.unionByName(df), pcs,
-            affected.map(_._2).toSet)
-          MaterializeResult(cfg.name, "incremental_unique_key",
-            status = s"merged_scoped:${affected.size}")
-        case _ =>
-          val kept = existing.join(keys, Seq(key), "left_anti")
-          wh.writeVersion(cfg.name, kept.unionByName(df))
-          MaterializeResult(cfg.name, "incremental_unique_key", status = "merged")
-      }
+      val affected =
+        affectedPartitions(live(existing), inserted, keys, cfg.uniqueKey.get, pcs)
+      val touched = existing.filter(partFilter(pcs, affected.map(_._1)))
+      wh.writeVersionScoped(cfg.name, rewrite(touched).unionByName(inserted),
+        pcs, affected.map(_._2).toSet)
+      s"merged_scoped:${affected.size}"
     }
   }
 
@@ -189,52 +210,32 @@ final class Materializer(wh: Warehouse) {
     }.reduceOption(_ || _).getOrElse(lit(false))
 
   private def appendIncremental(
-      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean = false): MaterializeResult =
-    if (fullRefresh || !wh.exists(cfg.name)) {
-      wh.writeVersion(cfg.name, df)
-      MaterializeResult(cfg.name, "incremental_append",
-        status = if (fullRefresh) "full_refresh" else "initial_load")
-    } else {
-      wh.append(cfg.name, df)
-      MaterializeResult(cfg.name, "incremental_append", status = "appended")
-    }
+      cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): MaterializeResult = {
+    val status =
+      if (isInitialLoad(cfg, fullRefresh)) initialLoad(cfg, df, fullRefresh)
+      else { wh.append(cfg.name, df); "appended" }
+    MaterializeResult(cfg.name, "incremental_append", status = status)
+  }
 
   // -------------------------------------------------------------------- CDC
   /** Current-snapshot CDC (materialization.py:500-600's MERGE): the batch
     * carries a change-type column with I/U/D (missing → 'U'). Matched
-    * I/U upsert, D deletes. */
+    * I/U upsert, D deletes: every touched key's existing row goes, the
+    * batch's deduplicated upserts come in. */
   private def cdcSnapshot(
-      cfg: ModelConfig, batch: DataFrame, fullRefresh: Boolean = false): MaterializeResult = {
+      cfg: ModelConfig, batch: DataFrame, fullRefresh: Boolean): MaterializeResult = {
     val key = cfg.uniqueKey.get
     val opCol = cfg.changeTypeColumn
     val withOp = normalizeOp(batch, opCol)
-    if (fullRefresh || !wh.exists(cfg.name)) {
-      wh.writeVersion(cfg.name,
-        dedupeByKey(withOp.filter(col(opCol) =!= "D").drop(opCol), key),
-        partitionCols(cfg))
-      MaterializeResult(cfg.name, "cdc",
-        status = if (fullRefresh) "full_refresh" else "initial_load")
-    } else {
-      val existing = wh.read(cfg.name)
-      val touched = withOp.select(col(key)).distinct()
-      val upserts = dedupeByKey(withOp.filter(col(opCol) =!= "D").drop(opCol), key)
-      partitionCols(cfg) match {
-        case pcs if pcs.nonEmpty =>
-          // Partition-scoped: deletes/updates pull in the partitions their
-          // current rows live in (semi-join side of affectedPartitions).
-          val affected = affectedPartitions(existing, upserts, touched, key, pcs)
-          val touchedPart = existing.filter(partFilter(pcs, affected.map(_._1)))
-          val survivors = touchedPart.join(touched, Seq(key), "left_anti")
-          wh.writeVersionScoped(cfg.name, survivors.unionByName(upserts), pcs,
-            affected.map(_._2).toSet)
-          MaterializeResult(cfg.name, "cdc",
-            status = s"merged_scoped:${affected.size}")
-        case _ =>
-          val survivors = existing.join(touched, Seq(key), "left_anti")
-          wh.writeVersion(cfg.name, survivors.unionByName(upserts))
-          MaterializeResult(cfg.name, "cdc", status = "merged")
+    val upserts = dedupeByKey(withOp.filter(col(opCol) =!= "D").drop(opCol), key)
+    val status =
+      if (isInitialLoad(cfg, fullRefresh)) initialLoad(cfg, upserts, fullRefresh)
+      else {
+        val touched = withOp.select(col(key)).distinct()
+        merge(cfg, live = identity, inserted = upserts, keys = touched,
+          rewrite = _.join(touched, Seq(key), "left_anti"))
       }
-    }
+    MaterializeResult(cfg.name, "cdc", status = status)
   }
 
   /** SCD2 retirement CDC (cdc_polars.py:205-445): history table where the
@@ -242,77 +243,57 @@ final class Materializer(wh: Warehouse) {
     *   INSERT → new row, obsolete_date NULL
     *   UPDATE → retire current row (obsolete_date = batchTs), insert new
     *   DELETE/EXPIRED → retire current row
-    * One pass: join current rows against the changed-key set.
+    * One pass: join current rows against the changed-key set. With
+    * `partition_by`, only partitions holding CURRENT rows of changed keys
+    * (plus insert targets) are rewritten; obsolete history elsewhere
+    * links forward.
     */
   private def cdcScd2(
       cfg: ModelConfig,
       batch: DataFrame,
       batchTs: String,
-      fullRefresh: Boolean = false): MaterializeResult = {
+      fullRefresh: Boolean): MaterializeResult = {
     val key = cfg.uniqueKey.get
     val opCol = cfg.changeTypeColumn
     val ts = lit(batchTs).cast("timestamp")
     val withOp = normalizeOp(batch, opCol)
-
-    if (fullRefresh || !wh.exists(cfg.name)) {
-      val initial = withOp.filter(col(opCol) =!= "D").drop(opCol)
-        .withColumn(CdcTimestampCol, ts)
-        .withColumn(ObsoleteDateCol, lit(null).cast("timestamp"))
-      wh.writeVersion(cfg.name, initial, partitionCols(cfg))
-      MaterializeResult(cfg.name, "cdc_scd2",
-        status = if (fullRefresh) "full_refresh" else "initial_load")
-    } else {
-      val existing = wh.read(cfg.name)
-      val changedKeys = withOp
-        .filter(col(opCol).isin("U", "D", "E"))
-        .select(col(key)).distinct()
-      val inserted = withOp.filter(col(opCol).isin("I", "U")).drop(opCol)
-        .withColumn(CdcTimestampCol, ts)
-        .withColumn(ObsoleteDateCol, lit(null).cast("timestamp"))
-      def retire(hist: DataFrame): DataFrame = hist
-        .join(changedKeys.withColumn("__changed", lit(1)), Seq(key), "left")
-        .withColumn(ObsoleteDateCol,
-          when(col(ObsoleteDateCol).isNull && col("__changed").isNotNull, ts)
-            .otherwise(col(ObsoleteDateCol)))
-        .drop("__changed")
-      partitionCols(cfg) match {
-        case pcs if pcs.nonEmpty =>
-          // Partition-scoped: retirement only mutates CURRENT rows of
-          // changed keys, so only their partitions (plus insert targets)
-          // are rewritten; obsolete history elsewhere links forward.
-          val affected = affectedPartitions(
-            existing.filter(col(ObsoleteDateCol).isNull), inserted,
-            changedKeys, key, pcs)
-          val touchedPart = existing.filter(partFilter(pcs, affected.map(_._1)))
-          wh.writeVersionScoped(cfg.name,
-            retire(touchedPart).unionByName(inserted), pcs,
-            affected.map(_._2).toSet)
-          MaterializeResult(cfg.name, "cdc_scd2",
-            status = s"merged_scoped:${affected.size}")
-        case _ =>
-          // Single pass over history: retire current rows for changed keys.
-          wh.writeVersion(cfg.name, retire(existing).unionByName(inserted))
-          MaterializeResult(cfg.name, "cdc_scd2", status = "merged")
+    def stamped(rows: DataFrame): DataFrame = rows.drop(opCol)
+      .withColumn(CdcTimestampCol, ts)
+      .withColumn(ObsoleteDateCol, lit(null).cast("timestamp"))
+    val status =
+      if (isInitialLoad(cfg, fullRefresh))
+        initialLoad(cfg, stamped(withOp.filter(col(opCol) =!= "D")), fullRefresh)
+      else {
+        val changedKeys = withOp
+          .filter(col(opCol).isin("U", "D", "E"))
+          .select(col(key)).distinct()
+        def retire(hist: DataFrame): DataFrame = hist
+          .join(changedKeys.withColumn("__changed", lit(1)), Seq(key), "left")
+          .withColumn(ObsoleteDateCol,
+            when(col(ObsoleteDateCol).isNull && col("__changed").isNotNull, ts)
+              .otherwise(col(ObsoleteDateCol)))
+          .drop("__changed")
+        merge(cfg, live = _.filter(col(ObsoleteDateCol).isNull),
+          inserted = stamped(withOp.filter(col(opCol).isin("I", "U"))),
+          keys = changedKeys, rewrite = retire)
       }
-    }
+    MaterializeResult(cfg.name, "cdc_scd2", status = status)
   }
+
+  /** A `;`-separated column list from a `-- config:` key. */
+  private def colList(cfg: ModelConfig, key: String): Seq[String] =
+    cfg.meta.get(key).toSeq.flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
 
   /** `-- config: partition_by=col1;col2` → directory-partitioned writes
     * (prunable scans for downstream date/range filters at scale). */
-  private def partitionCols(cfg: ModelConfig): Seq[String] =
-    cfg.meta.get("partition_by").toSeq.flatMap(_.split(";")).map(_.trim)
-      .filter(_.nonEmpty)
+  private def partitionCols(cfg: ModelConfig): Seq[String] = colList(cfg, "partition_by")
 
-  private def sortCols(cfg: ModelConfig): Seq[String] =
-    cfg.meta.get("sort_by").toSeq.flatMap(_.split(";")).map(_.trim)
-      .filter(_.nonEmpty)
+  private def sortCols(cfg: ModelConfig): Seq[String] = colList(cfg, "sort_by")
 
   /** `-- config: bucket_by=c1;c2, buckets=N` → CLUSTERED BY spec. */
   private def bucketSpec(cfg: ModelConfig): Option[(Seq[String], Int)] =
-    cfg.meta.get("bucket_by").map { cols =>
-      (cols.split(";").map(_.trim).filter(_.nonEmpty).toSeq,
-        cfg.meta.get("buckets").map(_.toInt).getOrElse(8))
-    }.filter(_._1.nonEmpty)
+    Some(colList(cfg, "bucket_by")).filter(_.nonEmpty)
+      .map(_ -> cfg.meta.get("buckets").map(_.toInt).getOrElse(8))
 
   private def normalizeOp(df: DataFrame, opCol: String): DataFrame =
     if (df.columns.contains(opCol))

@@ -178,18 +178,17 @@ object ModelConfig {
   def fromSql(name: String, sql: String,
       base: ModelConfig = null): ModelConfig = {
     val b = Option(base).getOrElse(ModelConfig(name))
-    val kvs: Map[String, String] = ConfigLine.findAllMatchIn(sql).flatMap { m =>
-      m.group(1).split(",").toSeq.flatMap { pair =>
+    // the comma-separated entries of every matching header line
+    def items(line: scala.util.matching.Regex): Seq[String] = line.findAllMatchIn(sql)
+      .flatMap(_.group(1).split(",").map(_.trim).filter(_.nonEmpty)).toSeq
+    // `k=v` entries; a later key wins
+    def kvs(line: scala.util.matching.Regex): Map[String, String] =
+      items(line).flatMap { pair =>
         pair.split("=", 2) match {
           case Array(k, v) => Some(k.trim -> v.trim)
           case _ => None
         }
-      }
-    }.toMap
-    val deps: Set[String] = DependsLine.findAllMatchIn(sql)
-      .flatMap(_.group(1).split(",").map(_.trim).filter(_.nonEmpty)).toSet
-    val tags: Set[String] = TagsLine.findAllMatchIn(sql)
-      .flatMap(_.group(1).split(",").map(_.trim).filter(_.nonEmpty)).toSet
+      }.toMap
     val tests: Seq[TestSpec] =
       TestLine.findAllMatchIn(sql).map(m => parseTest(m.group(1))).toSeq
     // column:type pairs. Types may carry commas INSIDE angle brackets
@@ -218,32 +217,11 @@ object ModelConfig {
           }
         }
       }.toSeq
-    val metaKvs: Map[String, String] = MetaLine.findAllMatchIn(sql).flatMap { m =>
-      m.group(1).split(",").toSeq.flatMap { pair =>
-        pair.split("=", 2) match {
-          case Array(k, v) => Some(k.trim -> v.trim)
-          case _ => None
-        }
-      }
-    }.toMap
-
-    val known = Set("materialized", "incremental_strategy", "time_column",
-      "unique_key", "change_type_column", "enabled")
-    ModelConfig(
+    val cfg = withConfig(b, kvs(ConfigLine))
+    cfg.copy(
       name = name,
-      materialized = kvs.get("materialized").map {
-        case "incremental_table" => "incremental" // alias, materialization.py:606
-        case other => other
-      }.getOrElse(b.materialized),
-      incrementalStrategy = kvs.get("incremental_strategy")
-        .orElse(b.incrementalStrategy),
-      timeColumn = kvs.get("time_column").orElse(b.timeColumn),
-      uniqueKey = kvs.get("unique_key").orElse(b.uniqueKey),
-      changeTypeColumn =
-        kvs.getOrElse("change_type_column", b.changeTypeColumn),
-      enabled = kvs.get("enabled").map(_.toBoolean).getOrElse(b.enabled),
-      dependsOn = b.dependsOn ++ deps,
-      tags = b.tags ++ tags,
+      dependsOn = b.dependsOn ++ items(DependsLine),
+      tags = b.tags ++ items(TagsLine),
       tests = b.tests ++ tests,
       // a base contract survives unless the header declares its own
       // (headers win whole-contract, never entry-by-entry — a partial
@@ -251,8 +229,29 @@ object ModelConfig {
       contract = if (contract.nonEmpty) contract else b.contract,
       preHooks = b.preHooks ++ PreHookLine.findAllMatchIn(sql).map(_.group(1)).toSeq,
       postHooks = b.postHooks ++ PostHookLine.findAllMatchIn(sql).map(_.group(1)).toSeq,
-      meta = b.meta ++ kvs.filterNot { case (k, _) => known.contains(k) } ++ metaKvs,
-      description = b.description,
-      columns = b.columns)
+      meta = cfg.meta ++ kvs(MetaLine))
   }
+
+  private val ConfigKeys = Set("materialized", "incremental_strategy",
+    "time_column", "unique_key", "change_type_column", "enabled")
+
+  /** Apply `config` key/values — a `-- config:` header or a schema.yml
+    * `config:` mapping — over `base`: each known key overrides its
+    * field (`incremental_table` is an alias of `incremental`,
+    * materialization.py:606), every other key lands in `meta`. Absent
+    * keys keep `base`'s value, so `ModelConfig(name)` supplies the
+    * defaults. */
+  def withConfig(base: ModelConfig, kvs: Map[String, String]): ModelConfig =
+    base.copy(
+      materialized = kvs.get("materialized").map {
+        case "incremental_table" => "incremental"
+        case other => other
+      }.getOrElse(base.materialized),
+      incrementalStrategy = kvs.get("incremental_strategy")
+        .orElse(base.incrementalStrategy),
+      timeColumn = kvs.get("time_column").orElse(base.timeColumn),
+      uniqueKey = kvs.get("unique_key").orElse(base.uniqueKey),
+      changeTypeColumn = kvs.getOrElse("change_type_column", base.changeTypeColumn),
+      enabled = kvs.get("enabled").map(_.toBoolean).getOrElse(base.enabled),
+      meta = base.meta ++ kvs.filterNot { case (k, _) => ConfigKeys.contains(k) })
 }

@@ -284,10 +284,10 @@ final class ModelRunner(
     * hashes and incremental watermarks that travel with it — to its
     * pre-run value, so a mid-DAG failure leaves the warehouse exactly
     * as the run found it. The versioned-pointer machinery is the
-    * staging area: version directories are never mutated (physical
-    * appends route through `Warehouse.appendAsVersion` for the run's
-    * duration), so restore is a metadata-only pointer flip and the
-    * abandoned versions are ordinary vacuum garbage.
+    * staging area: version directories are never mutated after their
+    * pointer flips (appends included), so restore is a metadata-only
+    * pointer flip and the abandoned versions are ordinary vacuum
+    * garbage.
     *
     * Execution counters and `lastExecuted` are NOT restored — they are
     * run history, not data state, and the failed attempt happened.
@@ -318,7 +318,6 @@ final class ModelRunner(
         else None
       (m, wh.state.get(m), hadRelation, priorPlan)
     }
-    wh.versionedAppends = true
     try run(targets, variables, batchTs, continueOnError = false,
       fullRefresh = fullRefresh)
     catch {
@@ -357,7 +356,7 @@ final class ModelRunner(
           else wh.spark.catalog.dropTempView(wh.relation(m))
         }
         throw e
-    } finally wh.versionedAppends = false
+    }
   }
 
   // Typed failures from the last continueOnError run, for callers that

@@ -86,28 +86,27 @@ object SchemaYaml {
   private def opt(m: Map[String, Any], key: String): Option[Any] =
     m.get(key).filter(_ != null)
 
-  /** Parse one schema YAML document into per-model base configs,
-    * keyed by model name. */
-  def parse(yaml: String, file: String = "schema.yml")
-      : Map[String, ModelConfig] = {
-    val root =
-      try toScala(mapper.readValue(yaml, classOf[java.util.Map[String, Object]]))
-        .asInstanceOf[Map[String, Any]]
+  /** Read one schema YAML document's top-level mapping. A CONTENT-FREE
+    * file (empty, comments-only, a bare `---`) is `None`, not a parse
+    * error — it declares nothing, matching the reference's
+    * `if not data: return` (model.py:_load_schema_file). */
+  private def readDoc(yaml: String, file: String): Option[Map[String, Any]] =
+    if (yaml.trim.isEmpty) None
+    else try Option(toScala(mapper.readValue(yaml, classOf[java.util.Map[String, Object]]))
+        .asInstanceOf[Map[String, Any]])
       catch {
-        // A CONTENT-FREE file (empty, comments-only) is "no content to
-        // map", not a parse error — it declares no models, matching the
-        // reference's `if not data: return` (model.py _load_schema_file).
         case e: com.fasterxml.jackson.databind.exc.MismatchedInputException
-            if Option(e.getMessage).exists(_.startsWith("No content")) =>
-          return Map.empty
+            if Option(e.getMessage).exists(_.startsWith("No content")) => None
         case scala.util.control.NonFatal(e) =>
           throw new ConfigError(s"unparseable schema file: ${e.getMessage}",
             Map("file" -> file))
       }
-    // An empty file, a comments-only file, or a bare `---` parses to a
-    // null document (not an error): declare no models, matching the
-    // reference's `if not data: return` (model.py:_load_schema_file).
-    if (root == null) return Map.empty
+
+  /** Parse one schema YAML document into per-model base configs,
+    * keyed by model name. */
+  def parse(yaml: String, file: String = "schema.yml")
+      : Map[String, ModelConfig] = {
+    val root = readDoc(yaml, file).getOrElse(return Map.empty)
     val models = opt(root, "models").getOrElse(Nil) match {
       case l: List[Any @unchecked] => l
       case _ => throw new ConfigError("schema file 'models' must be a list",
@@ -139,70 +138,41 @@ object SchemaYaml {
       case c: Map[String, Any] @unchecked => c
       case other => fail(s"'config' must be a mapping, got: $other")
     }
-    def strList(key: String, src: Map[String, Any] = m): Seq[String] =
+    def list(key: String, src: Map[String, Any], what: String): List[Any] =
       opt(src, key).getOrElse(Nil) match {
-        case l: List[Any @unchecked] => l.map(str)
-        case other => fail(s"'$key' must be a list, got: $other")
+        case l: List[Any @unchecked] => l
+        case other => fail(s"$what must be a list, got: $other")
       }
-    val columns: Seq[ColumnDoc] = opt(m, "columns").getOrElse(Nil) match {
-      case l: List[Any @unchecked] => l.map {
-        case c: Map[String, Any] @unchecked =>
-          val cname = opt(c, "name").map(str).getOrElse(
-            fail("column entry missing 'name'"))
-          ColumnDoc(cname, opt(c, "description").map(str),
-            meta = opt(c, "meta").getOrElse(Map.empty[String, Any]) match {
-              case mm: Map[String, Any] @unchecked =>
-                mm.map { case (k, v) => k -> str(v) }
-              case other => fail(s"column '$cname' meta must be a mapping: $other")
-            })
-        case other => fail(s"column entry must be a mapping, got: $other")
+    def strMap(key: String, src: Map[String, Any], what: String): Map[String, String] =
+      opt(src, key).getOrElse(Map.empty[String, Any]) match {
+        case mm: Map[String, Any] @unchecked => mm.map { case (k, v) => k -> str(v) }
+        case other => fail(s"$what must be a mapping, got: $other")
       }
-      case other => fail(s"'columns' must be a list, got: $other")
-    }
     // column-level tests bind to their column; model-level tests must
     // name theirs via a `column` param (TestConfig.from_dict's
     // {test_name: {params}} shape, model.py:22-33)
-    val colTests: Seq[TestSpec] = (opt(m, "columns").getOrElse(Nil) match {
-      case l: List[Any @unchecked] => l
-      case _ => Nil
-    }).flatMap {
+    val columns: Seq[(ColumnDoc, Seq[TestSpec])] = list("columns", m, "'columns'").map {
       case c: Map[String, Any] @unchecked =>
-        val cname = opt(c, "name").map(str).getOrElse("")
-        (opt(c, "tests").getOrElse(Nil) match {
-          case l: List[Any @unchecked] => l
-          case other => fail(s"column '$cname' tests must be a list: $other")
-        }).map(t => parseYamlTest(t, Some(cname), fail))
-      case _ => Nil
+        val cname = opt(c, "name").map(str).getOrElse(
+          fail("column entry missing 'name'"))
+        (ColumnDoc(cname, opt(c, "description").map(str),
+          meta = strMap("meta", c, s"column '$cname' meta")),
+          list("tests", c, s"column '$cname' tests")
+            .map(t => parseYamlTest(t, Some(cname), fail)))
+      case other => fail(s"column entry must be a mapping, got: $other")
     }
-    val modelTests: Seq[TestSpec] = (opt(m, "tests").getOrElse(Nil) match {
-      case l: List[Any @unchecked] => l
-      case other => fail(s"'tests' must be a list, got: $other")
-    }).map(t => parseYamlTest(t, None, fail))
-    val known = Set("materialized", "incremental_strategy", "time_column",
-      "unique_key", "change_type_column", "enabled")
-    ModelConfig(
-      name = name,
-      materialized = opt(cfg, "materialized").map(str).map {
-        case "incremental_table" => "incremental"
-        case other => other
-      }.getOrElse("view"),
-      incrementalStrategy = opt(cfg, "incremental_strategy").map(str),
-      timeColumn = opt(cfg, "time_column").map(str),
-      uniqueKey = opt(cfg, "unique_key").map(str),
-      changeTypeColumn =
-        opt(cfg, "change_type_column").map(str).getOrElse("__cdc_operation"),
-      enabled = opt(cfg, "enabled").map(str).forall(_.toBoolean),
-      dependsOn = strList("depends_on").toSet,
-      tags = strList("tags").toSet,
-      tests = colTests ++ modelTests,
-      meta = (opt(m, "meta").getOrElse(Map.empty[String, Any]) match {
-        case mm: Map[String, Any] @unchecked =>
-          mm.map { case (k, v) => k -> str(v) }
-        case other => fail(s"'meta' must be a mapping, got: $other")
-      }) ++ cfg.filterNot { case (k, _) => known.contains(k) }
-        .map { case (k, v) => k -> str(v) },
-      description = opt(m, "description").map(str),
-      columns = columns)
+    val modelTests = list("tests", m, "'tests'").map(t => parseYamlTest(t, None, fail))
+    // YAML's empty-value null is an absent key (see `opt`)
+    ModelConfig.withConfig(
+      ModelConfig(
+        name = name,
+        dependsOn = list("depends_on", m, "'depends_on'").map(str).toSet,
+        tags = list("tags", m, "'tags'").map(str).toSet,
+        tests = columns.flatMap(_._2) ++ modelTests,
+        meta = strMap("meta", m, "'meta'"),
+        description = opt(m, "description").map(str),
+        columns = columns.map(_._1)),
+      cfg.collect { case (k, v) if v != null => k -> str(v) })
   }
 
   /** One YAML test declaration → [[TestSpec]]. A bare string is a
@@ -264,19 +234,7 @@ object SchemaYaml {
     * table name. */
   def parseSources(yaml: String, file: String = "schema.yml")
       : Seq[SourceTableSpec] = {
-    if (yaml.trim.isEmpty) return Nil
-    val root =
-      try toScala(mapper.readValue(yaml, classOf[java.util.Map[String, Object]]))
-        .asInstanceOf[Map[String, Any]]
-      catch {
-        case e: com.fasterxml.jackson.databind.exc.MismatchedInputException
-            if Option(e.getMessage).exists(_.startsWith("No content")) =>
-          return Nil
-        case scala.util.control.NonFatal(e) =>
-          throw new ConfigError(s"unparseable schema file: ${e.getMessage}",
-            Map("file" -> file))
-      }
-    if (root == null) return Nil
+    val root = readDoc(yaml, file).getOrElse(return Nil)
     val srcs = opt(root, "sources").getOrElse(Nil) match {
       case l: List[Any @unchecked] => l
       case _ => throw new ConfigError("schema file 'sources' must be a list",
@@ -353,40 +311,35 @@ object SchemaYaml {
     case other => fail(s"'freshness' must be a mapping, got: $other")
   }
 
-  /** Every `sources:` declaration under `dir` (same file walk as
-    * [[loadDir]]); duplicate (source, table) across files is loud. */
-  def loadDirSources(dir: Path): Seq[SourceTableSpec] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val files = schemaFiles(dir)
-    files.foldLeft(Seq.empty[SourceTableSpec]) { (acc, f) =>
-      val parsed = parseSources(Files.readString(f), f.toString)
-      val seen = acc.map(_.qualified).toSet
-      parsed.map(_.qualified).find(seen.contains).foreach { dup =>
-        throw new ConfigError(
-          s"source table '$dup' declared in more than one schema file",
+  /** Parse every schema file under `dir` with `parseFile` into one
+    * list; an item whose `id` a previous file already declared is a loud
+    * [[ConfigError]] (last-wins would silently drop its tests). */
+  private def loadAll[A](dir: Path, what: String, id: A => String)(
+      parseFile: (String, String) => Seq[A]): Seq[A] =
+    if (!Files.isDirectory(dir)) Nil
+    else schemaFiles(dir).foldLeft(Seq.empty[A]) { (acc, f) =>
+      val parsed = parseFile(Files.readString(f), f.toString)
+      val seen = acc.map(id).toSet
+      parsed.map(id).find(seen.contains).foreach { dup =>
+        throw new ConfigError(s"$what '$dup' declared in more than one schema file",
           Map("file" -> f.toString))
       }
       acc ++ parsed
     }
-  }
+
+  /** Every `sources:` declaration under `dir` (same file walk as
+    * [[loadDir]]); duplicate (source, table) across files is loud. */
+  def loadDirSources(dir: Path): Seq[SourceTableSpec] =
+    loadAll[SourceTableSpec](dir, "source table", _.qualified)(parseSources)
 
   /** Load every `schema*.yml`/`schema*.yaml` under `dir` (recursive,
     * reference model.py:180-190) into one name-keyed base-config map;
     * duplicate declarations of one model across files are a loud
-    * [[ConfigError]] (last-wins would silently drop tests). */
-  def loadDir(dir: Path): Map[String, ModelConfig] = {
-    if (!Files.isDirectory(dir)) return Map.empty
-    val files = schemaFiles(dir)
-    files.foldLeft(Map.empty[String, ModelConfig]) { (acc, f) =>
-      val parsed = parse(Files.readString(f), f.toString)
-      parsed.keySet.intersect(acc.keySet).toSeq.sorted.headOption.foreach {
-        dup => throw new ConfigError(
-          s"model '$dup' declared in more than one schema file",
-          Map("file" -> f.toString))
-      }
-      acc ++ parsed
-    }
-  }
+    * [[ConfigError]]. */
+  def loadDir(dir: Path): Map[String, ModelConfig] =
+    loadAll[ModelConfig](dir, "model", _.name) { (yaml, file) =>
+      parse(yaml, file).values.toSeq.sortBy(_.name)
+    }.map(c => c.name -> c).toMap
 
   /** Export parsed model configs back to schema.yml YAML — the
     * registry round-trip (model.py:303-318 `export_to_yaml`) that lets

@@ -9,12 +9,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
   *
   * This replaces the reference's warehouse-side CREATE OR REPLACE TABLE /
   * staging-table dance (materialization.py, cdc_polars.py) with the
-  * pattern that scales on a data lake: each rewrite lands in a fresh
-  * `v<N>` directory and becomes visible only when the pointer flips, so
-  * readers never observe a half-written table and Spark never reads a
-  * directory it is concurrently overwriting. Physical `append` (for
-  * append/time-incremental strategies) adds files to the current version
-  * directory — O(batch), not O(table), per batch.
+  * pattern that scales on a data lake: every write — full rewrite,
+  * partition-scoped merge, append, compaction — lands in a fresh `v<N>`
+  * directory and becomes visible only when the pointer flips, so
+  * readers never observe a half-written table, Spark never reads a
+  * directory it is concurrently overwriting, and no version directory
+  * is written after its pointer flips. Appends and scoped merges
+  * hard-link the previous version's untouched files forward, so they
+  * cost O(batch) data plus one link per carried file.
   */
 final class Warehouse(
     val spark: SparkSession,
@@ -48,8 +50,9 @@ final class Warehouse(
   // Whether a version has a catalog entry (bucketed), memoized: on a
   // production metastore the existence check is an RPC, and only this
   // warehouse writes the model, so the answer is stable per version.
+  // Concurrent: a DAG level's models write (and so read) in parallel.
   private val catalogTableCache =
-    scala.collection.mutable.Map.empty[String, Boolean]
+    scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
   def read(model: String): DataFrame = {
     val v = currentVersion(model).getOrElse(
@@ -63,23 +66,36 @@ final class Warehouse(
     else spark.read.parquet(versionDir(model, v).toString)
   }
 
+  /** The one version commit every write goes through: clear a `v<next>`
+    * that a rolled-back run left behind, let `write` fill it, then flip
+    * the pointer and refresh the view. Old versions are retained for
+    * time-travel/debug until [[vacuum]]. */
+  private def commit(model: String)(write: Long => Unit): Unit = {
+    val next = currentVersion(model).getOrElse(0L) + 1
+    if (Files.exists(versionDir(model, next))) dropVersion(model, next)
+    write(next)
+    // Only a bucketed write registers a catalog table (and caches `true`).
+    catalogTableCache.putIfAbsent(catalogName(model, next), false)
+    state.update(model)(_.copy(currentVersion = next))
+    refreshView(model)
+  }
+
+  private def parquetWriter(df: DataFrame, mode: SaveMode, partitionBy: Seq[String]) = {
+    val w = df.write.mode(mode)
+    if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
+  }
+
   /** Write a full new version and flip the pointer. Partitioning columns
     * (e.g. a date column for incremental models) keep scans prunable at
     * scale. */
   def writeVersion(
       model: String,
       df: DataFrame,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val next = currentVersion(model).getOrElse(0L) + 1
-    val dir = versionDir(model, next)
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dir.toString)
-    state.update(model)(_.copy(currentVersion = next))
-    refreshView(model)
-    // Old versions are retained for time-travel/debug; a production
-    // deployment would vacuum versions older than a retention window.
-  }
+      partitionBy: Seq[String] = Nil): Unit =
+    commit(model) { v =>
+      parquetWriter(df, SaveMode.Overwrite, partitionBy)
+        .parquet(versionDir(model, v).toString)
+    }
 
   /** Bucketed (CLUSTERED BY) version write: the model lands hash-bucketed
     * on `bucketCols` into `numBuckets` files per partition, registered as
@@ -95,18 +111,17 @@ final class Warehouse(
       df: DataFrame,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
+      sortCols: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty && numBuckets > 0, "bucket spec required")
-    val next = currentVersion(model).getOrElse(0L) + 1
-    val dir = versionDir(model, next)
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", dir.toString)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(catalogName(model, next))
-    catalogTableCache(catalogName(model, next)) = true
-    state.update(model)(_.copy(currentVersion = next))
-    refreshView(model)
+    commit(model) { v =>
+      val w = parquetWriter(df, SaveMode.Overwrite, partitionBy).format("parquet")
+        .option("path", versionDir(model, v).toString)
+        .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
+      (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
+        .saveAsTable(catalogName(model, v))
+      catalogTableCache(catalogName(model, v)) = true
+    }
   }
 
   /** Range-clustered version write: rows are range-partitioned on
@@ -127,16 +142,10 @@ final class Warehouse(
       numFiles: Int = 0,
       targetFileBytes: Long = Warehouse.DefaultTargetFileBytes): Unit = {
     require(rangeCols.nonEmpty && numFiles >= 0, "range spec required")
-    import org.apache.spark.sql.functions.col
+    val cols = rangeCols.map(org.apache.spark.sql.functions.col)
     Warehouse.withResolvedNumFiles(df, numFiles, targetFileBytes) { files =>
-      val next = currentVersion(model).getOrElse(0L) + 1
-      val dir = versionDir(model, next)
-      val cols = rangeCols.map(col)
-      df.repartitionByRange(files, cols: _*)
-        .sortWithinPartitions(cols: _*)
-        .write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      state.update(model)(_.copy(currentVersion = next))
-      refreshView(model)
+      writeVersion(model,
+        df.repartitionByRange(files, cols: _*).sortWithinPartitions(cols: _*))
     }
   }
 
@@ -157,17 +166,10 @@ final class Warehouse(
       bits: Int = 16,
       targetFileBytes: Long = Warehouse.DefaultTargetFileBytes): Unit = {
     require(numFiles >= 0, "numFiles must be non-negative (0 = by bytes)")
-    import org.apache.spark.sql.functions.col
+    val z = org.apache.spark.sql.functions.col("__z")
     Warehouse.withResolvedNumFiles(df, numFiles, targetFileBytes) { files =>
-      val next = currentVersion(model).getOrElse(0L) + 1
-      val dir = versionDir(model, next)
-      graft.ops.ZOrder.withZValue(df, colA, colB, bits)
-        .repartitionByRange(files, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop("__z")
-        .write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      state.update(model)(_.copy(currentVersion = next))
-      refreshView(model)
+      writeVersion(model, graft.ops.ZOrder.withZValue(df, colA, colB, bits)
+        .repartitionByRange(files, z).sortWithinPartitions(z).drop("__z"))
     }
   }
 
@@ -202,14 +204,13 @@ final class Warehouse(
       df: DataFrame,
       partCols: Seq[String],
       changedRelPaths: Set[String]): Unit = {
-    val prev = currentPath(model).getOrElse(
-      throw new StateError(s"model '$model' has no current version"))
-    val next = currentVersion(model).getOrElse(0L) + 1
-    val dir = versionDir(model, next)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(dir.toString)
-    carryForward(Paths.get(prev), dir, "", changedRelPaths)
-    state.update(model)(_.copy(currentVersion = next))
-    refreshView(model)
+    val prev = Paths.get(currentPath(model).getOrElse(
+      throw new StateError(s"model '$model' has no current version")))
+    commit(model) { v =>
+      val dir = versionDir(model, v)
+      parquetWriter(df, SaveMode.Overwrite, partCols).parquet(dir.toString)
+      carryForward(prev, dir, "", changedRelPaths)
+    }
   }
 
   /** Hard-link the previous version's partition directories into the new
@@ -232,7 +233,8 @@ final class Warehouse(
       })
 
   /** Recursively hard-link `src` under `dst` (copy fallback for file
-    * systems without link support). */
+    * systems without link support — there every append and scoped merge
+    * copies the carried files, O(table) instead of O(batch)). */
   private def linkTree(src: Path, dst: Path): Unit = {
     Files.createDirectories(dst)
     withStream(Files.list(src))(_.foreach { p =>
@@ -245,43 +247,22 @@ final class Warehouse(
     })
   }
 
-  /** When set (an atomic run — see `ModelRunner.runAtomic`), physical
-    * appends route through [[appendAsVersion]] so every mutation of the
-    * run is a pointer flip over immutable version directories and a
-    * mid-DAG failure can roll back by restoring pointers. Off by
-    * default: in-place append is O(batch) with zero link overhead and
-    * is the right steady-state for non-transactional runs. */
-  @volatile var versionedAppends: Boolean = false
-
-  /** Append files into the current version (no pointer flip) — or, in
-    * atomic-run mode, into a fresh version via [[appendAsVersion]]. */
-  def append(model: String, df: DataFrame): Unit =
-    if (versionedAppends) appendAsVersion(model, df)
-    else {
-      val dir = currentPath(model).getOrElse(
-        throw new StateError(s"cannot append to missing model '$model'"))
-      df.write.mode(SaveMode.Append).parquet(dir)
-      refreshView(model)
+  /** Append as a new version: the previous version's files are
+    * hard-linked in and the batch is written beside them, in the previous
+    * version's partition layout (a mixed flat/partitioned directory would
+    * hide its root files from reads) — O(batch) data + one link per
+    * existing file, or a copy of each where links are unsupported (see
+    * [[linkTree]]). The previous version stays immutable, so an atomic
+    * run can abandon the new one by restoring the pointer. */
+  def append(model: String, df: DataFrame): Unit = {
+    val prev = Paths.get(currentPath(model).getOrElse(
+      throw new StateError(s"cannot append to missing model '$model'")))
+    val layout = partitionColumns(prev)
+    commit(model) { v =>
+      val dir = versionDir(model, v)
+      linkTree(prev, dir)
+      parquetWriter(df, SaveMode.Append, layout).parquet(dir.toString)
     }
-
-  /** Versioned append: the batch lands in a NEW version directory whose
-    * prior files are hard-linked in (O(batch) data + O(files) links —
-    * the [[writeVersionScoped]] carry-forward idiom, flat), then the
-    * pointer flips. The previous version stays immutable, so an atomic
-    * run can abandon the new version by restoring the pointer. */
-  def appendAsVersion(model: String, df: DataFrame): Unit = {
-    val prev = currentPath(model).getOrElse(
-      throw new StateError(s"cannot append to missing model '$model'"))
-    val next = currentVersion(model).getOrElse(0L) + 1
-    val dir = versionDir(model, next)
-    // a rolled-back atomic run leaves an abandoned v<next> behind —
-    // clear it, like writeVersion's SaveMode.Overwrite does implicitly
-    if (Files.exists(dir))
-      withStream(Files.walk(dir))(_.toSeq.reverse.foreach(Files.delete))
-    linkTree(Paths.get(prev), dir)
-    df.write.mode(SaveMode.Append).parquet(dir.toString)
-    state.update(model)(_.copy(currentVersion = next))
-    refreshView(model)
   }
 
   /** (Re)register the model's relation as a temp view over its current
@@ -294,6 +275,8 @@ final class Warehouse(
     * (incremental time/append land one file per batch) from degrading
     * into a small-file swamp. Optional sort columns give the rewrite
     * clustering (better column locality + min/max pruning downstream).
+    * The version's `c=v` partition directories are kept, so
+    * partition-scoped merges still find every partition afterwards.
     */
   def compact(
       model: String,
@@ -306,8 +289,24 @@ final class Warehouse(
       df0.repartition(parts).sortWithinPartitions(sortBy.map(
         org.apache.spark.sql.functions.col): _*)
     else df0.coalesce(parts)
-    writeVersion(model, df)
+    writeVersion(model, df, partitionColumns(model))
   }
+
+  /** Partition columns of the model's current version (Nil when flat or
+    * missing). */
+  private[model] def partitionColumns(model: String): Seq[String] =
+    currentPath(model).toSeq.flatMap(p => partitionColumns(Paths.get(p)))
+
+  /** Partition columns of a version directory: the chain of `c=v`
+    * directory levels a partitioned write leaves. */
+  private def partitionColumns(dir: Path): Seq[String] =
+    withStream(Files.list(dir))(_.find { p =>
+      Files.isDirectory(p) && p.getFileName.toString.contains("=")
+    }).toSeq.flatMap { p =>
+      val name = p.getFileName.toString
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(name.take(name.indexOf('='))) +: partitionColumns(p)
+    }
 
   /** Drop version directories older than the newest `keep` (the pointer's
     * version is always retained). Returns the number of versions removed.
@@ -322,14 +321,16 @@ final class Warehouse(
       .map(p => p.getFileName.toString.drop(1).toLong)
       .toSeq).sorted
     val toDrop = versions.filter(_ <= current).dropRight(keep)
-    toDrop.foreach { v =>
-      // external catalog entry (bucketed versions) before the files
-      spark.sql(s"DROP TABLE IF EXISTS ${catalogName(model, v)}")
-      catalogTableCache.remove(catalogName(model, v))
-      val dir = versionDir(model, v)
-      withStream(Files.walk(dir))(_.toSeq.reverse.foreach(Files.delete))
-    }
+    toDrop.foreach(dropVersion(model, _))
     toDrop.size
+  }
+
+  /** Delete one version: its external catalog entry (bucketed versions)
+    * first, then its files. */
+  private def dropVersion(model: String, v: Long): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS ${catalogName(model, v)}")
+    catalogTableCache.remove(catalogName(model, v))
+    withStream(Files.walk(versionDir(model, v)))(_.toSeq.reverse.foreach(Files.delete))
   }
 
   /** Register a logical (lazy) view — the `view` materialization. */

@@ -401,10 +401,106 @@ class MaterializerSpec extends SparkSpec {
     val before = files("ap")
     assert(before >= 5) // one-plus file per appended batch
     val dataBefore = wh.read("ap").as[(Int, String)].collect().toSet
+    val versionBefore = wh.currentVersion("ap").get
     wh.compact("ap", targetFileCount = 1, sortBy = Seq("id"))
     assert(files("ap") == 1)
     assert(wh.read("ap").as[(Int, String)].collect().toSet == dataBefore)
-    assert(wh.currentVersion("ap").contains(2L)) // compaction is a new version
+    assert(wh.currentVersion("ap").contains(versionBefore + 1)) // compaction is a new version
+  }
+
+  private def dayRows(wh: Warehouse, model: String): Set[(Int, String, String)] =
+    wh.read(model).select("id", "v", "day").as[(Int, String, String)].collect().toSet
+
+  private def dayDirs(wh: Warehouse, model: String): Set[String] =
+    new java.io.File(wh.currentPath(model).get).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  test("partitioned time incremental keeps every batch readable") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    val cfg = ModelConfig("tp", materialized = "incremental",
+      incrementalStrategy = Some("time"), timeColumn = Some("id"),
+      meta = Map("partition_by" -> "day"))
+    mat.materialize(cfg, Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day"))
+    val r = mat.materialize(cfg,
+      Seq((2, "b", "d2"), (3, "c", "d2"), (4, "d", "d3")).toDF("id", "v", "day"))
+    assert(r.status == "appended")
+    assert(dayRows(wh, "tp") ==
+      Set((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2"), (4, "d", "d3")))
+    assert(dayDirs(wh, "tp") == Set("day=d1", "day=d2", "day=d3"))
+  }
+
+  test("partitioned append model writes and appends into day= directories") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    val cfg = ModelConfig("apd", materialized = "incremental",
+      incrementalStrategy = Some("append"), meta = Map("partition_by" -> "day"))
+    mat.materialize(cfg, Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day"))
+    assert(dayDirs(wh, "apd") == Set("day=d1", "day=d2"))
+    val v1 = wh.currentVersion("apd").get
+    mat.materialize(cfg, Seq((3, "c", "d2"), (4, "d", "d3")).toDF("id", "v", "day"))
+    assert(wh.currentVersion("apd").contains(v1 + 1)) // an append is a new version
+    assert(dayRows(wh, "apd") ==
+      Set((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2"), (4, "d", "d3")))
+    // the previous version is untouched by the append
+    val prev = java.nio.file.Paths.get(wh.currentPath("apd").get).resolveSibling(s"v$v1")
+    assert(spark.read.parquet(prev.toString).count() == 2)
+    // an empty batch is still a version, holding the same rows
+    mat.materialize(cfg, Seq((9, "x", "d9")).toDF("id", "v", "day").filter(col("id") < 0))
+    assert(wh.currentVersion("apd").contains(v1 + 2))
+    assert(wh.read("apd").count() == 4)
+  }
+
+  test("compaction keeps partitions, so a later scoped merge keeps untouched ones") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    val cfg = ModelConfig("cpk", materialized = "incremental",
+      incrementalStrategy = Some("unique_key"), uniqueKey = Some("id"),
+      meta = Map("partition_by" -> "day"))
+    mat.materialize(cfg,
+      Seq((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")).toDF("id", "v", "day"))
+    wh.compact("cpk", targetFileCount = 1)
+    val r = mat.materialize(cfg, Seq((1, "A", "d1")).toDF("id", "v", "day"))
+    assert(dayRows(wh, "cpk") == Set((1, "A", "d1"), (2, "b", "d2"), (3, "c", "d3")))
+    assert(r.status == "merged_scoped:1")
+    assert(dayDirs(wh, "cpk") == Set("day=d1", "day=d2", "day=d3"))
+  }
+
+  test("append onto a flat version keeps every row readable") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    wh.writeVersion("apf", Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day"))
+    val cfg = ModelConfig("apf", materialized = "incremental",
+      incrementalStrategy = Some("append"), meta = Map("partition_by" -> "day"))
+    val r = mat.materialize(cfg, Seq((3, "c", "d2"), (4, "d", "d3")).toDF("id", "v", "day"))
+    assert(r.status == "appended")
+    assert(dayRows(wh, "apf") ==
+      Set((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2"), (4, "d", "d3")))
+    wh.compact("apf", targetFileCount = 1)
+    assert(wh.read("apf").count() == 4)
+  }
+
+  test("keyed merge onto a flat version rewrites it into partition_by") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    wh.writeVersion("mgf",
+      Seq((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")).toDF("id", "v", "day"))
+    val cfg = ModelConfig("mgf", materialized = "incremental",
+      incrementalStrategy = Some("unique_key"), uniqueKey = Some("id"),
+      meta = Map("partition_by" -> "day"))
+    val r = mat.materialize(cfg, Seq((1, "A", "d1")).toDF("id", "v", "day"))
+    assert(r.status == "merged")
+    assert(dayRows(wh, "mgf") == Set((1, "A", "d1"), (2, "b", "d2"), (3, "c", "d3")))
+    assert(dayDirs(wh, "mgf") == Set("day=d1", "day=d2", "day=d3"))
+    val r2 = mat.materialize(cfg, Seq((2, "B", "d2")).toDF("id", "v", "day"))
+    assert(r2.status == "merged_scoped:1")
+    assert(dayRows(wh, "mgf") == Set((1, "A", "d1"), (2, "B", "d2"), (3, "c", "d3")))
+  }
+
+  test("bucketed table with partition_by keeps its day= directories") {
+    val wh = freshWh(); val mat = new Materializer(wh)
+    val cfg = ModelConfig("bpt", materialized = "table",
+      meta = Map("partition_by" -> "day", "bucket_by" -> "id", "buckets" -> "2"))
+    val r = mat.materialize(cfg,
+      Seq((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2")).toDF("id", "v", "day"))
+    assert(r.status == "bucketed:2")
+    assert(dayDirs(wh, "bpt") == Set("day=d1", "day=d2"))
+    assert(dayRows(wh, "bpt") == Set((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2")))
   }
 
   test("sort_by config clusters table files") {

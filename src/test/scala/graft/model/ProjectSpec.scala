@@ -101,6 +101,23 @@ class ResilienceSpec extends SparkSpec {
     assertThrows[Exception](runner.run())
   }
 
+  test("a level of bucketed table models writes and reads back concurrently") {
+    val whDir = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, whDir, StateStore(whDir + "/state"))
+    val runner = new ModelRunner(wh, Map.empty, parallelism = 4)
+    val names = (1 to 6).map(i => s"bk$i")
+    names.zipWithIndex.foreach { case (m, i) =>
+      runner.addModel(m, "-- config: materialized=table, bucket_by=id, buckets=2\n" +
+        s"SELECT id, id * $i AS v FROM range(${10 + i})")
+    }
+    val results = runner.run()
+    assert(results.map(_.status).toSet == Set("bucketed:2"))
+    names.zipWithIndex.foreach { case (m, i) =>
+      assert(wh.read(m).count() == 10 + i)
+      assert(spark.table(wh.relation(m)).where("v <> id * " + i).count() == 0)
+    }
+  }
+
   test("atomic run: mid-DAG failure restores every pointer and watermark") {
     Tables.registerAll(spark, sfDir)
     val whDir = Files.createTempDirectory("graft_wh_").toString
@@ -124,10 +141,9 @@ class ResilienceSpec extends SparkSpec {
     assert(state.get("base").get.currentVersion == v0base)
     assert(state.get("inc").get.currentVersion == v0inc)
     assert(!wh.exists("boom"))
-    // the incremental APPEND rolled back too (versioned-append mode):
+    // the incremental APPEND rolled back too (appends are versions):
     // the restored pointer serves the pre-run row count
     assert(wh.read("inc").count() == rows0)
-    assert(!wh.versionedAppends)
     // a second atomic attempt reuses the abandoned v<next> dirs cleanly
     assertThrows[Exception](runner.runAtomic())
     assert(state.get("base").get.currentVersion == v0base)
