@@ -88,9 +88,14 @@ object Cli {
       flagValue(rest, "--select")
         .map(s => Selector.resolve(runner.graph, runner.modelsByTag, Seq(s),
           plannerModified))
+    // the variables `run` renders with: per-environment defaults, and an
+    // explicit --var wins
+    def runVars: Map[String, String] =
+      cfg.environmentVars(target.getOrElse(cfg.currentTarget)) ++
+        parseRunArgs(rest)._2
     command match {
       case "run" =>
-        val (models, vars, tag) = parseRunArgs(rest)
+        val (models, _, tag) = parseRunArgs(rest)
         // --select "model+ +model tag:x": dbt-style graph selectors,
         // unioned with positional names and --tag (model/Selector.scala).
         // Targeting is None only when NO selection mechanism was given:
@@ -102,9 +107,7 @@ object Cli {
           if (models.isEmpty && tagged.isEmpty && selected.isEmpty) None
           else Some((models ++ tagged.getOrElse(Nil) ++
             selected.getOrElse(Nil)).distinct)
-        // per-environment variable defaults; explicit --var wins
-        val envName = target.getOrElse(cfg.currentTarget)
-        val allVars = cfg.environmentVars(envName) ++ vars
+        val allVars = runVars
         if (rest.contains("--dry-run")) {
           // validate + plan without executing (cli.py:47, executor.py:88)
           var ok = true
@@ -152,7 +155,13 @@ object Cli {
         // run declared `-- test:` suites against materialized models
         // (reference testing.py:134 run_model_tests; dbt-style `test` cmd)
         val models = positional(rest)
-        val outcomes = runner.runTests(if (models.isEmpty) None else Some(models))
+        val targets = if (models.isEmpty) None else Some(models)
+        val tested = targets.getOrElse(runner.configMap.keys.toSeq)
+          .filter(m => runner.configMap.get(m).exists(_.tests.nonEmpty))
+        val parents = tested.flatMap(runner.config(_).tests.map(_.toCheck))
+          .collect { case r: Quality.Relationships => r.refModel }
+        hydrate(spark, wh, runner, Some(tested ++ parents), runVars)
+        val outcomes = runner.runTests(targets)
         outcomes.foreach { o =>
           val status =
             if (o.passed) "PASS"
@@ -209,15 +218,9 @@ object Cli {
             if (hits.isEmpty) out(s"no downstream columns depend on $model.$column")
             else hits.toSeq.sorted.foreach(h => out(s"$model.$column -> $h"))
           case None =>
-            // Hydrate upstream relations (materialized versions where they
-            // exist, rendered views otherwise) so analysis can resolve refs.
-            runner.graph.executionOrder(Some(Seq(model))).flatten
-              .filter(m => m != model && runner.modelSqlMap.contains(m))
-              .foreach { m =>
-                if (wh.exists(m)) wh.refreshView(m)
-                else wh.registerView(m,
-                  spark.sql(runner.render(m, dummyVars(runner, m))))
-              }
+            // upstream relations must resolve for the model's analysis
+            hydrate(spark, wh, runner,
+              Some(runner.graph.dependencies(model).toSeq), runVars)
             val df = spark.sql(runner.render(model, dummyVars(runner, model)))
             Lineage.of(df).foreach { l =>
               val fns = if (l.transformations.isEmpty) ""
@@ -275,10 +278,9 @@ object Cli {
         }.getOrElse(throw new SqlError(
           "usage: sql \"<select>\" [--format json|csv|table] [--limit N] [--var k=v]"))
         val (_, vars, _) = parseRunArgs(rest)
-        // Materialized models are queryable both as {{ ref('m') }} and by
-        // their bare relation name; view-materialized models resolve
-        // through ref() to their registered temp views.
-        runner.graph.models.filter(wh.exists).foreach(wh.refreshView)
+        // Every model is queryable both as {{ ref('m') }} and by its bare
+        // relation name.
+        hydrate(spark, wh, runner, None, runVars)
         val rendered = SqlTemplate.render(
           stmt, "adhoc_sql",
           resolveRef = m => wh.relation(m),
@@ -423,6 +425,25 @@ object Cli {
   private def dummyVars(runner: ModelRunner, name: String): Map[String, String] =
     SqlTemplate.extractVariables(runner.modelSqlMap(name))
       .map(_ -> "0").toMap
+
+  /** Register the relations of `targets` and their upstream models (all
+    * models for None), in execution order, as a same-session `run` leaves
+    * them: a materialized model (or seed) as a view over its current
+    * version, any other model as a view over its SQL rendered with `vars`
+    * (an unbound variable renders as "0", as in `validate`; SQL that
+    * fails analysis is a typed SqlError naming the model). Temp views
+    * are per session, so the commands that read models in a fresh process
+    * or session — `test`, `sql`, `lineage` — call this first. */
+  private def hydrate(spark: SparkSession, wh: Warehouse, runner: ModelRunner,
+      targets: Option[Seq[String]], vars: Map[String, String]): Unit =
+    runner.graph.executionOrder(targets).flatten.foreach { m =>
+      if (wh.exists(m)) wh.refreshView(m)
+      else if (runner.modelSqlMap.contains(m))
+        try wh.registerView(m,
+          spark.sql(runner.render(m, dummyVars(runner, m) ++ vars)))
+        catch { case e: org.apache.spark.sql.AnalysisException =>
+          throw GraftError.classify(e, m) }
+    }
 
   /** Hot-reload loop — the reference's watcher (src/framework/
     * watcher.py:24-148): poll model files, diff hashes via the Planner,

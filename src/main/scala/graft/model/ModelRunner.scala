@@ -211,20 +211,20 @@ final class ModelRunner(
   }
 
   /** Run a model's declared `-- test:` suite against its materialized
-    * output (reference testing.py:134-150). All checks compile into at
-    * most one aggregate pass plus one per unique-check (Quality.run). */
+    * output (reference testing.py:134-150). All checks compile into one
+    * query (Quality.run), whose results come back in declaration order,
+    * so each outcome carries the severity of its own declaration — the
+    * same check declared at two severities reports twice. */
   def runModelTests(name: String): Seq[ModelRunner.TestOutcome] = {
-    val cfg = modelCfg(name)
-    if (cfg.tests.isEmpty) Nil
-    else {
-      val severityOf = cfg.tests.map(t => t.toCheck.name -> t.severity).toMap
+    val tests = modelCfg(name).tests
+    if (tests.isEmpty) Nil
+    else
       // relationships checks resolve their parent against this runner's
       // own materialized models (the dbt ref semantics)
-      Quality.run(readModel(name), cfg.tests.map(_.toCheck), readModel)
-        .map { r =>
-          ModelRunner.TestOutcome(name, r.check, r.failures, severityOf(r.check))
+      tests.zip(Quality.run(readModel(name), tests.map(_.toCheck), readModel))
+        .map { case (t, r) =>
+          ModelRunner.TestOutcome(name, r.check, r.failures, t.severity)
         }
-    }
   }
 
   /** Run test suites for `targets` (or every model with tests) against

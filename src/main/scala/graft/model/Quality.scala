@@ -5,16 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Data-quality tests — the Spark re-expression of the reference's
   * testing framework (src/framework/testing.py:28-150,
-  * polars_utils.py:96-170: unique / not_null / accepted_values / range).
+  * polars_utils.py:96-170: unique / not_null / accepted_values / range /
+  * relationships).
   *
-  * Unlike the reference, which issues one warehouse query per test,
-  * every check except `unique` compiles into a single aggregate pass
-  * over the table (conditional counts), and all `unique` checks share
-  * one aggregation — at 100 TB the difference between N scans and ~1.
+  * Unlike the reference, which issues one warehouse query per test, any
+  * mix of checks compiles into ONE query: each `relationships` parent's
+  * distinct keys are left-joined onto the frame, then a single `agg`
+  * computes one failing-row count per check — at 100 TB the difference
+  * between N scans and one.
   */
 object Quality {
 
-  sealed trait Check { def name: String }
+  sealed trait Check { def name: String; def column: String }
   final case class NotNull(column: String) extends Check {
     val name = s"not_null_$column"
   }
@@ -39,57 +41,41 @@ object Quality {
     def passed: Boolean = failures == 0
   }
 
-  /** Run all checks; returns one CheckResult per check. `resolve` maps
-    * a referenced model name to its DataFrame for [[Relationships]]
-    * checks (ModelRunner passes readModel; callers without a warehouse
-    * can pass any catalog lookup). Each relationships check is ONE
-    * anti-join count — broadcast when the parent's distinct key set is
-    * small, the usual FK shape. */
+  /** Run all checks as one query; returns one CheckResult per check, in
+    * `checks` order (a check declared twice yields two results).
+    * `resolve` maps a referenced model name to its DataFrame for
+    * [[Relationships]] checks (ModelRunner passes readModel; callers
+    * without a warehouse can pass any catalog lookup). Each parent's key
+    * set is made distinct before the left join, so the join never
+    * multiplies the frame's rows and every other count stays exact. */
   def run(df: DataFrame, checks: Seq[Check],
       resolve: String => DataFrame = t =>
         throw new graft.model.ConfigError(
           s"relationships test references model '$t' but no resolver " +
             "was provided")): Seq[CheckResult] = {
-    val rowChecks = checks.collect {
-      case c: NotNull =>
-        c.name -> sum(when(col(c.column).isNull, 1L).otherwise(0L)).as(c.name)
-      case c: AcceptedValues =>
-        c.name -> sum(when(!col(c.column).isin(c.values: _*) || col(c.column).isNull, 1L)
-          .otherwise(0L)).as(c.name)
-      case c: RangeCheck =>
-        c.name -> sum(when(col(c.column) < c.min || col(c.column) > c.max, 1L)
-          .otherwise(0L)).as(c.name)
+    if (checks.isEmpty) return Nil
+    def failing(cond: Column): Column = sum(when(cond, 1L).otherwise(0L))
+    val joined = checks.zipWithIndex.foldLeft(df) {
+      case (acc, (c: Relationships, i)) =>
+        val parent = resolve(c.refModel).select(col(c.refColumn).as(s"__pk$i"))
+          .distinct()
+        acc.join(parent, col(c.column) === col(s"__pk$i"), "left")
+      case (acc, _) => acc
     }
-    val uniqueChecks = checks.collect { case c: Unique => c }
-
-    val rowResults: Seq[CheckResult] =
-      if (rowChecks.isEmpty) Nil
-      else {
-        val row = df.agg(rowChecks.head._2, rowChecks.tail.map(_._2): _*).head()
-        rowChecks.map { case (name, _) =>
-          CheckResult(name, Option(row.getAs[Any](name)).fold(0L)(_.toString.toLong))
-        }
-      }
-
-    // duplicate count = total - distinct, per checked column; computed in
-    // one pass over the grouped keys when several unique checks exist.
-    val uniqueResults = uniqueChecks.map { c =>
-      val counts = df.agg(
-        count(col(c.column)).as("n"),
-        countDistinct(col(c.column)).as("d")).head()
-      CheckResult(c.name, counts.getAs[Long]("n") - counts.getAs[Long]("d"))
+    val counts = checks.zipWithIndex.map { case (check, i) =>
+      val c = col(check.column)
+      (check match {
+        case _: NotNull => failing(c.isNull)
+        case AcceptedValues(_, values) => failing(!c.isin(values: _*) || c.isNull)
+        case RangeCheck(_, min, max) => failing(c < min || c > max)
+        case _: Unique => count(c) - count_distinct(c)
+        case _: Relationships => failing(c.isNotNull && col(s"__pk$i").isNull)
+      }).as(s"__c$i")
     }
-
-    val relResults = checks.collect { case c: Relationships =>
-      val parent = resolve(c.refModel)
-        .select(col(c.refColumn).as("__pk")).distinct()
-      val orphans = df.filter(col(c.column).isNotNull)
-        .join(parent, col(c.column) === col("__pk"), "left_anti")
-        .count()
-      CheckResult(c.name, orphans)
+    val row = joined.agg(counts.head, counts.tail: _*).head()
+    checks.zipWithIndex.map { case (check, i) =>
+      CheckResult(check.name, if (row.isNullAt(i)) 0L else row.getLong(i))
     }
-
-    rowResults ++ uniqueResults ++ relResults
   }
 
   /** All checks as a single-row DataFrame (for oracle comparison). */

@@ -88,6 +88,41 @@ class CliSpec extends SparkSpec {
     assert(lines2.exists(_.startsWith("FAIL dupes.unique_grp")))
   }
 
+  test("test and sql read the warehouse from a fresh session") {
+    Tables.registerAll(spark, sfDir)
+    val proj = project(
+      "orders_clean" ->
+        """-- config: materialized=table
+          |-- test: unique(o_orderkey)
+          |SELECT o_orderkey FROM {{ source('raw', 'orders') }}""".stripMargin,
+      "big_orders" ->
+        """-- config: materialized=view
+          |SELECT o_orderkey FROM {{ ref('orders_clean') }}
+          |WHERE o_orderkey > 10""".stripMargin,
+      "child" ->
+        """-- config: materialized=table
+          |-- test: relationships(o_orderkey, big_orders, o_orderkey) severity=warn
+          |SELECT o_orderkey FROM {{ ref('orders_clean') }}""".stripMargin)
+    assert(run(proj, "run")._1 == 0)
+    // temp views are per session, so this one sees none of run's relations
+    val fresh = spark.newSession()
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    assert(Cli.execute(fresh, proj, "test", Nil, lines += _) == 0, lines)
+    assert(lines.exists(_.startsWith("PASS orders_clean.unique_o_orderkey")), lines)
+    assert(lines.exists(_.startsWith(
+      "WARN child.relationships_o_orderkey__big_orders_o_orderkey")), lines)
+    assert(lines.last == "1/2 tests passed")
+    lines.clear()
+    assert(Cli.execute(spark.newSession(), proj, "sql",
+      Seq("SELECT COUNT(*) AS n FROM {{ ref('big_orders') }}"), lines += _) == 0,
+      lines)
+    // a view that no longer analyzes is a typed sql_error, not a stack trace
+    Files.writeString(proj.resolve("models/broken.sql"),
+      "-- config: materialized=view\nSELECT no_such_col FROM {{ ref('orders_clean') }}")
+    val (code, out) = run(proj, "sql", "SELECT 1 AS x")
+    assert(code == 4 && out.exists(_.startsWith("ERROR[sql_error]")), out)
+  }
+
   test("run with failing error-severity tests exits nonzero and blocks dependents") {
     Tables.registerAll(spark, sfDir)
     val proj = project(

@@ -554,6 +554,84 @@ class MaterializerSpec extends SparkSpec {
       Seq(Quality.Relationships("cust_id", "customers", "pk"))))
   }
 
+  test("quality checks of every kind finish as exactly one query") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val df = Seq((1, Some("F"), 10.0, Some(10)), (1, None, -5.0, Some(99)))
+      .toDF("id", "status", "amt", "cust_id")
+    val parents = Seq(10, 20).toDF("pk")
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        finished.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        finished.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    val results =
+      try {
+        val r = Quality.run(df, Seq(
+          Quality.NotNull("status"),
+          Quality.AcceptedValues("status", Seq("F")),
+          Quality.RangeCheck("amt", 0.0, 100.0),
+          Quality.Unique("id"),
+          Quality.Unique("status"),
+          Quality.Relationships("cust_id", "customers", "pk")), _ => parents)
+        org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    assert(finished.get == 1)
+    assert(results.map(_.failures) == Seq(1L, 1L, 1L, 1L, 0L, 1L))
+  }
+
+  test("quality checks match a row-by-row reference, in declaration order") {
+    import MaterializerSpec.QRow
+    // kinds interleaved, so the results' order is the declarations' order
+    val checks = Seq(
+      Quality.Unique("id"), Quality.NotNull("id"),
+      Quality.Relationships("cust_id", "customers", "pk"),
+      Quality.NotNull("status"), Quality.AcceptedValues("status", Seq("F", "O")),
+      Quality.Unique("status"), Quality.NotNull("amt"),
+      Quality.RangeCheck("amt", 0.0, 100.0), Quality.NotNull("cust_id"),
+      Quality.Relationships("parent_id", "self", "id"), // self-reference
+      Quality.NotNull("status"), Quality.Unique("id")) // declared twice
+    // duplicated and NULL parent keys: the join must not multiply rows
+    val parentKeys = Seq(Some(10), Some(10), Some(20), None, Some(30))
+    def value(r: QRow, c: String): Option[Any] =
+      r.productElementNames.zip(r.productIterator).collectFirst {
+        case (`c`, v: Option[_]) => v
+      }.get
+    def reference(rows: Seq[QRow], check: Quality.Check): Long = check match {
+      case Quality.NotNull(c) => rows.count(value(_, c).isEmpty)
+      case Quality.AcceptedValues(c, vs) =>
+        rows.count(value(_, c).forall(v => !vs.contains(v.toString)))
+      case Quality.RangeCheck(c, lo, hi) =>
+        rows.count(value(_, c).exists { v =>
+          val d = v.toString.toDouble; d < lo || d > hi })
+      case Quality.Unique(c) =>
+        val vs = rows.flatMap(value(_, c)); (vs.size - vs.distinct.size).toLong
+      case Quality.Relationships(c, ref, rc) =>
+        val keys =
+          if (ref == "self") rows.flatMap(value(_, rc)).toSet
+          else parentKeys.flatten.toSet[Any]
+        rows.count(value(_, c).exists(v => !keys.contains(v)))
+    }
+    def compare(rows: Seq[QRow]): Unit = {
+      val df = rows.toDF()
+      val resolve = Map("customers" -> parentKeys.toDF("pk"), "self" -> df)
+      assert(Quality.run(df, checks, resolve).map(r => (r.check, r.failures)) ==
+        checks.map(c => (c.name, reference(rows, c))))
+    }
+    compare(Seq(
+      QRow(Some(1), Some("F"), Some(10.0), Some(10), None),
+      QRow(Some(1), Some("O"), Some(150.0), Some(20), Some(1)),
+      QRow(Some(2), None, Some(-1.0), Some(99), Some(7)),   // orphan FK, orphan parent
+      QRow(None, Some("Z"), None, None, Some(2)),           // NULL FK passes
+      QRow(Some(3), Some("F"), Some(100.0), Some(99), None),
+      QRow(Some(4), Some("O"), Some(0.0), Some(30), Some(4))))
+    compare(Nil)
+  }
+
   test("lineage maps projected and aggregated columns to base columns") {
     val df = graft.Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), (col("o_totalprice") * 2).as("dbl"))
@@ -581,4 +659,9 @@ class MaterializerSpec extends SparkSpec {
     val bronze = Macros.bronzeLoad(ev, filter = Some(col("value") > 0))
     assert(bronze.columns.contains("load_timestamp") && bronze.columns.contains("layer"))
   }
+}
+
+object MaterializerSpec {
+  final case class QRow(id: Option[Int], status: Option[String],
+      amt: Option[Double], cust_id: Option[Int], parent_id: Option[Int])
 }

@@ -304,6 +304,23 @@ class ResilienceSpec extends SparkSpec {
       ("unique_grp", false, "warn"), ("not_null_grp", true, "error")))
   }
 
+  test("each declaration keeps its own severity: an error-severity failure " +
+    "fails the model even when the same check is also declared at warn") {
+    val whDir = Files.createTempDirectory("graft_wh_").toString
+    val runner = new ModelRunner(
+      new Warehouse(spark, whDir, StateStore(whDir + "/state")), Map.empty)
+    // sidecar not_null(c) at error severity, inline not_null(c) at warn
+    runner.addModel("m",
+      "-- config: materialized=table\n-- test: not_null(c) severity=warn\n" +
+        "SELECT CAST(NULL AS INT) AS c",
+      base = ModelConfig("m", tests = Seq(TestSpec("not_null", "c"))))
+    val failure = intercept[ModelRunner.ModelTestFailure](runner.run())
+    assert(failure.failed.map(o => (o.check, o.severity)) ==
+      Seq(("not_null_c", "error")))
+    assert(runner.runTests(Some(Seq("m"))).map(o => (o.check, o.failures,
+      o.severity)) == Seq(("not_null_c", 1L, "error"), ("not_null_c", 1L, "warn")))
+  }
+
   test("result formatter emits json, csv, and table") {
     val df = Tables.load(spark, sfDir, "region")
     val json = ResultFormatter.format(df, "json")
