@@ -7,9 +7,12 @@ import scala.collection.mutable
   * (reference: src/framework/dependency.py:30-380).
   *
   * Levels returned by [[topoLevels]] contain models with no unresolved
-  * dependencies between them: each level's models can materialize
-  * concurrently (ModelRunner submits them as parallel Spark jobs — the
-  * cluster-side analogue of dependency.py:391-460's asyncio batches).
+  * dependencies between them. They fix the execution order that plans,
+  * listings and lineage report; ModelRunner does not wait for whole
+  * levels, but submits each model as a Spark job once its own
+  * [[dependencies]] have finished, taking ready models in that order
+  * (the cluster-side analogue of dependency.py:391-460's asyncio
+  * batches).
   */
 final class DependencyGraph {
   private val deps = mutable.LinkedHashMap.empty[String, Set[String]]

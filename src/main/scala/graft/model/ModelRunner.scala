@@ -2,18 +2,21 @@ package graft.model
 
 import graft.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.LinkedBlockingQueue
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** End-to-end model pipeline runner: parse → resolve → plan → execute —
   * the Spark re-expression of the reference's ModelExecutor + CLI run
   * loop (src/framework/executor.py:52-190, cli.py:50-180).
   *
   * Models are SQL strings (typically loaded from .sql files) using the
-  * SqlTemplate surface. Execution walks topological levels; models inside
-  * a level are submitted concurrently (Scala Futures → concurrent Spark
-  * jobs, the cluster analogue of dependency.py's asyncio batches — the
-  * scheduler interleaves their stages across executors).
+  * SqlTemplate surface. Execution is dependency-driven: a fixed pool of
+  * `parallelism` workers runs each model as soon as its own parents have
+  * finished, so independent models are concurrent Spark jobs (the
+  * cluster analogue of dependency.py's asyncio batches — the scheduler
+  * interleaves their stages across executors) and no model waits for
+  * an unrelated slower one.
   */
 final class ModelRunner(
     wh: Warehouse,
@@ -227,53 +230,94 @@ final class ModelRunner(
         }
   }
 
-  /** Run test suites for `targets` (or every model with tests) against
-    * already-materialized tables — the CLI `test` command surface. */
+  /** Run test suites for `targets` (or every model with tests) whose
+    * relation is registered — a table version, a view or a temp table
+    * (the CLI `test` command surface, which registers them first). */
   def runTests(targets: Option[Seq[String]] = None): Seq[ModelRunner.TestOutcome] = {
     val names = targets.getOrElse(modelCfg.keys.toSeq.sorted)
-    names.filter(m => modelCfg.get(m).exists(_.tests.nonEmpty) && wh.exists(m))
+    names.filter(m => modelCfg.get(m).exists(_.tests.nonEmpty) &&
+      wh.spark.catalog.tableExists(wh.relation(m)))
       .flatMap(runModelTests)
   }
 
-  /** Run models (targets + transitive deps, or all) level-by-level. With `continueOnError` (the reference's
-    * graceful-degradation posture — its executor logs failures and keeps
-    * going, executor.py:153-190), a failed model is recorded in state as
-    * a failure, its transitive dependents are skipped (their inputs are
-    * missing/stale), and every other model still runs. */
+  /** Run models (targets + transitive deps, or all) on a fixed pool of
+    * `parallelism` workers. A model is submitted as soon as every one of
+    * its selected parents has finished, so a fast chain is never held
+    * behind a slow model it does not read. When several models are ready
+    * they are submitted in [[DependencyGraph.executionOrder]] order, and
+    * the results come back in that order. Disabled models and non-model
+    * nodes count as finished at once.
+    *
+    * Without `continueOnError`, no model is submitted after the first
+    * failure: the models already running finish, then the failure of the
+    * earliest failed model in execution order is rethrown. With it (the
+    * reference's graceful-degradation posture — its executor logs
+    * failures and keeps going, executor.py:153-190), a failed model is
+    * recorded in state as a failure, its transitive dependents are
+    * skipped (their inputs are missing/stale), and every other model
+    * still runs. */
   def run(
       targets: Option[Seq[String]] = None,
       variables: Map[String, String] = Map.empty,
       batchTs: String = "1970-01-01 00:00:00",
       continueOnError: Boolean = false,
       fullRefresh: Boolean = false): Seq[MaterializeResult] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val g = graph
-    val skipped = scala.collection.mutable.Set.empty[String]
+    val order = g.executionOrder(targets).flatten
+    val rank = order.zipWithIndex.toMap
+    // Scheduling state belongs to this thread alone: workers hand each
+    // outcome back through `done`.
+    val waitingOn = mutable.Map.from(order.map(m => m -> g.dependencies(m).count(rank.contains)))
+    val ready = mutable.SortedSet.empty[String](Ordering.by(rank))
+    val skipped = mutable.Set.empty[String]
+    val results = mutable.Map.empty[String, MaterializeResult]
+    val failures = mutable.Map.empty[String, Throwable]
+    val done = new LinkedBlockingQueue[(String, Either[Throwable, MaterializeResult])]()
+    def finish(m: String): Unit = g.dependents(m).filter(rank.contains).foreach { d =>
+      waitingOn(d) -= 1
+      if (waitingOn(d) == 0) enqueue(d)
+    }
+    def enqueue(m: String): Unit =
+      if (skipped(m)) ()
+      else if (modelSql.contains(m) && modelCfg(m).enabled) ready += m
+      else finish(m)
     runErrors.clear()
+    order.filter(waitingOn(_) == 0).foreach(enqueue)
+    val workers = math.max(1, parallelism)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
     try {
-      val levels = g.executionOrder(targets)
-      levels.flatMap { level =>
-        val runnable = level.filter(m =>
-          modelSql.contains(m) && modelCfg(m).enabled && !skipped.contains(m))
-        val futs = runnable.map { m =>
-          Future(scala.util.Try(executeWithRetry(m, variables, batchTs, fullRefresh))
-            .toEither.left.map(e => (m, e)))
+      var running = 0
+      while (running > 0 || (ready.nonEmpty && failures.isEmpty)) {
+        while (running < workers && ready.nonEmpty && failures.isEmpty) {
+          val m = ready.head
+          ready -= m
+          running += 1
+          pool.execute { () =>
+            done.put(m -> (try Right(executeWithRetry(m, variables, batchTs, fullRefresh))
+              catch { case e: Throwable => Left(e) }))
+          }
         }
-        futs.map(f => Await.result(f, Duration.Inf)).flatMap {
-          case Right(r) => Some(r)
-          case Left((m, e)) if continueOnError =>
+        val (m, outcome) = done.take()
+        running -= 1
+        outcome match {
+          case Right(r) =>
+            results(m) = r
+            finish(m)
+          case Left(e) if continueOnError && NonFatal(e) =>
             val err = GraftError.classify(e, m)
             runErrors.add(err)
             wh.state.markExecution(m, success = false,
               java.time.Instant.now().toString)
-            skipped ++= g.allDependents(m) + m
-            Some(MaterializeResult(m, modelCfg(m).materialized,
-              status = s"failed[${err.errorClass}]: ${e.getMessage}"))
-          case Left((_, e)) => throw e
+            skipped ++= g.allDependents(m)
+            ready --= skipped
+            results(m) = MaterializeResult(m, modelCfg(m).materialized,
+              status = s"failed[${err.errorClass}]: ${e.getMessage}")
+          case Left(e) => failures(m) = e
         }
       }
     } finally pool.shutdown()
+    failures.minByOption { case (m, _) => rank(m) }.foreach { case (_, e) => throw e }
+    order.flatMap(results.get)
   }
 
   /** Run-level ATOMICITY over the whole selected DAG (the reference's
@@ -379,7 +423,7 @@ final class ModelRunner(
   /** Install a structured-log line consumer (None disables). */
   def setLogSink(sink: Option[String => Unit]): Unit = { logSink = sink }
 
-  // Models inside a level run concurrently; sinks (stdout, a buffer) are
+  // Models run concurrently; sinks (stdout, a buffer) are
   // not assumed thread-safe, so line emission is serialized here.
   private val logLock = new Object
 
@@ -461,8 +505,7 @@ final class ModelRunner(
   // ------------------------------------------------------------ metrics
   // Execution metrics (reference executor.py:446-453 get_metrics /
   // export_metrics_json): per-model wall-clock, status, and attempt
-  // count for the current runner. Thread-safe — models run concurrently
-  // within a level.
+  // count for the current runner. Thread-safe — models run concurrently.
   private val runMetrics =
     new java.util.concurrent.ConcurrentLinkedQueue[ModelRunner.ModelMetric]()
 

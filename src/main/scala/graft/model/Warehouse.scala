@@ -3,6 +3,8 @@ package graft.model
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.graftext.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed model storage with versioned directories and an atomic
   * current-version pointer (kept in the StateStore).
@@ -50,10 +52,23 @@ final class Warehouse(
   // Whether a version has a catalog entry (bucketed), memoized: on a
   // production metastore the existence check is an RPC, and only this
   // warehouse writes the model, so the answer is stable per version.
-  // Concurrent: a DAG level's models write (and so read) in parallel.
+  // Concurrent: independent models write (and so read) in parallel.
   private val catalogTableCache =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
+  // The data-column schema (partition columns left out) of the files each
+  // non-bucketed version holds, per (model, version), remembered by the
+  // commit that wrote them. Like the catalog cache it assumes only this
+  // warehouse writes the model.
+  private val dataSchemas =
+    scala.collection.concurrent.TrieMap.empty[(String, Long), StructType]
+
+  /** The model's current version as a DataFrame. A version this warehouse
+    * wrote with one data schema is read with that schema given, so Spark
+    * starts no job to infer it from a parquet footer; the partition
+    * columns are still inferred from the `c=v` directories, as are all
+    * columns of a version with no remembered schema (one written by
+    * another process, or an append whose batch changed the columns). */
   def read(model: String): DataFrame = {
     val v = currentVersion(model).getOrElse(
       throw new StateError(s"model '$model' not materialized"))
@@ -63,17 +78,20 @@ final class Warehouse(
     val isCatalog = catalogTableCache.getOrElseUpdate(tbl,
       spark.catalog.tableExists(tbl))
     if (isCatalog) spark.table(tbl)
-    else spark.read.parquet(versionDir(model, v).toString)
+    else dataSchemas.get((model, v))
+      .fold(spark.read)(spark.read.schema(_))
+      .parquet(versionDir(model, v).toString)
   }
 
   /** The one version commit every write goes through: clear a `v<next>`
-    * that a rolled-back run left behind, let `write` fill it, then flip
-    * the pointer and refresh the view. Old versions are retained for
-    * time-travel/debug until [[vacuum]]. */
-  private def commit(model: String)(write: Long => Unit): Unit = {
+    * that a rolled-back run left behind, let `write` fill it and return
+    * the data schema of the files it leaves there (None: unknown, reads
+    * infer it), then flip the pointer and refresh the view. Old versions
+    * are retained for time-travel/debug until [[vacuum]]. */
+  private def commit(model: String)(write: Long => Option[StructType]): Unit = {
     val next = currentVersion(model).getOrElse(0L) + 1
     if (Files.exists(versionDir(model, next))) dropVersion(model, next)
-    write(next)
+    write(next).foreach(dataSchemas((model, next)) = _)
     // Only a bucketed write registers a catalog table (and caches `true`).
     catalogTableCache.putIfAbsent(catalogName(model, next), false)
     state.update(model)(_.copy(currentVersion = next))
@@ -85,6 +103,23 @@ final class Warehouse(
     if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
   }
 
+  /** The schema a scan reports for the data columns of `df` written in
+    * the `partitionBy` layout: `df`'s columns minus the partition
+    * columns, all nullable. */
+  private def dataSchema(df: DataFrame, partitionBy: Seq[String]): StructType = {
+    val resolver = spark.sessionState.conf.resolver
+    Bridge.asNullable(StructType(
+      df.schema.filterNot(f => partitionBy.exists(resolver(_, f.name)))))
+  }
+
+  /** The data schema of a version that adds `df`'s files (in the
+    * `partitionBy` layout) to those carried from version `prev`: known
+    * only when it equals `prev`'s remembered one, so that every file
+    * holds the same columns. */
+  private def sameDataSchema(model: String, prev: Long, df: DataFrame,
+      partitionBy: Seq[String]): Option[StructType] =
+    Some(dataSchema(df, partitionBy)).filter(dataSchemas.get((model, prev)).contains)
+
   /** Write a full new version and flip the pointer. Partitioning columns
     * (e.g. a date column for incremental models) keep scans prunable at
     * scale. */
@@ -93,8 +128,12 @@ final class Warehouse(
       df: DataFrame,
       partitionBy: Seq[String] = Nil): Unit =
     commit(model) { v =>
-      parquetWriter(df, SaveMode.Overwrite, partitionBy)
-        .parquet(versionDir(model, v).toString)
+      val dir = versionDir(model, v)
+      parquetWriter(df, SaveMode.Overwrite, partitionBy).parquet(dir.toString)
+      // An empty partitioned write leaves no `c=v` directory to infer the
+      // partition columns from; its reads keep failing inference.
+      Some(dataSchema(df, partitionBy))
+        .filter(_ => partitionBy.isEmpty || partitionColumns(dir).nonEmpty)
     }
 
   /** Bucketed (CLUSTERED BY) version write: the model lands hash-bucketed
@@ -121,6 +160,7 @@ final class Warehouse(
       (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
         .saveAsTable(catalogName(model, v))
       catalogTableCache(catalogName(model, v)) = true
+      None
     }
   }
 
@@ -204,12 +244,13 @@ final class Warehouse(
       df: DataFrame,
       partCols: Seq[String],
       changedRelPaths: Set[String]): Unit = {
-    val prev = Paths.get(currentPath(model).getOrElse(
-      throw new StateError(s"model '$model' has no current version")))
+    val prevV = currentVersion(model).getOrElse(
+      throw new StateError(s"model '$model' has no current version"))
     commit(model) { v =>
       val dir = versionDir(model, v)
       parquetWriter(df, SaveMode.Overwrite, partCols).parquet(dir.toString)
-      carryForward(prev, dir, "", changedRelPaths)
+      carryForward(versionDir(model, prevV), dir, "", changedRelPaths)
+      sameDataSchema(model, prevV, df, partCols)
     }
   }
 
@@ -255,13 +296,15 @@ final class Warehouse(
     * [[linkTree]]). The previous version stays immutable, so an atomic
     * run can abandon the new one by restoring the pointer. */
   def append(model: String, df: DataFrame): Unit = {
-    val prev = Paths.get(currentPath(model).getOrElse(
-      throw new StateError(s"cannot append to missing model '$model'")))
+    val prevV = currentVersion(model).getOrElse(
+      throw new StateError(s"cannot append to missing model '$model'"))
+    val prev = versionDir(model, prevV)
     val layout = partitionColumns(prev)
     commit(model) { v =>
       val dir = versionDir(model, v)
       linkTree(prev, dir)
       parquetWriter(df, SaveMode.Append, layout).parquet(dir.toString)
+      sameDataSchema(model, prevV, df, layout)
     }
   }
 
@@ -326,10 +369,11 @@ final class Warehouse(
   }
 
   /** Delete one version: its external catalog entry (bucketed versions)
-    * first, then its files. */
+    * first, then its remembered schema and its files. */
   private def dropVersion(model: String, v: Long): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${catalogName(model, v)}")
     catalogTableCache.remove(catalogName(model, v))
+    dataSchemas.remove((model, v))
     withStream(Files.walk(versionDir(model, v)))(_.toSeq.reverse.foreach(Files.delete))
   }
 

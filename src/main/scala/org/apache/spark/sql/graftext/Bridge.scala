@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.internal.{SortOrder => SortNode}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into Spark's `private[sql]` surface: wrapping a custom
   * LogicalPlan (graft.plans.AsOfJoinNode) in a Dataset requires
@@ -31,6 +32,11 @@ object Bridge {
     * ever being visible to queries planned on the parent session. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `schema` with every field, nested ones included, nullable — what a
+    * file scan reports for it (`StructType.asNullable` is
+    * private[spark]). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Block until every queued listener event has been delivered
     * (`listenerBus.waitUntilEmpty` is private[spark]). Metrics harnesses

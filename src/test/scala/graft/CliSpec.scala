@@ -123,6 +123,20 @@ class CliSpec extends SparkSpec {
     assert(code == 4 && out.exists(_.startsWith("ERROR[sql_error]")), out)
   }
 
+  test("test runs the declared tests of view models, as run does") {
+    val proj = project(
+      "v" ->
+        """-- config: materialized=view
+          |-- test: not_null(x) severity=warn
+          |SELECT CAST(NULL AS INT) AS x""".stripMargin)
+    val (runCode, runLines) = run(proj, "run")
+    assert(runCode == 0 && runLines.exists(_.contains("(1 test warnings)")), runLines)
+    val (code, lines) = run(proj, "test")
+    assert(code == 0, lines)
+    assert(lines.exists(_.startsWith("WARN v.not_null_x (1 failing rows)")), lines)
+    assert(lines.last == "0/1 tests passed", lines)
+  }
+
   test("run with failing error-severity tests exits nonzero and blocks dependents") {
     Tables.registerAll(spark, sfDir)
     val proj = project(

@@ -286,3 +286,30 @@ class BackfillSpec extends AnyFunSuite {
     assert(days.distinct.size == days.size && days.size == 31)
   }
 }
+
+class RunOrderSpec extends SparkSpec {
+
+  test("run returns results in execution order, whatever order models finish in") {
+    spark.udf.register("sleep_ms", org.apache.spark.sql.functions.udf(
+      (ms: Long) => { Thread.sleep(ms); ms }).asNondeterministic())
+    val whDir = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, whDir, StateStore(whDir + "/state"))
+    val runner = new ModelRunner(wh, Map.empty, parallelism = 3)
+    runner.addModel("slow_root", "-- config: materialized=table\nSELECT sleep_ms(600) AS x")
+    runner.addModel("fast_root", "-- config: materialized=view\nSELECT 1 AS id")
+    runner.addModel("mid", "-- config: materialized=table\nSELECT id FROM {{ ref('fast_root') }}")
+    runner.addModel("gold", "-- config: materialized=table\n" +
+      "SELECT id, x FROM {{ ref('mid') }} CROSS JOIN {{ ref('slow_root') }}")
+    // a disabled model counts as finished at once: its dependent still runs
+    runner.addModel("off", "-- config: materialized=table, enabled=false\nSELECT 1 AS y")
+    runner.addModel("after_off", "-- config: materialized=view\n-- depends_on: off\nSELECT 2 AS y")
+    val g = runner.graph
+    val results = runner.run()
+    assert(results.map(_.modelName) == g.executionOrder().flatten.filterNot(_ == "off"))
+    assert(results.forall(_.status == "success"))
+    // fast_root and mid finished before slow_root, yet come back in order
+    val picked = runner.run(Some(Seq("gold")))
+    assert(picked.map(_.modelName) == g.executionOrder(Some(Seq("gold"))).flatten)
+    assert(wh.read("gold").count() == 1)
+  }
+}

@@ -632,6 +632,114 @@ class MaterializerSpec extends SparkSpec {
     compare(Nil)
   }
 
+  /** Spark jobs the calling thread starts while running `body`. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try body
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** `model`'s current version reads as inference reads it: the schema
+    * `wh` reads equals the one Spark infers from the version's files, and
+    * a second warehouse over the same root, with no remembered schemas,
+    * reads the same schema and rows. */
+  private def assertReadsAsInferred(wh: Warehouse, root: String, model: String): Unit = {
+    val got = wh.read(model)
+    assert(got.schema == spark.read.parquet(wh.currentPath(model).get).schema, model)
+    val reopened = new Warehouse(spark, root, wh.state).read(model)
+    assert(reopened.schema == got.schema, model)
+    assert(sortedRows(reopened) == sortedRows(got), model)
+  }
+
+  test("each version reads with its written schema exactly as inference reads it") {
+    val root = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, root, StateStore(root + "/state"))
+    val mat = new Materializer(wh)
+    // a nested struct, a date column, and string partition values that
+    // inference turns into int and date
+    def batch(ids: Seq[Int], p: String, day: String) =
+      ids.toDF("id")
+        .withColumn("v", concat(lit("v"), col("id").cast("string")))
+        .withColumn("d", date_add(lit(java.sql.Date.valueOf("2024-01-01")), col("id")))
+        .withColumn("s", struct(col("id").as("k"), array(col("v")).as("vs")))
+        .withColumn("p", lit(p))
+        .withColumn("day", lit(day))
+        .withColumn("__cdc_operation", lit("U"))
+    def parted(kv: (String, String)*) = Map("partition_by" -> "p;day") ++ kv
+    val cases = Seq(
+      ModelConfig("flat", materialized = "table"),
+      ModelConfig("ptable", materialized = "table", meta = parted()),
+      ModelConfig("itime", materialized = "incremental",
+        incrementalStrategy = Some("time"), timeColumn = Some("id"), meta = parted()),
+      ModelConfig("iappend", materialized = "incremental",
+        incrementalStrategy = Some("append"), meta = parted()),
+      ModelConfig("ikey", materialized = "incremental",
+        incrementalStrategy = Some("unique_key"), uniqueKey = Some("id"), meta = parted()),
+      ModelConfig("cdc", materialized = "cdc", uniqueKey = Some("id")),
+      ModelConfig("scd2", materialized = "cdc_scd2", uniqueKey = Some("id")))
+    cases.foreach { cfg =>
+      mat.materialize(cfg, batch(Seq(1, 2), "1", "2024-01-03"))
+      mat.materialize(cfg, batch(Seq(2, 3), "2", "2024-01-04"), "2024-02-01 00:00:00")
+      assert(wh.currentVersion(cfg.name).contains(2L), cfg.name)
+      assert(jobsDuring(wh.read(cfg.name)) == 0, cfg.name) // schema remembered
+      assertReadsAsInferred(wh, root, cfg.name)
+    }
+    assert(wh.read("ptable").schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(wh.read("ptable").schema("day").dataType == org.apache.spark.sql.types.DateType)
+    wh.compact("iappend", targetFileCount = 1)
+    assert(jobsDuring(wh.read("iappend")) == 0)
+    assertReadsAsInferred(wh, root, "iappend")
+  }
+
+  test("refreshView after a commit starts no job") {
+    val wh = freshWh()
+    wh.writeVersion("rv", Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day"),
+      Seq("day"))
+    assert(jobsDuring(wh.refreshView("rv")) == 0)
+    assert(spark.table(wh.relation("rv")).count() == 2)
+  }
+
+  test("an empty partitioned version still reads by inference") {
+    val wh = freshWh()
+    // no `day=` directory to take the partition column from: inference
+    // fails at the commit's refreshView, and a given schema would hide that
+    val empty = Seq((1, "a", "d1")).toDF("id", "v", "day").filter(col("id") < 0)
+    intercept[org.apache.spark.sql.AnalysisException](wh.writeVersion("ep", empty, Seq("day")))
+    intercept[org.apache.spark.sql.AnalysisException](wh.read("ep"))
+  }
+
+  test("an append whose batch adds a column reads by inference") {
+    val root = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, root, StateStore(root + "/state"))
+    val mat = new Materializer(wh)
+    val cfg = ModelConfig("grow", materialized = "incremental",
+      incrementalStrategy = Some("append"))
+    mat.materialize(cfg, Seq((1, "a")).toDF("id", "v"))
+    mat.materialize(cfg, Seq((2, "b", 2.5)).toDF("id", "v", "extra"))
+    val path = wh.currentPath("grow").get
+    assert(jobsDuring(wh.read("grow")) == 1) // the footer inference
+    assert(wh.read("grow").schema == spark.read.parquet(path).schema)
+    assert(sortedRows(wh.read("grow")) == sortedRows(spark.read.parquet(path)))
+    assertReadsAsInferred(wh, root, "grow")
+  }
+
   test("lineage maps projected and aggregated columns to base columns") {
     val df = graft.Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), (col("o_totalprice") * 2).as("dbl"))

@@ -101,6 +101,83 @@ class ResilienceSpec extends SparkSpec {
     assertThrows[Exception](runner.run())
   }
 
+  /** A runner over a fresh warehouse whose structured log lands in
+    * `events`, with `sleep_ms(ms)` registered: a UDF that sleeps and
+    * returns `ms`. */
+  private def scheduledRunner(parallelism: Int,
+      events: scala.collection.mutable.Buffer[String]): (Warehouse, ModelRunner) = {
+    spark.udf.register("sleep_ms", org.apache.spark.sql.functions.udf(
+      (ms: Long) => { Thread.sleep(ms); ms }).asNondeterministic())
+    val whDir = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, whDir, StateStore(whDir + "/state"))
+    val runner = new ModelRunner(wh, Map.empty, parallelism = parallelism)
+    runner.setLogSink(Some(line => events.synchronized { events += line }))
+    (wh, runner)
+  }
+
+  /** Position of `model`'s `event` line in the log, -1 when absent. */
+  private def eventAt(events: scala.collection.Seq[String], event: String, model: String): Int =
+    events.indexWhere(_.startsWith(s"""{"event":"$event","model":"$model""""))
+
+  test("a fast chain is not held behind a slow sibling") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (_, runner) = scheduledRunner(parallelism = 4, events)
+    runner.addModel("slow", "-- config: materialized=table\nSELECT sleep_ms(1500) AS x")
+    runner.addModel("a", "-- config: materialized=table\nSELECT 1 AS id")
+    runner.addModel("b", "-- config: materialized=table\nSELECT id FROM {{ ref('a') }}")
+    assert(runner.graph.topoLevels().map(_.toSet) == Seq(Set("slow", "a"), Set("b")))
+    assert(runner.run().forall(_.status == "success"))
+    assert(eventAt(events, "execution_end", "a") < eventAt(events, "execution_start", "b"))
+    // b waits for its own parent, not for the slow model of a's level
+    assert(eventAt(events, "execution_start", "b") < eventAt(events, "execution_end", "slow"),
+      events)
+  }
+
+  test("fail-fast: nothing is submitted after a failure, the earliest failure is thrown") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (wh, runner) = scheduledRunner(parallelism = 3, events)
+    runner.addModel("bad_x", "-- config: materialized=table\nSELECT missing_x FROM range(1)")
+    runner.addModel("bad_y", "-- config: materialized=table\nSELECT missing_y FROM range(1)")
+    runner.addModel("slow", "-- config: materialized=table\nSELECT sleep_ms(1000) AS x")
+    runner.addModel("after_slow", "-- config: materialized=table\nSELECT x FROM {{ ref('slow') }}")
+    val order = runner.graph.executionOrder().flatten
+    val first = order.filter(_.startsWith("bad_")).head
+    val e = intercept[org.apache.spark.sql.AnalysisException](runner.run())
+    assert(e.getMessage.contains(s"missing_${first.last}"), e.getMessage)
+    // the model already running finished; its dependent was never submitted
+    assert(eventAt(events, "execution_end", "slow") >= 0, events)
+    assert(wh.exists("slow"))
+    assert(eventAt(events, "execution_start", "after_slow") < 0, events)
+  }
+
+  test("continueOnError skips exactly the failed model's transitive dependents") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (wh, runner) = scheduledRunner(parallelism = 2, events)
+    def table(sql: String) = "-- config: materialized=table\n" + sql
+    runner.addModel("root", table("SELECT id FROM range(3)"))
+    runner.addModel("broken", table("SELECT no_such_column FROM {{ ref('root') }}"))
+    runner.addModel("child", table("SELECT * FROM {{ ref('broken') }}"))
+    runner.addModel("grandchild", table("SELECT * FROM {{ ref('child') }}"))
+    runner.addModel("sibling", table("SELECT id FROM {{ ref('root') }}"))
+    runner.addModel("slow", table("SELECT sleep_ms(500) AS x"))
+    runner.addModel("after_slow", table("SELECT x FROM {{ ref('slow') }}"))
+    runner.addModel("joined",
+      table("SELECT id, x FROM {{ ref('sibling') }} CROSS JOIN {{ ref('after_slow') }}"))
+    val results = runner.run(continueOnError = true)
+    val status = results.map(r => r.modelName -> r.status).toMap
+    assert(status.keySet == Set("root", "broken", "sibling", "slow", "after_slow", "joined"))
+    assert(status("broken").startsWith("failed[sql_error]"), status)
+    assert((status - "broken").values.forall(_ == "success"), status)
+    assert(runner.graph.allDependents("broken") == Set("child", "grandchild"))
+    Seq("child", "grandchild").foreach { m =>
+      assert(eventAt(events, "execution_start", m) < 0, events)
+      assert(!wh.exists(m))
+    }
+    assert(runner.lastRunErrors.map(_.errorClass) == Seq("sql_error"))
+    assert(wh.state.get("broken").exists(_.failureCount == 1))
+    assert(wh.read("joined").count() == 3)
+  }
+
   test("a level of bucketed table models writes and reads back concurrently") {
     val whDir = Files.createTempDirectory("graft_wh_").toString
     val wh = new Warehouse(spark, whDir, StateStore(whDir + "/state"))
