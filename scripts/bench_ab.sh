@@ -7,10 +7,12 @@
 #                  pairs and this checkout first in even ones
 # Env: SPARK_HOME (required, as for perfbench/run.py); OUT keeps the base
 # tree, both builds and every run's output (default: a new temp dir).
-# Prints each pair's end-to-end metrics, then each side's median and IQR.
+# Prints each pair's end-to-end metrics, each side's median and IQR, and
+# per metric how many pairs each side won (in the metric's `better`
+# direction from BENCHMARK.json; ties count for neither side).
 set -u
 SELF="$(cd "$(dirname "$0")" && pwd)/$(basename "$0")"
-usage() { sed -n '2,10p' "$SELF" >&2; exit 2; }
+usage() { sed -n '2,12p' "$SELF" >&2; exit 2; }
 [ $# -eq 3 ] || usage
 BASE="$1" WL="$2" PAIRS="$3"
 case "$PAIRS" in ''|*[!0-9]*|0*) echo "bench_ab.sh: <pairs> must be a positive integer" >&2; usage ;; esac
@@ -43,10 +45,12 @@ done
 python3 - "$OUT" "$PAIRS" <<'EOF'
 import json, statistics, sys
 out, pairs = sys.argv[1], int(sys.argv[2])
-names = [m["name"] for m in json.load(open("BENCHMARK.json"))["end_to_end"]]
+better = {m["name"]: m["better"] for m in json.load(open("BENCHMARK.json"))["end_to_end"]}
+names = list(better)
 runs = {"base": [], "change": []}
+both = []  # (base, change) metrics of each pair where both sides ran
 for i in range(1, pairs + 1):
-    line = [f"pair {i}"]
+    line, pair = [f"pair {i}"], {}
     for side in runs:
         try:
             rec = json.loads(open(f"{out}/{side}-{i}.out").read().splitlines()[-1])
@@ -55,8 +59,11 @@ for i in range(1, pairs + 1):
             continue
         m = {n: rec["metrics"][n]["value"] for n in names}
         runs[side].append(m)
+        pair[side] = m
         vals = " ".join(f"{n}={m[n]:.3f}" for n in names)
         line.append(f"{side}: {vals}" + ("" if rec["correct"] else " INCORRECT"))
+    if len(pair) == 2:
+        both.append((pair["base"], pair["change"]))
     print("  |  ".join(line))
 for side, ms in runs.items():
     if not ms:
@@ -68,4 +75,11 @@ for side, ms in runs.items():
         q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
         stats.append(f"{n}={q[1]:.3f} (IQR {q[2] - q[0]:.3f})")
     print(f"{side} median over {len(ms)} runs: " + " ".join(stats))
+# A side wins a pair on a metric when its value is better in the metric's
+# direction; ties count for neither side.
+wins = []
+for n in names:
+    gain = [(b[n] - c[n]) * (1 if better[n] == "lower" else -1) for b, c in both]
+    wins.append(f"{n} change {sum(g > 0 for g in gain)} base {sum(g < 0 for g in gain)}")
+print(f"pair wins over {len(both)} pairs: " + ", ".join(wins))
 EOF

@@ -2,6 +2,7 @@ package graft.model
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.graftext.Bridge
 import org.apache.spark.sql.types.StructType
@@ -69,9 +70,11 @@ final class Warehouse(
     * columns are still inferred from the `c=v` directories, as are all
     * columns of a version with no remembered schema (one written by
     * another process, or an append whose batch changed the columns). */
-  def read(model: String): DataFrame = {
-    val v = currentVersion(model).getOrElse(
-      throw new StateError(s"model '$model' not materialized"))
+  def read(model: String): DataFrame =
+    readVersion(model, currentVersion(model).getOrElse(
+      throw new StateError(s"model '$model' not materialized")))
+
+  private def readVersion(model: String, v: Long): DataFrame = {
     // Bucketed versions must be read through their catalog table — the
     // bucket spec (what makes joins shuffle-free) lives only there.
     val tbl = catalogName(model, v)
@@ -86,16 +89,21 @@ final class Warehouse(
   /** The one version commit every write goes through: clear a `v<next>`
     * that a rolled-back run left behind, let `write` fill it and return
     * the data schema of the files it leaves there (None: unknown, reads
-    * infer it), then flip the pointer and refresh the view. Old versions
-    * are retained for time-travel/debug until [[vacuum]]. */
+    * infer it), read it back, then flip the pointer and register the view.
+    * A version that cannot be read is dropped and the pointer stays on
+    * the previous one. Old versions are retained for time-travel/debug
+    * until [[vacuum]]. */
   private def commit(model: String)(write: Long => Option[StructType]): Unit = {
     val next = currentVersion(model).getOrElse(0L) + 1
     if (Files.exists(versionDir(model, next))) dropVersion(model, next)
     write(next).foreach(dataSchemas((model, next)) = _)
     // Only a bucketed write registers a catalog table (and caches `true`).
     catalogTableCache.putIfAbsent(catalogName(model, next), false)
+    val df = try readVersion(model, next) catch {
+      case NonFatal(e) => dropVersion(model, next); throw e
+    }
     state.update(model)(_.copy(currentVersion = next))
-    refreshView(model)
+    df.createOrReplaceTempView(relation(model))
   }
 
   private def parquetWriter(df: DataFrame, mode: SaveMode, partitionBy: Seq[String]) = {

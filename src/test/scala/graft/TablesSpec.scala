@@ -76,6 +76,22 @@ class TablesSpec extends SparkSpec {
     assert(!(Tables.load(clone, sfDir, "nation") eq before))
   }
 
+  test("a warm JVM compiles each of 150 recurring plans once") {
+    // More distinct plans than Spark's default codegen cache (100) holds:
+    // with that cache, LRU evicts every class before its plan recurs.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(round: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      round
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def plans(): Unit = (1 to 150).foreach { i =>
+      spark.range(10).selectExpr(s"id * $i + ${3 * i} AS x").collect()
+    }
+    assert(compiles(plans()) > 0)
+    assert(compiles(plans()) == 0)
+  }
+
   test("Scratch.invalidateLandings drops matching memoized landings") {
     var builds = 0
     def land() = Scratch.landedDir("tbl_spec:/some/dir") { p =>

@@ -719,10 +719,23 @@ class MaterializerSpec extends SparkSpec {
   test("an empty partitioned version still reads by inference") {
     val wh = freshWh()
     // no `day=` directory to take the partition column from: inference
-    // fails at the commit's refreshView, and a given schema would hide that
+    // fails when the commit reads it back, and a given schema would hide that
     val empty = Seq((1, "a", "d1")).toDF("id", "v", "day").filter(col("id") < 0)
     intercept[org.apache.spark.sql.AnalysisException](wh.writeVersion("ep", empty, Seq("day")))
-    intercept[org.apache.spark.sql.AnalysisException](wh.read("ep"))
+    intercept[StateError](wh.read("ep"))
+  }
+
+  test("a version that cannot be read is dropped and the pointer stays") {
+    val wh = freshWh()
+    val v1 = Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day")
+    wh.writeVersion("keep", v1, Seq("day"))
+    val v1Path = java.nio.file.Paths.get(wh.currentPath("keep").get)
+    intercept[org.apache.spark.sql.AnalysisException](
+      wh.writeVersion("keep", v1.filter(col("id") < 0), Seq("day")))
+    assert(wh.currentVersion("keep").contains(1L))
+    assert(sortedRows(wh.read("keep").select("id", "v", "day")) ==
+      Seq("1|a|d1", "2|b|d2"))
+    assert(!Files.exists(v1Path.resolveSibling("v2")))
   }
 
   test("an append whose batch adds a column reads by inference") {
