@@ -45,6 +45,14 @@ object Scratch {
     p.toString
   }
 
+  /** Delete a [[dir]] before JVM exit (a one-slot reclaim of a
+    * directory no reader still needs). */
+  def delete(dir: String): Unit = {
+    val p = Paths.get(dir)
+    cleanupQueue.remove(p)
+    deleteRecursively(p)
+  }
+
   /** Memoized input landing: build-once scratch data keyed by what it
     * IS (caller-chosen key, which must capture every input the build
     * depends on — source dir, projection, planted rows). Streaming

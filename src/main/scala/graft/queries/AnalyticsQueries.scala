@@ -383,14 +383,13 @@ object AnalyticsQueries extends QueryModule {
 
   // ------------------- C83: streaming funnel (stateful live twin)
   // Runs EventStreams.funnelStream as a real stream (AvailableNow over
-  // a parquet drop of the events table, memory sink), then keeps each
+  // a parquet drop of the events table, parquet sink), then keeps each
   // user's deepest emitted row. A single-batch run is exactly
   // batch-equal (events sort within the batch), so the oracle is the
   // SAME SQL as q_funnel — the streaming and batch formulations are
   // pinned to one another through DuckDB.
   private def qStreamFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.EventStreams
     // shared landed copy with q_stream_sessionize / q_stream_transitions
     // (same source, same projection, same file shape)
@@ -400,14 +399,11 @@ object AnalyticsQueries extends QueryModule {
           col("value"))
         .write.mode("overwrite").parquet(p)
     }
-    val res = ScaleQueries.withStatePartitions(
-      s, ScaleQueries.DefaultStatePartitions) {
-      ScaleQueries.runStream(s, EventStreams.funnelStream(
-        EventStreams.typedEvents(EventStreams.eventStream(s, inDir)),
-        Seq("view", "click", "purchase"), FunnelGapMicros)
-        .toDF("user_id", "n_steps", "ts_us"),
-        "append", "graft_funnel")
-    }
+    val res = ScaleQueries.runStream(s, EventStreams.funnelStream(
+      EventStreams.typedEvents(EventStreams.eventStream(s, inDir)),
+      Seq("view", "click", "purchase"), FunnelGapMicros)
+      .toDF("user_id", "n_steps", "ts_us"),
+      "append", "graft_funnel")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_steps").desc)
     res
@@ -534,19 +530,15 @@ object AnalyticsQueries extends QueryModule {
   // (reservoir survives the micro-batch boundary) is pinned in
   // StreamingSpec.
   private def qStreamQuota(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = docs(s, dir).select(col("doc_id"), col("source"))
     val inDir = graft.Scratch.landedDir(s"docs_src:$dir") { p =>
       src.coalesce(1).write.mode("overwrite").parquet(p)
     }
-    val res = ScaleQueries.withStatePartitions(
-      s, ScaleQueries.DefaultStatePartitions) {
-      ScaleQueries.runStream(s, graft.streaming.SampleStreams.quotaStream(
-        s.readStream.schema(src.schema).parquet(inDir),
-        "doc_id", "source", SampleQuota)
-        .toDF("source", "n_seen", "rank", "doc_id"),
-        "append", "graft_quota")
-    }
+    val res = ScaleQueries.runStream(s, graft.streaming.SampleStreams.quotaStream(
+      s.readStream.schema(src.schema).parquet(inDir),
+      "doc_id", "source", SampleQuota)
+      .toDF("source", "n_seen", "rank", "doc_id"),
+      "append", "graft_quota")
     // Latest-snapshot rule applied IN the query: the sink accumulates
     // one reservoir snapshot per micro-batch (append mode), and only
     // the rows from a stratum's final snapshot (max n_seen) are the
@@ -609,12 +601,11 @@ object AnalyticsQueries extends QueryModule {
 
   // ------------- C94: streaming transition matrix (stateful twin)
   // EventStreams.transitionStream as a real stream (AvailableNow over a
-  // parquet drop, memory sink), counts aggregated from the emitted
+  // parquet drop, parquet sink), counts aggregated from the emitted
   // pairs. A single-batch run is exactly batch-equal, so it pins
   // against the SAME oracle as q_transitions.
   private def qStreamTransitions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.EventStreams
     val inDir = graft.Scratch.landedDir(s"events5:$dir") { p =>
       events(s, dir)
@@ -622,13 +613,10 @@ object AnalyticsQueries extends QueryModule {
           col("value"))
         .write.mode("overwrite").parquet(p)
     }
-    ScaleQueries.withStatePartitions(
-      s, ScaleQueries.DefaultStatePartitions) {
-      ScaleQueries.runStream(s, EventStreams.transitionStream(
-        EventStreams.typedEvents(EventStreams.eventStream(s, inDir)))
-        .toDF("from_type", "to_type"),
-        "append", "graft_trans")
-    }
+    ScaleQueries.runStream(s, EventStreams.transitionStream(
+      EventStreams.typedEvents(EventStreams.eventStream(s, inDir)))
+      .toDF("from_type", "to_type"),
+      "append", "graft_trans")
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n_transitions"))
       .orderBy("from_type", "to_type")

@@ -223,7 +223,6 @@ object IndexingQueries extends QueryModule {
   // so an AvailableNow pass is exactly batch-equal — pinned to the
   // SAME oracle as q_bloom.
   private def qStreamBloom(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = docs(s, dir).filter(col("doc_id") < BloomCorpusMax)
       .select(col("doc_id"), col("text"))
     val inDir = graft.Scratch.landedDir(
@@ -233,10 +232,7 @@ object IndexingQueries extends QueryModule {
     val bits = Sketches.bloomBuild(
       s.readStream.schema(src.schema).parquet(inDir),
       "text", BloomBits, BloomHashes).bitmap
-    val res = ScaleQueries.withStatePartitions(
-      s, ScaleQueries.DefaultStatePartitions) {
-      ScaleQueries.runStream(s, bits, "complete", "graft_bloom")
-    }
+    val res = ScaleQueries.runStream(s, bits, "complete", "graft_bloom")
     Sketches.bloomMightContain(
       Sketches.BloomFilter(res, BloomBits, BloomHashes),
       docs(s, dir).select(col("doc_id"), col("text")), "text")

@@ -668,7 +668,6 @@ object RetrievalQueries extends QueryModule {
   // exactly batch-equal — pinned to the identical DuckDB oracle.
   private def qStreamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val d = docs(s, dir).select(col("doc_id"), col("text"))
     val inDir = graft.Scratch.landedDir(s"docs2:$dir") { p =>
       d.write.mode("overwrite").parquet(p)
@@ -677,10 +676,7 @@ object RetrievalQueries extends QueryModule {
       s.readStream.schema(d.schema).parquet(inDir)
         .select(explode(graft.ops.TextOps.tokens(col("text"))).as("tok")),
       "tok", CmD, CmW).cells
-    val res = ScaleQueries.withStatePartitions(
-      s, ScaleQueries.DefaultStatePartitions) {
-      ScaleQueries.runStream(s, cells, "complete", "graft_cm")
-    }
+    val res = ScaleQueries.runStream(s, cells, "complete", "graft_cm")
     Sketches.countMinEstimate(
       Sketches.CMSketch(res, CmD, CmW),
       CmProbes.toDF("tok"), "tok")

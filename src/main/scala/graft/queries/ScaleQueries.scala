@@ -1,8 +1,7 @@
 package graft.queries
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryModule, Tables}
@@ -309,128 +308,19 @@ object ScaleQueries extends QueryModule {
       |  CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 10 ELSE 0 END
       |ORDER BY doc_id""".stripMargin
 
-  // --------------------------------- C12/C17: streaming sessionization
-  // Runs the real Structured Streaming sessionizer (file source →
-  // flatMapGroupsWithState → memory sink, Trigger.AvailableNow) over the
-  // events table. Emitted sessions are the CLOSED ones — every session
-  // except each user's still-open last — which the oracle re-derives
-  // from the batch sessionization with a QUALIFY filter.
-  private[queries] val streamRun = new AtomicInteger(0)
-
-  /** One-slot registry for streaming MEMORY sinks. A memory sink
-    * retains its query's FULL output as a driver-side LocalRelation
-    * until the temp view is dropped; the driver queries mint a fresh
-    * sink name per call, so repeated calls in one JVM (bench samples,
-    * warm probes) accumulated every previous run's output — measured
-    * as 4-40x sample swings at 30x (q_stream_dedup samples
-    * 14→39→101→143 s as retained sinks GC-thrashed the driver).
-    * Each new sink drops the previous one: queries run serially in
-    * the bench/driver harness, and the previous result frame has
-    * always been consumed by then. Production pipelines use file/
-    * foreachBatch sinks (Materializer), not memory sinks — this is
-    * harness hygiene, same pattern as Dedup's guard-cache slot. */
-  private val lastMemorySink =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String)]()
-
-  private[queries] def trackSink(s: SparkSession, name: String): String = {
-    val prev = lastMemorySink.getAndSet((s, name))
-    if (prev != null) prev._1.catalog.dropTempView(prev._2)
-    name
-  }
-
-  /** One-slot registry for file-sink output dirs ([[runStream]] file
-    * mode): each run deletes the previous run's directory, same
-    * bounded-accumulation discipline as [[lastMemorySink]] — and the
-    * same SERIAL-CONSUMPTION contract: the returned frame is a LAZY
+  // ------------------------------------------- driver stream runner
+  /** One-slot registry for [[runStream]]'s sink directory: each call
+    * deletes the previous call's directory, so repeated driver runs in
+    * one JVM (bench samples, warm probes) keep at most one result on
+    * scratch. SERIAL-CONSUMPTION contract: the returned frame is a LAZY
     * read over this directory, so it must be fully consumed (collected
-    * or written) before the next [[runStream]] call, which reclaims
-    * the backing files. Interleaving two streaming queries before
-    * consuming the first result is out of contract on BOTH sink modes
-    * (the memory slot drops the previous temp view the same way); the
-    * Verify/Bench drivers are strictly serial. */
-  private val lastFileSink =
+    * or written) before the next [[runStream]] call, which reclaims the
+    * backing files. Interleaving two streaming queries before consuming
+    * the first result is out of contract; the Verify/Bench drivers are
+    * strictly serial. */
+  private val lastSinkDir =
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  /** Run a finite streaming query to completion and return its result.
-    *
-    * Default path: a MEMORY sink (driver-side result table) — the right
-    * harness shape at oracle scale, but at 30×/100× the driver-held
-    * rows re-parallelize as multi-MB task binaries when the result is
-    * sorted for output ("task of very large size" warnings polluting
-    * the streaming family's scale records). `SPARK_GRAFT_STREAM_SINK=
-    * file` switches to the PRODUCTION shape: `foreachBatch` landing
-    * each micro-batch as parquet, result read back distributed — rows
-    * never gather on the driver.
-    *
-    * Equivalence: the memory sink in append/update mode APPENDS each
-    * batch's emitted rows (no key-level replacement), which is exactly
-    * the per-batch parquet union; in complete mode it replaces the
-    * table per batch, so file mode keeps only the LAST batch. The
-    * single-batch guarantee the update-mode driver queries already
-    * rely on for oracle equality (input landed as one file) is
-    * unchanged by the sink. */
-  private[queries] def runStream(
-      s: SparkSession, df: DataFrame, mode: String,
-      name: String): DataFrame = {
-    val run = streamRun.incrementAndGet()
-    if (!sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("file")) {
-      val sink = trackSink(s, s"${name}_$run")
-      val q = df.writeStream.format("memory").queryName(sink)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(sink)
-    } else {
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_stream_${name}_$run").toString
-      val prev = lastFileSink.getAndSet(dir)
-      if (prev != null) deleteRecursively(new java.io.File(prev))
-      val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val land = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) => {
-        lastBatch.set(math.max(lastBatch.get, id))
-        batch.write.mode("overwrite").parquet(s"$dir/b$id")
-      }
-      val q = df.writeStream.outputMode(mode)
-        .option("checkpointLocation", s"$dir/_chk")
-        .foreachBatch(land)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val last = lastBatch.get
-      if (last < 0)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          df.schema)
-      else {
-        val dirs =
-          if (mode == "complete") Seq(s"$dir/b$last")
-          else (0L to last).map(i => s"$dir/b$i")
-            .filter(p => new java.io.File(p).exists)
-        s.read.schema(df.schema).parquet(dirs: _*)
-      }
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
-  /** Stateful streaming operators instantiate one state store per
-    * `spark.sql.shuffle.partitions` AT STREAM START (the attribution
-    * join: four stores per partition) — with 32 batch-sized partitions
-    * that's pure fixed overhead for these single-batch driver runs. Pin
-    * a key-cardinality-sized state layout for the stream's duration and
-    * restore the batch width after; results are partition-count
-    * independent (every one of these queries is oracle-pinned). On a
-    * real cluster this is the same knob, sized to stream key
-    * cardinality rather than batch shuffle width.
-    *
-    * The set/restore mutates the SESSION-global shuffle width for the
-    * stream's duration, so any query planned concurrently in the same
-    * session would silently pick up the narrowed width. Safe here
-    * because bench/driver runs are strictly sequential; if concurrent
-    * driver runs ever appear, scope the conf via a cloned
-    * SparkSession (`s.cloneSession()`) instead. */
   /** Stream-query state partition count. Swept at sf0.1 over the
     * 12-query streaming family (two rounds each, idle host):
     * 1→36.3/—, 2→20.7/—, 4→18.5/25.9, 8→16.3/23.3, 16→43.6,
@@ -441,43 +331,70 @@ object ScaleQueries extends QueryModule {
     * this SF; a production deployment sizes this to its state volume
     * (state stores scale out with partitions — the 100 TB posture is
     * MORE partitions, not fewer). */
-  private[queries] val DefaultStatePartitions = 8
+  private[graft] val DefaultStatePartitions = 8
 
-  private[queries] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    // SPARK_GRAFT_STATE_PARTITIONS overrides every stream's state
-    // partition count for A/B runs (state stores instantiate per
-    // partition per stateful operator — the dominant per-query fixed
-    // tax candidate at bench scale).
-    val eff = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb (or a full provider class
-    // name) swaps the state-store backend for A/B runs. The default
-    // HDFSBackedStateStoreProvider keeps every partition's state map
-    // ON-HEAP and lingers after query termination until the
-    // maintenance unload tick — the candidate cause of q_stream_dedup's
-    // positional warm spikes at 30× (millions of dedup keys per run
-    // GC-churning the driver-executor JVM). RocksDB keeps state
-    // off-heap — also the production posture for large-state streams.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach { p =>
-      s.conf.set(provKey, if (p == "rocksdb")
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else p)
+  /** Run a finite streaming query to completion and return its result.
+    *
+    * Every micro-batch lands as parquet through `foreachBatch` in a
+    * fresh [[graft.Scratch]] directory, and the result is read back
+    * distributed: output rows never gather on the driver heap (a memory
+    * sink holds them there, and OOMed an 8 GiB driver at 100×). Append
+    * and update modes return the union of every batch's emitted rows;
+    * complete mode re-emits the whole result table per batch, so it
+    * returns the last batch only. The directory name is unique per
+    * call, so no run — in this JVM or a later one — can resume another
+    * run's checkpoint.
+    *
+    * Stateful operators instantiate one state store per
+    * `spark.sql.shuffle.partitions` AT STREAM START (the attribution
+    * join: four stores per partition), so the stream runs at
+    * [[DefaultStatePartitions]] and the session's width is restored
+    * after, also when the stream throws; results are partition-count
+    * independent (every driver stream is oracle-pinned). The set/restore
+    * mutates the SESSION-global shuffle width for the stream's
+    * duration, so a query planned concurrently in the same session
+    * would pick up the narrowed width — safe because the driver runs
+    * are strictly sequential; concurrent callers would scope the conf
+    * through `s.cloneSession()` instead. */
+  private[graft] def runStream(
+      s: SparkSession, df: DataFrame, mode: String,
+      name: String): DataFrame = {
+    val dir = graft.Scratch.dir(s"graft_stream_${name}_")
+    val prev = lastSinkDir.getAndSet(dir)
+    if (prev != null) graft.Scratch.delete(prev)
+    val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val land = (batch: Dataset[Row], id: Long) => {
+      lastBatch.set(math.max(lastBatch.get, id))
+      batch.write.mode("overwrite").parquet(s"$dir/b$id")
     }
-    try body finally {
-      s.conf.set(key, prev)
-      if (sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"))
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
+    val width = "spark.sql.shuffle.partitions"
+    val prevWidth = s.conf.get(width)
+    s.conf.set(width, DefaultStatePartitions.toString)
+    try {
+      df.writeStream.outputMode(mode)
+        .option("checkpointLocation", s"$dir/_chk")
+        .foreachBatch(land)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    } finally s.conf.set(width, prevWidth)
+    val last = lastBatch.get
+    if (last < 0) s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema)
+    else {
+      val dirs =
+        if (mode == "complete") Seq(s"$dir/b$last")
+        else (0L to last).map(i => s"$dir/b$i")
+          .filter(p => new java.io.File(p).exists)
+      s.read.schema(df.schema).parquet(dirs: _*)
     }
   }
 
+  // --------------------------------- C12/C17: streaming sessionization
+  // Runs the real Structured Streaming sessionizer (file source →
+  // flatMapGroupsWithState → parquet sink via runStream,
+  // Trigger.AvailableNow) over the events table. Emitted sessions are
+  // the CLOSED ones — every session except each user's still-open last
+  // — which the oracle re-derives from the batch sessionization with a
+  // QUALIFY filter.
   private def qStreamSessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val inDir = graft.Scratch.landedDir(s"events5:$dir") { p =>
@@ -486,11 +403,10 @@ object ScaleQueries extends QueryModule {
           col("value"))
         .write.mode("overwrite").parquet(p)
     }
-    withStatePartitions(s, DefaultStatePartitions) {
-      runStream(s, EventStreams.sessionize(
-        EventStreams.typedEvents(EventStreams.eventStream(s, inDir))).toDF(),
-        "append", "graft_sessions")
-    }.orderBy("user_id", "session_start_us")
+    runStream(s, EventStreams.sessionize(
+      EventStreams.typedEvents(EventStreams.eventStream(s, inDir))).toDF(),
+      "append", "graft_sessions")
+      .orderBy("user_id", "session_start_us")
   }
 
   private val qStreamSessionizeSql =
@@ -531,11 +447,10 @@ object ScaleQueries extends QueryModule {
           col("value"))
         .coalesce(1).write.mode("overwrite").parquet(p)
     }
-    withStatePartitions(s, DefaultStatePartitions) {
-      runStream(s,
-        EventStreams.windowedCounts(EventStreams.eventStream(s, inDir)),
-        "update", "graft_win")
-    }.orderBy("window_start_us", "event_type")
+    runStream(s,
+      EventStreams.windowedCounts(EventStreams.eventStream(s, inDir)),
+      "update", "graft_win")
+      .orderBy("window_start_us", "event_type")
   }
 
   private val qStreamWindowLiveSql =
@@ -565,11 +480,10 @@ object ScaleQueries extends QueryModule {
       .join(Tables.load(s, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    withStatePartitions(s, DefaultStatePartitions) {
-      runStream(s, EventStreams.enrichedWindowedCounts(
-        EventStreams.eventStream(s, inDir), dim, "c_custkey", "n_name"),
-        "update", "graft_enrich")
-    }.orderBy("window_start_us", "n_name")
+    runStream(s, EventStreams.enrichedWindowedCounts(
+      EventStreams.eventStream(s, inDir), dim, "c_custkey", "n_name"),
+      "update", "graft_enrich")
+      .orderBy("window_start_us", "n_name")
   }
 
   private val qStreamEnrichSql =
@@ -638,13 +552,12 @@ object ScaleQueries extends QueryModule {
     val inDir = graft.Scratch.landedDir(s"events5c1dupes:$dir") { p =>
       base.unionByName(dupes).coalesce(1).write.mode("overwrite").parquet(p)
     }
-    withStatePartitions(s, DefaultStatePartitions) {
-      runStream(s, EventStreams.dedupStream(
-        EventStreams.eventStream(s, inDir), Seq("user_id", "event_type"))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("ts_us")),
-        "append", "graft_dedup")
-    }.orderBy("user_id", "event_type", "ts_us")
+    runStream(s, EventStreams.dedupStream(
+      EventStreams.eventStream(s, inDir), Seq("user_id", "event_type"))
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("ts_us")),
+      "append", "graft_dedup")
+      .orderBy("user_id", "event_type", "ts_us")
   }
 
   private val qStreamDedupSql =
@@ -672,15 +585,14 @@ object ScaleQueries extends QueryModule {
       ev.filter(col("event_type") === "click").coalesce(1)
         .write.mode("overwrite").parquet(p)
     }
-    withStatePartitions(s, DefaultStatePartitions) {
-      runStream(s, EventStreams.attributionJoin(
-        EventStreams.eventStream(s, pDir), EventStreams.eventStream(s, cDir),
-        lookbackMinutes = 60)
-        .select(col("purchase_id"), col("user_id"),
-          unix_micros(col("purchase_ts")).as("purchase_ts_us"),
-          col("click_id"), unix_micros(col("click_ts")).as("click_ts_us")),
-        "append", "graft_attr")
-    }.orderBy("purchase_id", "click_id")
+    runStream(s, EventStreams.attributionJoin(
+      EventStreams.eventStream(s, pDir), EventStreams.eventStream(s, cDir),
+      lookbackMinutes = 60)
+      .select(col("purchase_id"), col("user_id"),
+        unix_micros(col("purchase_ts")).as("purchase_ts_us"),
+        col("click_id"), unix_micros(col("click_ts")).as("click_ts_us")),
+      "append", "graft_attr")
+      .orderBy("purchase_id", "click_id")
   }
 
   private val qAttributionSql =

@@ -73,7 +73,7 @@ import java.nio.file.{Files, Paths}
   * batch-vs-stream equivalence on the watermarked operators. Each
   * round draws (window/slide/gap, key, watermark delay), runs the SAME
   * declarative aggregate once as a Structured Streaming query (file
-  * source, AvailableNow, memory sink) and once as a batch DataFrame,
+  * source, AvailableNow, parquet sink) and once as a batch DataFrame,
   * and requires identical result sets — the single-batch finite-input
   * reasoning the fixed q_stream_* oracle entries rely on, here
   * stress-tested across the parameter space (tumbling + sliding
@@ -669,18 +669,10 @@ object FuzzDiff {
         .coalesce(1).write.mode("overwrite").parquet(p)
     }
     val divergences = Seq.newBuilder[String]
-    var runId = 0
-    def runStreamLocal(df: DataFrame, mode: String): Array[Row] = {
-      runId += 1
-      val nm = s"fz_stream_$runId"
-      val q = df.writeStream.format("memory").queryName(nm).outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val rows = spark.table(nm).collect()
-      spark.catalog.dropTempView(nm)
-      rows
-    }
+    // the production driver sink: micro-batches land as parquet
+    def runStream(df: DataFrame, mode: String): Array[Row] =
+      graft.queries.ScaleQueries.runStream(spark, df, mode, "fz_stream")
+        .collect()
     def src(streaming: Boolean): DataFrame =
       (if (streaming) graft.streaming.EventStreams.eventStream(spark, inDir)
        else spark.read.parquet(inDir))
@@ -704,7 +696,7 @@ object FuzzDiff {
               .select(unix_micros(col("w.start")).as("ws"), col("k"),
                 col("n"), col("s"))
           }
-          val sRes = runStreamLocal(plan(src(true), true), "update")
+          val sRes = runStream(plan(src(true), true), "update")
             .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
               r.getLong(3))).toSet
           val bRes = plan(src(false), false).collect()
@@ -730,7 +722,7 @@ object FuzzDiff {
                 unix_micros(col("w.end")).as("we"), col("user_id"),
                 col("n"), col("s"))
           }
-          val sRes = runStreamLocal(plan(src(true), true), "complete")
+          val sRes = runStream(plan(src(true), true), "complete")
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
               r.getLong(3), r.getLong(4))).toSet
           val bRes = plan(src(false), false).collect()
@@ -747,7 +739,7 @@ object FuzzDiff {
           val keys =
             if (g.int(2) == 0) Seq("user_id", "event_type")
             else Seq("event_type")
-          val sRes = runStreamLocal(
+          val sRes = runStream(
             src(true).withWatermark("ts", s"$delay minutes")
               .dropDuplicates("ts" +: keys), "append")
             .map(r => keys.map(k => String.valueOf(r.getAs[Any](k)))
