@@ -113,15 +113,36 @@ object Tables {
     // `models` pass recompiled ~555 classes. Measured working sets per
     // JVM (4 vCPUs, seed 1, warm-up plus four passes): `models` 309
     // distinct classes, after which a pass compiles none; `catalog` 299,
-    // still growing by 38 per pass (q_stream_quota and q_hierarchy
-    // generate new code on every run). Memory: metaspace after those
-    // passes read 170 MB here against 178 MB at 100 for `models`, 177
-    // against 176 MB for `catalog`; a cached class costs little next to
-    // recompiling it. Spark builds the cache once per JVM, at the first
-    // codegen, from the active session's conf, so this works only
-    // because every session builder applies these configs before any
-    // query runs.
+    // then still growing by 38 per pass (the next setting and the plain
+    // counts in Graph.scala stopped most of that). Memory: metaspace
+    // after those passes read 170 MB here against 178 MB at 100 for
+    // `models`, 177 against 176 MB for `catalog`; a cached class costs
+    // little next to recompiling it. Spark builds the cache once per
+    // JVM, at the first codegen, from the active session's conf, so this
+    // works only because every session builder applies these configs
+    // before any query runs.
     "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // That cache is keyed by class loader too, and with artifact
+    // isolation on (Spark 4.1's default) every cloned session -- each
+    // stream, each `Checkpoints.loopSession` -- gets its own executor
+    // class loader, so its tasks recompile classes the JVM already
+    // holds. graft adds no artifacts; with isolation off, sessions share
+    // jars added by any of them. Measured, warm runs at sf0.01:
+    // q_attribution compiled 23 classes per run with isolation, 0
+    // without (PERF_NOTES.md).
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Every write runs through the local file system. Hadoop's, without
+    // libhadoop, starts a `chmod` process per file and directory and a
+    // `readlink` per `FileContext` rename: 1,148 processes in one
+    // `catalog` benchmark run, 9 with graft's (LocalFs.scala), which
+    // does both through java.nio. `.crc` files and the committer are
+    // Hadoop's, unchanged.
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName,
+    // No `_SUCCESS` marker: nothing reads it (a version is published by
+    // its pointer), and it costs a file, a `.crc` and their processes
+    // per write.
+    "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
     // Default streaming checkpoint base on RAM-backed scratch: without
     // it, every checkpoint-less stream (the bench/Verify AvailableNow
     // queries) puts its offset/commit logs and fsync'd state-store

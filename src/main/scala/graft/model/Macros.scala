@@ -51,13 +51,6 @@ object Macros {
     src.groupBy(groupBy.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** cdc_filter (macros.py:75-93): restrict to given operation types. */
-  def cdcFilter(
-      src: DataFrame,
-      operations: Seq[String] = Seq("I", "U", "D"),
-      changeTypeColumn: String = "__cdc_operation"): DataFrame =
-    src.filter(col(changeTypeColumn).isin(operations: _*))
-
   /** date_spine (the dbt_utils macro): one row per calendar day in
     * [start, end], for scaffolding gap-free daily models — left join
     * facts onto it so empty days appear (see q_date_spine). One

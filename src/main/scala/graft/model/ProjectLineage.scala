@@ -60,12 +60,6 @@ final class ProjectLineage(
     impacted.toSet
   }
 
-  /** Upstream-first path from sources to `model`
-    * (lineage.py:139-158 get_full_lineage_path). */
-  def fullPath(model: String): Seq[String] =
-    runner.graph.executionOrder(Some(Seq(model))).flatten
-      .filter(runner.modelSqlMap.contains)
-
   /** JSON export of the whole column graph
     * (lineage.py:160-180 export_lineage). */
   def toJson: String = {

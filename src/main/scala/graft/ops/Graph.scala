@@ -433,7 +433,9 @@ object Graph {
       roles.groupBy(col("x"))
         .agg(sum(col("ctr")).as("nc"), sum(col("lf")).as("nl"))
         .filter((col("nc") > 0 && col("nl") > 0) || col("nl") > 1)
-        .limit(1).count() == 0L
+        // A plain count, not `limit(1)`: a generated limit names its
+        // counter after a JVM-wide id, so every run would compile anew.
+        .count() == 0L
     }
     // Materialize the cleaned edge set once: the upstream (often a
     // scan + filter chain) must not replay under both the node
@@ -594,8 +596,9 @@ object Graph {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val h = nodes.select(col(idCol).as("id"), col(parentCol).as("anc"))
       .filter(col("id").isNotNull)
+    // A plain count, not `limit(1)`, as in connectedComponents.
     val dup = h.groupBy(col("id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1L).limit(1).count()
+      .filter(col("n") > 1L).count()
     require(dup == 0L,
       "flattenHierarchy: duplicate id rows — one parent per id required")
     val (state0, nodeCount) = graft.Checkpoints.truncateCount(

@@ -35,10 +35,6 @@ object Sampling {
     df.filter(hashBucket(col(idCol)) < pctExpr)
   }
 
-  /** RNG reservoir-style fraction sample (Spark-native, seeded). */
-  def randomSample(df: DataFrame, fraction: Double, seed: Long): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
-
   /** Stable uniform fraction in [0, 1) from the id's md5 (first 8 hex
     * digits — exact in a double, engine-portable). */
   def hashFrac(id: Column): Column =

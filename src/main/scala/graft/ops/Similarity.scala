@@ -149,15 +149,6 @@ object Similarity {
           s"cannot infer vector dimension: '$vecCol' has no non-null values")
       }
 
-  /** Random-hyperplane LSH bucket signature: one bit per plane — the
-    * sign of the projection onto a deterministic pseudo-random
-    * hyperplane. Cosine-similar vectors collide with high probability.
-    * Output: original columns + `bucket` (long, numPlanes bits). */
-  def lshBuckets(
-      df: DataFrame, vecCol: String, numPlanes: Int = 12): DataFrame =
-    df.withColumn("bucket",
-      planeSignature(col(vecCol), 0, numPlanes, vecDim(df, vecCol)))
-
   /** numPlanes sign-bits of the projection onto the planes of plane-set
     * `band` (plane indices are namespaced by band so every band uses an
     * independent set of hyperplanes). */

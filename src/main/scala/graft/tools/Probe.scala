@@ -11,9 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
 import scala.collection.mutable
 
 /** Where a query's warm time goes. Each query runs `runs` times in one
-  * session and every sample's wall time is printed: the early samples
-  * show the landing, codegen and JIT warm-up slope. The last sample is
-  * the measured one. It runs in three timed steps — build the
+  * session and every sample's wall time and number of classes compiled
+  * are printed: the early samples show the landing, codegen and JIT
+  * warm-up slope, and a warm sample should compile nothing. The last
+  * sample is the measured one. It runs in three timed steps — build the
   * DataFrame; force `executedPlan` (optimization, physical planning);
   * execute that same plan, so the SQL metrics belong to the timed run —
   * and one [[Listener]] reports, from that evaluation alone:
@@ -196,6 +197,14 @@ object Probe {
     }
   }
 
+  /** `body`'s result and the number of classes codegen compiled in it. */
+  private def compiled[A](body: => A): (A, Long) = {
+    val c = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = c.getCount
+    val a = body
+    (a, c.getCount - before)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Probe <sfDir> <runs> <query ...>")
     val dir = args(0)
@@ -208,11 +217,12 @@ object Probe {
       val fn = graft.SparkEntry.queries(name)
       println(s"\n===== $name =====")
       (1 until runs).foreach { i =>
-        println(f"  sample $i: ${evaluate(fn(spark, dir))._1.sec}%.2f s")
+        val ((split, _), n) = compiled(evaluate(fn(spark, dir)))
+        println(f"  sample $i: ${split.sec}%.2f s, $n classes compiled")
       }
-      val ((split, plan), profile) =
-        listener.measure(spark)(evaluate(fn(spark, dir)))
-      println(f"  sample $runs: ${split.sec}%.2f s (measured)")
+      val (((split, plan), profile), n) =
+        compiled(listener.measure(spark)(evaluate(fn(spark, dir))))
+      println(f"  sample $runs: ${split.sec}%.2f s, $n classes compiled (measured)")
       report(split, profile, plan)
     }
     spark.stop()

@@ -92,6 +92,22 @@ class TablesSpec extends SparkSpec {
     assert(compiles(plans()) == 0)
   }
 
+  test("a query rerun on a new cloned session compiles nothing") {
+    // Each stream and each Checkpoints.loopSession runs in a new clone;
+    // a clone's warm rerun must find the classes compiled for the last.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = {
+      val clone = Checkpoints.loopSession(spark, rows = 10)
+      assert(!(clone eq spark))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      clone.range(1000).selectExpr("id * 7919 % 13 AS k").groupBy("k").count()
+        .collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiles() > 0)
+    assert(compiles() == 0)
+  }
+
   test("Scratch.invalidateLandings drops matching memoized landings") {
     var builds = 0
     def land() = Scratch.landedDir("tbl_spec:/some/dir") { p =>
