@@ -9,7 +9,10 @@
 # tree, both builds and every run's output (default: a new temp dir).
 # Prints each pair's end-to-end metrics, each side's median and IQR, and
 # per metric how many pairs each side won (in the metric's `better`
-# direction from BENCHMARK.json; ties count for neither side).
+# direction from BENCHMARK.json; ties count for neither side), and each
+# side's median `setup.register_s` and `setup.warmup_s`, the parts of
+# `setup_s` that the code under test spends (read from the full record,
+# the line before the last).
 set -u
 SELF="$(cd "$(dirname "$0")" && pwd)/$(basename "$0")"
 usage() { sed -n '2,12p' "$SELF" >&2; exit 2; }
@@ -48,17 +51,21 @@ out, pairs = sys.argv[1], int(sys.argv[2])
 better = {m["name"]: m["better"] for m in json.load(open("BENCHMARK.json"))["end_to_end"]}
 names = list(better)
 runs = {"base": [], "change": []}
+setup = {"base": [], "change": []}  # (register_s, warmup_s) per run
 both = []  # (base, change) metrics of each pair where both sides ran
 for i in range(1, pairs + 1):
     line, pair = [f"pair {i}"], {}
     for side in runs:
         try:
-            rec = json.loads(open(f"{out}/{side}-{i}.out").read().splitlines()[-1])
-        except (OSError, IndexError, ValueError):
+            lines = open(f"{out}/{side}-{i}.out").read().splitlines()
+            rec = json.loads(lines[-1])
+            st = json.loads(lines[-2])["setup"]
+        except (OSError, IndexError, ValueError, KeyError):
             line.append(f"{side}: no result")
             continue
         m = {n: rec["metrics"][n]["value"] for n in names}
         runs[side].append(m)
+        setup[side].append((statistics.median(st["register_s"]), st["warmup_s"]))
         pair[side] = m
         vals = " ".join(f"{n}={m[n]:.3f}" for n in names)
         line.append(f"{side}: {vals}" + ("" if rec["correct"] else " INCORRECT"))
@@ -75,6 +82,9 @@ for side, ms in runs.items():
         q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
         stats.append(f"{n}={q[1]:.3f} (IQR {q[2] - q[0]:.3f})")
     print(f"{side} median over {len(ms)} runs: " + " ".join(stats))
+    reg, warm = zip(*setup[side])
+    print(f"{side} setup medians: register_s={statistics.median(reg):.3f} "
+          f"warmup_s={statistics.median(warm):.3f}")
 # A side wins a pair on a metric when its value is better in the metric's
 # direction; ties count for neither side.
 wins = []

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftext.Bridge
 
 /** Benchmark entrypoint. Prints ONE JSON line the driver records as
   * BENCH_rN.json. Hardened so the record stands on its own:
@@ -282,7 +283,7 @@ object Bench {
     val loadStart = loadAvg()
     // JVM/codegen warmup so the first measured query isn't charged for it.
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Bridge.readParquet(spark, s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()
     } catch { case scala.util.control.NonFatal(_) => () }
     // Optional args: query names to bench (default: all).

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftext.Bridge
 import graft.model._
 
 /** Project CLI — the Spark re-expression of the reference's click CLI
@@ -284,7 +285,7 @@ object Cli {
         val rendered = SqlTemplate.render(
           stmt, "adhoc_sql",
           resolveRef = m => wh.relation(m),
-          resolveSource = (s, t) => runner.sources.getOrElse((s, t),
+          resolveSource = (s, t) => runner.sourceRelation(s, t).getOrElse(
             throw new ConfigError(s"unknown source $s.$t")),
           isIncremental = false,
           variables = vars)
@@ -327,12 +328,10 @@ object Cli {
             .map(t => to_timestamp(lit(t))).getOrElse(current_timestamp())
           var worst = "ok"
           checkable.foreach { s =>
-            // identifier: a path reads as parquet, a bare name resolves
-            // in the session catalog (tableExists would choke parsing a
-            // path identifier)
-            val df =
-              if (s.identifier.contains("/")) spark.read.parquet(s.identifier)
-              else spark.table(s.identifier)
+            // a path reads as parquet, a bare name resolves in the
+            // session catalog (tableExists would choke parsing a path)
+            val df = SchemaYaml.parquetPath(s.sqlRelation)
+              .fold(spark.table(s.identifier))(Bridge.readParquet(spark, _))
             val (warnS, errS) = s.effectiveWindows
             val row = Freshness.checkTable(
               df, s.loadedAtField.get, asOf, warnS, errS).head()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.Bridge
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
@@ -37,7 +38,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
     purgeStopped()
     loadCache.computeIfAbsent((spark, dir, table), _ => {
-      val df = spark.read.parquet(path(dir, table))
+      val df = Bridge.readParquet(spark, path(dir, table))
       df.schema.find(_.name == "ts").map(_.dataType) match {
         case Some(LongType) =>
           df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -48,8 +49,8 @@ object Tables {
     })
   }
 
-  // `spark.read.parquet` lists files and reads footers for schema on
-  // EVERY call — ~30-80 ms per table, and Verify/Bench construct each
+  // A parquet read lists the files and reads a footer on EVERY call —
+  // ~30-80 ms per table, and Verify/Bench construct each
   // query fresh (twice per bench sample), so the probes dominated the
   // small-SF per-query intercept (registerAll alone measured 0.85 s).
   // The testdata is immutable for a session's lifetime, so the plan

@@ -88,8 +88,9 @@ final class Materializer(wh: Warehouse) {
   /** First load (or forced full refresh) of an incremental/CDC model: a
     * fresh version of `df` in the model's partition layout. Returns the
     * status. */
-  private def initialLoad(cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): String = {
-    wh.writeVersion(cfg.name, df, partitionCols(cfg))
+  private def initialLoad(cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean,
+      incremental: Map[String, String] = Map.empty): String = {
+    wh.writeVersion(cfg.name, df, partitionCols(cfg), incremental)
     if (fullRefresh) "full_refresh" else "initial_load"
   }
 
@@ -99,7 +100,9 @@ final class Materializer(wh: Warehouse) {
     * actually ingested (exact, unlike the reference's wall-clock stamp —
     * no rows can fall between watermark and now). The batch max is taken
     * before the write: a NULL max means an empty batch, which appends
-    * nothing and leaves version and watermark untouched. */
+    * nothing and leaves version and watermark untouched. The watermark
+    * rides the version commit, so a crash cannot leave new rows current
+    * under the old watermark. */
   private def timeIncremental(
       cfg: ModelConfig, df: DataFrame, fullRefresh: Boolean): MaterializeResult = {
     val tc = cfg.timeColumn.get
@@ -111,13 +114,13 @@ final class Materializer(wh: Warehouse) {
     }
     // O(batch), not O(table)
     val mx = batch.agg(max(col(tc)).cast("string")).head().getString(0)
+    val watermark = Option(mx).map(WatermarkKey -> _).toMap
     val status =
-      if (initial) initialLoad(cfg, batch, fullRefresh)
+      if (initial) initialLoad(cfg, batch, fullRefresh, watermark)
       else {
-        if (mx != null) wh.append(cfg.name, batch)
+        if (mx != null) wh.append(cfg.name, batch, watermark)
         "appended"
       }
-    if (mx != null) wh.state.setWatermark(cfg.name, WatermarkKey, mx)
     MaterializeResult(cfg.name, "incremental_time", status = status)
   }
 

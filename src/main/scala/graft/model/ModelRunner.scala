@@ -2,6 +2,7 @@ package graft.model
 
 import graft.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.Bridge
 import java.util.concurrent.LinkedBlockingQueue
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -105,10 +106,33 @@ final class ModelRunner(
     SqlTemplate.render(
       sql, name,
       resolveRef = m => wh.relation(m),
-      resolveSource = (s, t) => sources.getOrElse((s, t),
+      resolveSource = (s, t) => sourceRelation(s, t).getOrElse(
         throw new ConfigError(s"unknown source $s.$t", Map("model" -> name))),
       isIncremental = incremental,
       variables = variables)
+
+  // Each parquet path source as a temp view over the parquet reader,
+  // created once per run: every model of the run reads one listing of
+  // it, and analysing a model starts no schema job. Cleared when a run
+  // starts, so each run sees the files landed before it; filled lazily
+  // by rendering, so renders outside a run (the CLI's hydrate) resolve
+  // the same way.
+  private val sourceViews = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The relation `{{ source(s, t) }}` renders to: the declared relation,
+    * or for a `parquet.`path`` one ([[SchemaYaml.parquetPath]]) a temp
+    * view over [[Bridge.readParquet]]. None when `s.t` is not declared. */
+  def sourceRelation(s: String, t: String): Option[String] =
+    sources.get((s, t)).map { rel =>
+      SchemaYaml.parquetPath(rel).fold(rel) { path =>
+        sourceViews.computeIfAbsent(path, _ => {
+          val tag = scala.util.hashing.MurmurHash3.stringHash(path) & 0x7fffffff
+          val view = f"graft_source_${t.replaceAll("\\W", "_")}_$tag%08x"
+          Bridge.readParquet(wh.spark, path).createOrReplaceTempView(view)
+          view
+        })
+      }
+    }
 
   /** Render one hook statement against the same template surface as the
     * model body ({{ this }} resolves to the model's own relation) and
@@ -142,16 +166,16 @@ final class ModelRunner(
     * the model — run()'s failure path records the failed execution in
     * state and blocks dependents — and warn-severity ones only report;
     * then the success is recorded in state with the change-detection
-    * hashes. */
+    * hashes, in one state write. */
   private def finishModel(name: String, cfg: ModelConfig,
       result: MaterializeResult): MaterializeResult = {
     val outcomes = runModelTests(name)
     val hard = outcomes.filter(o => !o.passed && o.severity == "error")
     if (hard.nonEmpty) throw new ModelRunner.ModelTestFailure(name, hard)
     val now = java.time.Instant.now().toString
-    wh.state.markExecution(name, success = true, now)
-    wh.state.setHashes(name,
-      StateStore.sha256(modelSql(name)), StateStore.sha256(cfg.toString))
+    wh.state.update(name)(_.executed(success = true, now).copy(
+      fileHash = StateStore.sha256(modelSql(name)),
+      configHash = StateStore.sha256(cfg.toString)))
     val warned = outcomes.count(o => !o.passed)
     if (warned == 0) result
     else result.copy(status = s"${result.status} ($warned test warnings)")
@@ -282,6 +306,7 @@ final class ModelRunner(
       else if (modelSql.contains(m) && modelCfg(m).enabled) ready += m
       else finish(m)
     runErrors.clear()
+    sourceViews.clear()
     order.filter(waitingOn(_) == 0).foreach(enqueue)
     val workers = math.max(1, parallelism)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)

@@ -52,7 +52,8 @@ final case class SourceTableSpec(
     warnAfterS: Option[Long] = None, errorAfterS: Option[Long] = None) {
   def qualified: String = s"$source.$table"
   /** What `source()` renders into SQL: a path identifier becomes
-    * Spark's path-table syntax, a bare name stays a catalog relation. */
+    * Spark's path-table syntax, a bare name stays a catalog relation.
+    * [[SchemaYaml.parquetPath]] decodes the path form. */
   def sqlRelation: String =
     if (identifier.contains("/")) s"parquet.`$identifier`" else identifier
   /** Checkable = a timestamp column plus at least one threshold. */
@@ -326,6 +327,15 @@ object SchemaYaml {
       }
       acc ++ parsed
     }
+
+  /** The parquet path of a `parquet.`path`` relation
+    * ([[SourceTableSpec.sqlRelation]]'s path form); None for any other. */
+  def parquetPath(relation: String): Option[String] = relation match {
+    case ParquetRelation(path) => Some(path)
+    case _ => None
+  }
+
+  private val ParquetRelation = "parquet\\.`(.+)`".r
 
   /** Every `sources:` declaration under `dir` (same file walk as
     * [[loadDir]]); duplicate (source, table) across files is loud. */

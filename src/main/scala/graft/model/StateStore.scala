@@ -20,7 +20,15 @@ final case class ModelState(
     successCount: Long = 0,
     failureCount: Long = 0,
     currentVersion: Long = 0,
-    incremental: Map[String, String] = Map.empty)
+    incremental: Map[String, String] = Map.empty) {
+
+  /** This state with one more execution, at `nowIso`, counted. */
+  def executed(success: Boolean, nowIso: String): ModelState = copy(
+    lastExecuted = Some(nowIso),
+    executionCount = executionCount + 1,
+    successCount = successCount + (if (success) 1 else 0),
+    failureCount = failureCount + (if (success) 0 else 1))
+}
 
 final class StateStore(stateDir: Path, environment: String = "dev") {
   private val mapper = new ObjectMapper().enable(SerializationFeature.INDENT_OUTPUT)
@@ -81,13 +89,7 @@ final class StateStore(stateDir: Path, environment: String = "dev") {
     }
 
   def markExecution(model: String, success: Boolean, nowIso: String): Unit =
-    update(model) { s =>
-      s.copy(
-        lastExecuted = Some(nowIso),
-        executionCount = s.executionCount + 1,
-        successCount = s.successCount + (if (success) 1 else 0),
-        failureCount = s.failureCount + (if (success) 0 else 1))
-    }
+    update(model)(_.executed(success, nowIso))
 
   /** state.py:241-266 — a model changed if either hash differs or it has
     * never been executed. */
@@ -96,12 +98,6 @@ final class StateStore(stateDir: Path, environment: String = "dev") {
       case None => true
       case Some(s) => s.fileHash != fileHash || s.configHash != configHash
     }
-
-  def setHashes(model: String, fileHash: String, configHash: String): Unit =
-    update(model)(_.copy(fileHash = fileHash, configHash = configHash))
-
-  def setWatermark(model: String, key: String, value: String): Unit =
-    update(model)(s => s.copy(incremental = s.incremental.updated(key, value)))
 
   def watermark(model: String, key: String): Option[String] =
     states.get(model).flatMap(_.incremental.get(key))

@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.graftext.Bridge
-import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed model storage with versioned directories and an atomic
   * current-version pointer (kept in the StateStore).
@@ -57,19 +56,9 @@ final class Warehouse(
   private val catalogTableCache =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
-  // The data-column schema (partition columns left out) of the files each
-  // non-bucketed version holds, per (model, version), remembered by the
-  // commit that wrote them. Like the catalog cache it assumes only this
-  // warehouse writes the model.
-  private val dataSchemas =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), StructType]
-
-  /** The model's current version as a DataFrame. A version this warehouse
-    * wrote with one data schema is read with that schema given, so Spark
-    * starts no job to infer it from a parquet footer; the partition
-    * columns are still inferred from the `c=v` directories, as are all
-    * columns of a version with no remembered schema (one written by
-    * another process, or an append whose batch changed the columns). */
+  /** The model's current version as a DataFrame, read through
+    * [[Bridge.readParquet]], so no Spark job infers its schema in any
+    * process. */
   def read(model: String): DataFrame =
     readVersion(model, currentVersion(model).getOrElse(
       throw new StateError(s"model '$model' not materialized")))
@@ -81,28 +70,29 @@ final class Warehouse(
     val isCatalog = catalogTableCache.getOrElseUpdate(tbl,
       spark.catalog.tableExists(tbl))
     if (isCatalog) spark.table(tbl)
-    else dataSchemas.get((model, v))
-      .fold(spark.read)(spark.read.schema(_))
-      .parquet(versionDir(model, v).toString)
+    else Bridge.readParquet(spark, versionDir(model, v).toString)
   }
 
   /** The one version commit every write goes through: clear a `v<next>`
-    * that a rolled-back run left behind, let `write` fill it and return
-    * the data schema of the files it leaves there (None: unknown, reads
-    * infer it), read it back, then flip the pointer and register the view.
-    * A version that cannot be read is dropped and the pointer stays on
-    * the previous one. Old versions are retained for time-travel/debug
-    * until [[vacuum]]. */
-  private def commit(model: String)(write: Long => Option[StructType]): Unit = {
+    * that a rolled-back run left behind, let `write` fill it, read it
+    * back, then flip the pointer and register the view. The pointer flip
+    * also merges `incremental` (a watermark) into the model's state, in
+    * the same state write, so no crash can separate the two. A version
+    * that cannot be read is dropped and the pointer stays on the previous
+    * one. Old versions are retained for time-travel/debug until
+    * [[vacuum]]. */
+  private def commit(model: String, incremental: Map[String, String])(
+      write: Long => Unit): Unit = {
     val next = currentVersion(model).getOrElse(0L) + 1
     if (Files.exists(versionDir(model, next))) dropVersion(model, next)
-    write(next).foreach(dataSchemas((model, next)) = _)
+    write(next)
     // Only a bucketed write registers a catalog table (and caches `true`).
     catalogTableCache.putIfAbsent(catalogName(model, next), false)
     val df = try readVersion(model, next) catch {
       case NonFatal(e) => dropVersion(model, next); throw e
     }
-    state.update(model)(_.copy(currentVersion = next))
+    state.update(model)(s =>
+      s.copy(currentVersion = next, incremental = s.incremental ++ incremental))
     df.createOrReplaceTempView(relation(model))
   }
 
@@ -111,37 +101,17 @@ final class Warehouse(
     if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
   }
 
-  /** The schema a scan reports for the data columns of `df` written in
-    * the `partitionBy` layout: `df`'s columns minus the partition
-    * columns, all nullable. */
-  private def dataSchema(df: DataFrame, partitionBy: Seq[String]): StructType = {
-    val resolver = spark.sessionState.conf.resolver
-    Bridge.asNullable(StructType(
-      df.schema.filterNot(f => partitionBy.exists(resolver(_, f.name)))))
-  }
-
-  /** The data schema of a version that adds `df`'s files (in the
-    * `partitionBy` layout) to those carried from version `prev`: known
-    * only when it equals `prev`'s remembered one, so that every file
-    * holds the same columns. */
-  private def sameDataSchema(model: String, prev: Long, df: DataFrame,
-      partitionBy: Seq[String]): Option[StructType] =
-    Some(dataSchema(df, partitionBy)).filter(dataSchemas.get((model, prev)).contains)
-
   /** Write a full new version and flip the pointer. Partitioning columns
     * (e.g. a date column for incremental models) keep scans prunable at
-    * scale. */
+    * scale. `incremental` entries join the model's state with the pointer
+    * (see [[commit]]). */
   def writeVersion(
       model: String,
       df: DataFrame,
-      partitionBy: Seq[String] = Nil): Unit =
-    commit(model) { v =>
-      val dir = versionDir(model, v)
-      parquetWriter(df, SaveMode.Overwrite, partitionBy).parquet(dir.toString)
-      // An empty partitioned write leaves no `c=v` directory to infer the
-      // partition columns from; its reads keep failing inference.
-      Some(dataSchema(df, partitionBy))
-        .filter(_ => partitionBy.isEmpty || partitionColumns(dir).nonEmpty)
+      partitionBy: Seq[String] = Nil,
+      incremental: Map[String, String] = Map.empty): Unit =
+    commit(model, incremental) { v =>
+      parquetWriter(df, SaveMode.Overwrite, partitionBy).parquet(versionDir(model, v).toString)
     }
 
   /** Bucketed (CLUSTERED BY) version write: the model lands hash-bucketed
@@ -161,14 +131,13 @@ final class Warehouse(
       sortCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty && numBuckets > 0, "bucket spec required")
-    commit(model) { v =>
+    commit(model, Map.empty) { v =>
       val w = parquetWriter(df, SaveMode.Overwrite, partitionBy).format("parquet")
         .option("path", versionDir(model, v).toString)
         .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
         .saveAsTable(catalogName(model, v))
       catalogTableCache(catalogName(model, v)) = true
-      None
     }
   }
 
@@ -254,11 +223,10 @@ final class Warehouse(
       changedRelPaths: Set[String]): Unit = {
     val prevV = currentVersion(model).getOrElse(
       throw new StateError(s"model '$model' has no current version"))
-    commit(model) { v =>
+    commit(model, Map.empty) { v =>
       val dir = versionDir(model, v)
       parquetWriter(df, SaveMode.Overwrite, partCols).parquet(dir.toString)
       carryForward(versionDir(model, prevV), dir, "", changedRelPaths)
-      sameDataSchema(model, prevV, df, partCols)
     }
   }
 
@@ -302,17 +270,17 @@ final class Warehouse(
     * hide its root files from reads) — O(batch) data + one link per
     * existing file, or a copy of each where links are unsupported (see
     * [[linkTree]]). The previous version stays immutable, so an atomic
-    * run can abandon the new one by restoring the pointer. */
-  def append(model: String, df: DataFrame): Unit = {
-    val prevV = currentVersion(model).getOrElse(
-      throw new StateError(s"cannot append to missing model '$model'"))
-    val prev = versionDir(model, prevV)
+    * run can abandon the new one by restoring the pointer. `incremental`
+    * entries join the model's state with the pointer (see [[commit]]). */
+  def append(model: String, df: DataFrame,
+      incremental: Map[String, String] = Map.empty): Unit = {
+    val prev = versionDir(model, currentVersion(model).getOrElse(
+      throw new StateError(s"cannot append to missing model '$model'")))
     val layout = partitionColumns(prev)
-    commit(model) { v =>
+    commit(model, incremental) { v =>
       val dir = versionDir(model, v)
       linkTree(prev, dir)
       parquetWriter(df, SaveMode.Append, layout).parquet(dir.toString)
-      sameDataSchema(model, prevV, df, layout)
     }
   }
 
@@ -377,11 +345,10 @@ final class Warehouse(
   }
 
   /** Delete one version: its external catalog entry (bucketed versions)
-    * first, then its remembered schema and its files. */
+    * first, then its files. */
   private def dropVersion(model: String, v: Long): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS ${catalogName(model, v)}")
     catalogTableCache.remove(catalogName(model, v))
-    dataSchemas.remove((model, v))
     withStream(Files.walk(versionDir(model, v)))(_.toSeq.reverse.foreach(Files.delete))
   }
 

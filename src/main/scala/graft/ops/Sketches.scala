@@ -24,7 +24,7 @@ object Sketches {
     * SAME geometry or they silently undercount (probe cells land mod a
     * different w), which is why the geometry travels with the cells
     * instead of being re-supplied by the caller. Persist `cells` like
-    * any DataFrame and rewrap: `CMSketch(spark.read.parquet(p), d, w)`. */
+    * any DataFrame and rewrap: `CMSketch(Bridge.readParquet(spark, p), d, w)`. */
   final case class CMSketch(cells: DataFrame, d: Int, w: Int) {
     require(d > 0 && w > 0, "count-min needs positive depth and width")
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Bridge
 import graft.{QueryModule, Tables}
 import graft.ops.{Curation, Dedup, Retrieval, Sampling, Similarity, Sketches}
 
@@ -62,7 +63,7 @@ object IndexingQueries extends QueryModule {
         .write.mode("overwrite").parquet(path)
       path
     })
-    Similarity.pqSearchWide(s.read.parquet(store),
+    Similarity.pqSearchWide(Bridge.readParquet(s, store),
       e.filter(col("vec_id") < PqQueryCount),
       "vec_id", "vec_id", "embedding",
       TrainingPrepQueries.PqM, TrainingPrepQueries.PqK,

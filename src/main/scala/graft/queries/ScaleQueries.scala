@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryModule, Tables}
 import graft.model.{Materializer, ModelConfig, StateStore, Warehouse}
@@ -635,7 +636,7 @@ object ScaleQueries extends QueryModule {
       scratchDir("graft_ivf_ck_"),
       trigger = Some(Trigger.AvailableNow()))
     q.awaitTermination()
-    s.read.parquet(idxDir)
+    Bridge.readParquet(s, idxDir)
       .select(col("neighbor_id").as("vec_id"), col("cell").cast("int").as("cell"))
       .orderBy("vec_id")
   }

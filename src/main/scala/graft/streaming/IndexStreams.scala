@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.Bridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.ops.Similarity
 
@@ -43,6 +44,6 @@ object IndexStreams {
       queries: DataFrame, queryIdCol: String, vecCol: String,
       k: Int, nProbe: Int,
       centroids: Array[(Int, List[Double])]): DataFrame =
-    Similarity.probeCells(spark.read.parquet(indexDir),
+    Similarity.probeCells(Bridge.readParquet(spark, indexDir),
       queries, queryIdCol, vecCol, k, nProbe, centroids)
 }

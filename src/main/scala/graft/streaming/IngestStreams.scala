@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftext.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{Dedup, IngestPipeline, TextOps}
@@ -63,7 +64,7 @@ object IngestStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val art = spark.read.parquet(artifactDir)
+        val art = Bridge.readParquet(spark, artifactDir)
         val out = IngestPipeline.ingest(
           batch, art.select(col("fingerprint")),
           sigView(art, idCol, numHashes), weights, idCol, textCol,

@@ -675,7 +675,7 @@ object FuzzDiff {
         .collect()
     def src(streaming: Boolean): DataFrame =
       (if (streaming) graft.streaming.EventStreams.eventStream(spark, inDir)
-       else spark.read.parquet(inDir))
+       else org.apache.spark.sql.graftext.Bridge.readParquet(spark, inDir))
         .filter(col("ts").isNotNull && col("user_id").isNotNull)
     (0 until rounds).foreach { i =>
       g.int(3) match {

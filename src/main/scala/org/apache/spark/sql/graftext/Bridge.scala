@@ -1,12 +1,19 @@
 package org.apache.spark.sql.graftext
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.{SortOrder => SortNode}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Minimal bridge into Spark's `private[sql]` surface: wrapping a custom
   * LogicalPlan (graft.plans.AsOfJoinNode) in a Dataset requires
@@ -14,9 +21,9 @@ import org.apache.spark.sql.types.StructType
   * `col("quality").desc`) into its ordered-by child + direction requires
   * the Column's internal ColumnNode — both of which Spark scopes to its
   * own package. The same technique Spark-native table formats and
-  * connectors use for their custom operators. Nothing else from the
-  * internal API is touched, and this object contains almost no logic of
-  * its own.
+  * connectors use for their custom operators. The one piece of logic of
+  * its own is [[parquetSchema]], which reads a parquet schema the way
+  * Spark's inference does, with Spark's footer reader and converter.
   */
 object Bridge {
 
@@ -33,10 +40,53 @@ object Bridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
-  /** `schema` with every field, nested ones included, nullable — what a
-    * file scan reports for it (`StructType.asNullable` is
-    * private[spark]). */
-  def asNullable(schema: StructType): StructType = schema.asNullable
+  /** `spark.read.parquet(dir)` with its data schema given, so no Spark job
+    * infers it: the one way graft reads a parquet directory. Spark still
+    * lists the files and infers the partition columns from `c=v`
+    * directories. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame =
+    parquetSchema(spark, dir).fold(spark.read)(spark.read.schema(_)).parquet(dir)
+
+  /** The data schema Spark's parquet inference gives `dir` (`mergeSchema`
+    * off), read on the driver from the one footer inference would read:
+    * `_common_metadata`, else `_metadata` (looked for at the root, where
+    * Parquet's job summary writes them), else the first data file by full
+    * path, among the files Spark's listing keeps. That file is found by
+    * descending the sorted directories, not by listing the whole tree.
+    * None, and the read infers as Spark does, with Spark's own errors,
+    * when no such file exists or its footer cannot be read, or when the
+    * session merges schemas, which needs every footer. */
+  def parquetSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    def listed(p: Path): Seq[FileStatus] = p.getFileSystem(hadoopConf).listStatus(p).toSeq
+      .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+    // Every path under directory `d` sorts as `d/...`, so ordering the
+    // entries by name, a directory's name followed by '/', orders them as
+    // their first paths do.
+    def firstDataFile(entries: Seq[FileStatus]): Option[FileStatus] =
+      entries.sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else ""))
+        .iterator.flatMap { s =>
+          if (s.isDirectory) firstDataFile(listed(s.getPath))
+          else Some(s).filterNot(f => summaries.contains(f.getPath.getName))
+        }.nextOption()
+    // The converter settings Spark's inference passes; the rest default.
+    def footerSchema(f: FileStatus): StructType = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(conf.isParquetBinaryAsString,
+        conf.isParquetINT96AsTimestamp, inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+    if (conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val top = listed(new Path(dir))
+      summaries.flatMap(n => top.find(s => s.isFile && s.getPath.getName == n)).headOption
+        .orElse(firstDataFile(top)).map(footerSchema)
+    } catch { case NonFatal(_) => None }
+  }
 
   /** Block until every queued listener event has been delivered
     * (`listenerBus.waitUntilEmpty` is private[spark]). Metrics harnesses

@@ -20,6 +20,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   protected def sampleLoad(): Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** Spark jobs the calling thread starts while running `body`. */
+  protected def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try body
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    started.get
+  }
+
   /** Wall-clock bound for perf guards, scaled by PRE-RUN host
     * contention so a busy driver machine doesn't turn a perf assertion
     * into a red correctness gate (round-6 lesson: load avg 6 inflated

@@ -61,6 +61,16 @@ class TablesSpec extends SparkSpec {
     assert(b.count() == a.count())
   }
 
+  test("registerAll after invalidate starts no job") {
+    Tables.invalidate(sfDir)
+    assert(jobsDuring(Tables.registerAll(spark, sfDir)) == 0)
+    Tables.names.foreach { t =>
+      val path = Tables.path(sfDir, t)
+      assert(org.apache.spark.sql.graftext.Bridge.readParquet(spark, path).schema ==
+        spark.read.parquet(path).schema, t)
+    }
+  }
+
   test("stopped sessions' cache entries are purged on access") {
     val clone = org.apache.spark.sql.graftext.Bridge.cloneSession(spark)
     // seed an entry keyed by the clone; registered views too

@@ -205,11 +205,11 @@ class StateStoreSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_state_")
     val st = new StateStore(dir)
     assert(st.hasChanged("m", "h1", "c1"))
-    st.setHashes("m", "h1", "c1")
+    st.update("m")(_.copy(fileHash = "h1", configHash = "c1"))
     assert(!st.hasChanged("m", "h1", "c1"))
     assert(st.hasChanged("m", "h2", "c1"))
     st.markExecution("m", success = true, "2026-01-01T00:00:00Z")
-    st.setWatermark("m", "last_processed_time", "2024-01-15 00:00:00")
+    st.update("m")(_.copy(incremental = Map("last_processed_time" -> "2024-01-15 00:00:00")))
 
     val reloaded = new StateStore(dir)
     val s = reloaded.get("m").get
@@ -220,7 +220,7 @@ class StateStoreSpec extends AnyFunSuite {
   test("clear removes one model or everything") {
     val dir = Files.createTempDirectory("graft_state_")
     val st = new StateStore(dir)
-    st.setHashes("a", "h", "c"); st.setHashes("b", "h", "c")
+    Seq("a", "b").foreach(st.update(_)(_.copy(fileHash = "h", configHash = "c")))
     st.clear(Some("a"))
     assert(st.get("a").isEmpty && st.get("b").isDefined)
     st.clear()
@@ -262,8 +262,10 @@ class PlannerSpec extends AnyFunSuite {
     val p1 = Planner.plan(Map("a" -> sqlA, "b" -> sqlB), cfgs, g, st)
     assert(p1.byType(Planner.Create).map(_.modelName).toSet == Set("a", "b"))
 
-    st.setHashes("a", StateStore.sha256(sqlA), StateStore.sha256(cfgs("a").toString))
-    st.setHashes("b", StateStore.sha256(sqlB), StateStore.sha256(cfgs("b").toString))
+    Seq("a" -> sqlA, "b" -> sqlB).foreach { case (m, sql) =>
+      st.update(m)(_.copy(fileHash = StateStore.sha256(sql),
+        configHash = StateStore.sha256(cfgs(m).toString)))
+    }
     val p2 = Planner.plan(Map("a" -> sqlA, "b" -> sqlB), cfgs, g, st)
     assert(p2.byType(Planner.NoChange).size == 2 && p2.toRun.isEmpty)
 

@@ -632,34 +632,13 @@ class MaterializerSpec extends SparkSpec {
     compare(Nil)
   }
 
-  /** Spark jobs the calling thread starts while running `body`. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, group)
-    try body
-    finally {
-      spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.graftext.Bridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    started.get
-  }
-
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   /** `model`'s current version reads as inference reads it: the schema
     * `wh` reads equals the one Spark infers from the version's files, and
-    * a second warehouse over the same root, with no remembered schemas,
-    * reads the same schema and rows. */
+    * a second warehouse over the same root reads the same schema and
+    * rows. */
   private def assertReadsAsInferred(wh: Warehouse, root: String, model: String): Unit = {
     val got = wh.read(model)
     assert(got.schema == spark.read.parquet(wh.currentPath(model).get).schema, model)
@@ -698,7 +677,7 @@ class MaterializerSpec extends SparkSpec {
       mat.materialize(cfg, batch(Seq(1, 2), "1", "2024-01-03"))
       mat.materialize(cfg, batch(Seq(2, 3), "2", "2024-01-04"), "2024-02-01 00:00:00")
       assert(wh.currentVersion(cfg.name).contains(2L), cfg.name)
-      assert(jobsDuring(wh.read(cfg.name)) == 0, cfg.name) // schema remembered
+      assert(jobsDuring(wh.read(cfg.name)) == 0, cfg.name) // schema from a footer
       assertReadsAsInferred(wh, root, cfg.name)
     }
     assert(wh.read("ptable").schema("p").dataType == org.apache.spark.sql.types.IntegerType)
@@ -747,10 +726,79 @@ class MaterializerSpec extends SparkSpec {
     mat.materialize(cfg, Seq((1, "a")).toDF("id", "v"))
     mat.materialize(cfg, Seq((2, "b", 2.5)).toDF("id", "v", "extra"))
     val path = wh.currentPath("grow").get
-    assert(jobsDuring(wh.read("grow")) == 1) // the footer inference
+    assert(jobsDuring(wh.read("grow")) == 0) // the footer is read on the driver
     assert(wh.read("grow").schema == spark.read.parquet(path).schema)
     assert(sortedRows(wh.read("grow")) == sortedRows(spark.read.parquet(path)))
     assertReadsAsInferred(wh, root, "grow")
+  }
+
+  test("a new warehouse over an existing root reads every version with no job") {
+    val root = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, root, StateStore(root + "/state"))
+    val mat = new Materializer(wh)
+    wh.writeVersion("pt", Seq((1, "a", "d1"), (2, "b", "d2")).toDF("id", "v", "day"),
+      Seq("day"))
+    val grow = ModelConfig("grow", materialized = "incremental",
+      incrementalStrategy = Some("append"), meta = Map("partition_by" -> "day"))
+    mat.materialize(grow, Seq((1, "a", "d1")).toDF("id", "v", "day"))
+    mat.materialize(grow, Seq((2, "b", 2.5, "d0")).toDF("id", "v", "extra", "day"))
+    val fresh = new Warehouse(spark, root, StateStore(root + "/state"))
+    Seq("pt", "grow").foreach { m =>
+      assert(jobsDuring(fresh.read(m)) == 0, m)
+      val path = fresh.currentPath(m).get
+      assert(sortedRows(fresh.read(m)) == sortedRows(spark.read.parquet(path)), m)
+      assertReadsAsInferred(fresh, root, m)
+    }
+  }
+
+  test("rendering and analysing a model over a schema.yml path source starts no job") {
+    val dir = Files.createTempDirectory("graft_src_").toString + "/clicks"
+    Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "day")
+      .write.partitionBy("day").parquet(dir)
+    val spec = SourceTableSpec("ext", "clicks", dir)
+    val r = new ModelRunner(freshWh(), Map(("ext", "clicks") -> spec.sqlRelation))
+    r.addModel("m", "SELECT id, day FROM {{ source('ext', 'clicks') }} WHERE id > 0")
+    var analysed: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { analysed = spark.sql(r.render("m")) } == 0)
+    assert(analysed.schema == spark.read.parquet(dir).select("id", "day").schema)
+    assert(sortedRows(analysed) == Seq("1|2024-01-01", "2|2024-01-02"))
+  }
+
+  test("the watermark rides the version commit: one state write per load") {
+    val root = Files.createTempDirectory("graft_wh_").toString
+    val wh = new Warehouse(spark, root, StateStore(root + "/state"))
+    val mat = new Materializer(wh)
+    val cfg = ModelConfig("wm", materialized = "incremental",
+      incrementalStrategy = Some("time"), timeColumn = Some("t"))
+    val stateDir = java.nio.file.Paths.get(root, "state")
+    Files.createDirectories(stateDir)
+    // Atomic replacements of the state file while `body` runs: each one
+    // creates a `.state*.tmp` file first.
+    def stateWrites(body: => Unit): Int = {
+      import java.nio.file.StandardWatchEventKinds.ENTRY_CREATE
+      val watcher = stateDir.getFileSystem.newWatchService()
+      try {
+        stateDir.register(watcher, ENTRY_CREATE)
+        body
+        var n = 0
+        var key = watcher.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS)
+        while (key != null) {
+          key.pollEvents().forEach { e =>
+            val name = e.context().toString
+            if (name.startsWith(".state") && name.endsWith(".tmp")) n += 1
+          }
+          key.reset()
+          key = watcher.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS)
+        }
+        n
+      } finally watcher.close()
+    }
+    assert(stateWrites(mat.materialize(cfg, Seq((1, "a"), (2, "b")).toDF("t", "v"))) == 1)
+    assert(stateWrites(mat.materialize(cfg, Seq((2, "b"), (3, "c")).toDF("t", "v"))) == 1)
+    val reopened = StateStore(root + "/state")
+    assert(reopened.get("wm").map(_.currentVersion).contains(2L))
+    assert(reopened.watermark("wm", Materializer.WatermarkKey).contains("3"))
+    assert(sortedRows(wh.read("wm")) == Seq("1|a", "2|b", "3|c"))
   }
 
   test("lineage maps projected and aggregated columns to base columns") {
