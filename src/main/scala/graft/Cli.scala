@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftext.Bridge
 import graft.model._
 
 /** Project CLI — the Spark re-expression of the reference's click CLI
@@ -10,8 +9,9 @@ import graft.model._
   * test / lineage / validate / serve(watch).
   *
   * A "project" is a directory of .sql model files (SqlTemplate surface +
-  * `-- config:` / `-- test:` headers). Sources resolve to the testdata
-  * tables; models materialize into `<project>/warehouse`.
+  * `-- config:` / `-- test:` headers). `source()` resolves to what the
+  * project declares (see [[sourceSpecs]]); models materialize into
+  * `<project>/warehouse`.
   *
   * Usage:
   *   graft.Cli <projectDir> run [model ...] [--var k=v ...] [--tag t]
@@ -26,9 +26,11 @@ import graft.model._
   *   graft.Cli <projectDir> lineage <model> [--impact col] | lineage --json
   *   graft.Cli <projectDir> source-freshness [--as-of ts]
   *             [--select source[.table]]  # dbt source freshness over
-  *             schema.yml `sources:` declarations (Freshness.checkTable)
-  *   graft.Cli <projectDir> watch [intervalMs]   # hot reload loop
-  *   graft.Cli <projectDir> serve [--interval ms] # run-all + watch loop
+  *             the declared sources (Freshness.checkTable)
+  *   graft.Cli <projectDir> watch [intervalMs] [--target env] [--var k=v]
+  *             # hot reload loop
+  *   graft.Cli <projectDir> serve [--interval ms] [--target env] [--var k=v]
+  *             # run-all + watch loop
   *   graft.Cli <projectDir> sql "<select>" [--format json|csv|table]
   *             [--limit N] [--var k=v ...]   # ad-hoc query surface
   */
@@ -41,10 +43,6 @@ object Cli {
     val rest = args.drop(2).toSeq
 
     val spark = Bench.session()
-
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    Tables.registerAll(spark, sfDir)
-
     val code = try execute(spark, projectDir, command, rest)
     finally spark.stop()
     if (code != 0) sys.exit(code)
@@ -91,9 +89,7 @@ object Cli {
           plannerModified))
     // the variables `run` renders with: per-environment defaults, and an
     // explicit --var wins
-    def runVars: Map[String, String] =
-      cfg.environmentVars(target.getOrElse(cfg.currentTarget)) ++
-        parseRunArgs(rest)._2
+    def runVars: Map[String, String] = envVars(cfg, target) ++ parseRunArgs(rest)._2
     command match {
       case "run" =>
         val (models, _, tag) = parseRunArgs(rest)
@@ -117,7 +113,7 @@ object Cli {
           toRun.foreach { m =>
             try {
               runner.config(m).validate()
-              runner.render(m, allVars ++ dummyVars(runner, m))
+              runner.renderWithPlaceholders(m, allVars)
               out(s"DRY RUN $m: ${runner.config(m).materialized} ok")
             } catch { case e: Exception =>
               ok = false; out(s"DRY RUN $m: INVALID ${e.getMessage}")
@@ -161,7 +157,7 @@ object Cli {
           .filter(m => runner.configMap.get(m).exists(_.tests.nonEmpty))
         val parents = tested.flatMap(runner.config(_).tests.map(_.toCheck))
           .collect { case r: Quality.Relationships => r.refModel }
-        hydrate(spark, wh, runner, Some(tested ++ parents), runVars)
+        runner.hydrate(Some(tested ++ parents), runVars)
         val outcomes = runner.runTests(targets)
         outcomes.foreach { o =>
           val status =
@@ -207,22 +203,21 @@ object Cli {
         //   lineage --json                  whole-project column graph
         //   lineage <model>                 per-column base-table lineage
         if (rest.contains("--json")) {
-          out(new ProjectLineage(spark, wh, runner).toJson)
+          out(new ProjectLineage(wh, runner).toJson)
           return 0
         }
         val model = positional(rest).headOption.getOrElse(
           sys.error("usage: lineage <model> [--impact col] | lineage --json"))
         flagValue(rest, "--impact") match {
           case Some(column) =>
-            val pl = new ProjectLineage(spark, wh, runner)
+            val pl = new ProjectLineage(wh, runner)
             val hits = pl.columnImpact(model, column)
             if (hits.isEmpty) out(s"no downstream columns depend on $model.$column")
             else hits.toSeq.sorted.foreach(h => out(s"$model.$column -> $h"))
           case None =>
             // upstream relations must resolve for the model's analysis
-            hydrate(spark, wh, runner,
-              Some(runner.graph.dependencies(model).toSeq), runVars)
-            val df = spark.sql(runner.render(model, dummyVars(runner, model)))
+            runner.hydrate(Some(runner.graph.dependencies(model).toSeq), runVars)
+            val df = spark.sql(runner.renderWithPlaceholders(model, runVars))
             Lineage.of(df).foreach { l =>
               val fns = if (l.transformations.isEmpty) ""
                 else l.transformations.toSeq.sorted.mkString(" [", ", ", "]")
@@ -233,7 +228,7 @@ object Cli {
       case "validate" =>
         var ok = true
         runner.configMap.foreach { case (name, c) =>
-          try { c.validate(); runner.render(name, dummyVars(runner, name)) }
+          try { c.validate(); runner.renderWithPlaceholders(name) }
           catch { case e: Exception => ok = false; out(s"INVALID $name: ${e.getMessage}") }
         }
         runner.graph.findCycle().foreach { c =>
@@ -281,7 +276,7 @@ object Cli {
         val (_, vars, _) = parseRunArgs(rest)
         // Every model is queryable both as {{ ref('m') }} and by its bare
         // relation name.
-        hydrate(spark, wh, runner, None, runVars)
+        runner.hydrate(None, runVars)
         val rendered = SqlTemplate.render(
           stmt, "adhoc_sql",
           resolveRef = m => wh.relation(m),
@@ -304,13 +299,14 @@ object Cli {
           df, flagValue(rest, "--format").getOrElse("table"), limit))
         0
       case "source-freshness" =>
-        // dbt `source freshness` parity: every schema.yml source table
+        // dbt `source freshness` parity: every declared source table
         // with a loaded_at_field + warn/error window is checked via
         // Freshness.checkTable (B33) against --as-of (defaults to now;
         // pass an explicit timestamp for replayable CI checks).
         //   source-freshness [--as-of "yyyy-MM-dd HH:mm:ss"]
         //                    [--select source[.table]]
-        val specs0 = SchemaYaml.loadDirSources(projectDir.resolve("models"))
+        // one check per table, for the declaration that wins
+        val specs0 = sourceSpecs(projectDir, cfg).reverse.distinctBy(_.qualified).reverse
         val specs = flagValue(rest, "--select") match {
           case Some(sel) => specs0.filter(s =>
             s.source == sel || s.qualified == sel)
@@ -328,10 +324,7 @@ object Cli {
             .map(t => to_timestamp(lit(t))).getOrElse(current_timestamp())
           var worst = "ok"
           checkable.foreach { s =>
-            // a path reads as parquet, a bare name resolves in the
-            // session catalog (tableExists would choke parsing a path)
-            val df = SchemaYaml.parquetPath(s.sqlRelation)
-              .fold(spark.table(s.identifier))(Bridge.readParquet(spark, _))
+            val df = spark.table(runner.sourceRelation(s.source, s.table).get)
             val (warnS, errS) = s.effectiveWindows
             val row = Freshness.checkTable(
               df, s.loadedAtField.get, asOf, warnS, errS).head()
@@ -346,8 +339,9 @@ object Cli {
           if (worst == "error") 1 else 0
         }
       case "watch" =>
-        val interval = rest.headOption.map(_.toLong).getOrElse(2000L)
-        watch(spark, projectDir, interval)
+        val interval = positional(rest).headOption.map(_.toLong).getOrElse(2000L)
+        watch(spark, projectDir, interval, target = target,
+          vars = parseRunArgs(rest)._2)
         0
       case "serve" =>
         // Server mode (reference cli.py:312-335, `serve --watch`): the
@@ -361,10 +355,9 @@ object Cli {
         // test seam: bound the loop (production default = forever)
         val maxIter = flagValue(rest, "--max-iterations")
           .map(_.toLong).getOrElse(Long.MaxValue)
-        val (_, runner, _) = openProject(spark, projectDir)
-        runner.run()
+        runner.run(variables = runVars)
         out(s"serving $projectDir (poll ${interval}ms); Ctrl+C to stop")
-        watch(spark, projectDir, interval, maxIter)
+        watch(spark, projectDir, interval, maxIter, target, parseRunArgs(rest)._2)
         0
       case other =>
         System.err.println(s"unknown command: $other"); 2
@@ -376,24 +369,34 @@ object Cli {
       target: Option[String] = None): (Warehouse, ModelRunner, ProjectConfig) = {
     val cfg = new ProjectConfig(dir)
     val env = target.getOrElse(cfg.currentTarget)
-    // config/ may override the warehouse location and add source mappings;
-    // the testdata tables stay available under source('raw', ...).
+    // config/ may override the warehouse location
     val whDir = cfg.connectionConfig(Some(env)).get("warehouse_dir").map(_.toString)
       .getOrElse(dir.resolve("warehouse").toString)
     val state = StateStore(whDir + "/state", env)
     val wh = new Warehouse(spark, whDir, state)
-    // schema.yml `sources:` declarations join config/sources.yml in the
-    // source() resolution map (schema.yml wins: it sits next to the
-    // models that consume it)
-    val yamlSources = SchemaYaml.loadDirSources(dir.resolve("models"))
-      .map(s => (s.source, s.table) -> s.sqlRelation).toMap
-    val sources = Tables.names.map(t => ("raw", t) -> t).toMap ++
-      cfg.sourceTableMap ++ yamlSources
-    val runner = new ModelRunner(wh, sources)
+    val runner = new ModelRunner(wh,
+      sourceSpecs(dir, cfg).map(s => (s.source, s.table) -> s.sqlRelation).toMap)
     val modelsDir = dir.resolve("models")
     if (Files.isDirectory(modelsDir)) runner.addModelsFromDir(modelsDir)
     (wh, runner, cfg)
   }
+
+  /** Every source table the project declares, in precedence order (a
+    * later declaration of one table wins): the testdata tables as
+    * `raw`, read from `$SPARK_GRAFT_SF_DIR/<table>.parquet`, then
+    * config/sources.yml, then the models' schema.yml files (they sit
+    * next to the models that read them). Nothing is read here: a run
+    * reads a source when a rendered model names it
+    * ([[ModelRunner.sourceRelation]]). */
+  private def sourceSpecs(dir: Path, cfg: ProjectConfig): Seq[SourceTableSpec] = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    Tables.names.map(t => SourceTableSpec("raw", t, Tables.path(sfDir, t))) ++
+      cfg.sourceSpecs ++ SchemaYaml.loadDirSources(dir.resolve("models"))
+  }
+
+  /** The target environment's variable defaults. */
+  private def envVars(cfg: ProjectConfig, target: Option[String]): Map[String, String] =
+    cfg.environmentVars(target.getOrElse(cfg.currentTarget))
 
   /** Value of `--flag v` anywhere in the arg list. */
   private def flagValue(rest: Seq[String], flag: String): Option[String] =
@@ -421,42 +424,22 @@ object Cli {
     (positional(rest), vars, tag)
   }
 
-  private def dummyVars(runner: ModelRunner, name: String): Map[String, String] =
-    SqlTemplate.extractVariables(runner.modelSqlMap(name))
-      .map(_ -> "0").toMap
-
-  /** Register the relations of `targets` and their upstream models (all
-    * models for None), in execution order, as a same-session `run` leaves
-    * them: a materialized model (or seed) as a view over its current
-    * version, any other model as a view over its SQL rendered with `vars`
-    * (an unbound variable renders as "0", as in `validate`; SQL that
-    * fails analysis is a typed SqlError naming the model). Temp views
-    * are per session, so the commands that read models in a fresh process
-    * or session — `test`, `sql`, `lineage` — call this first. */
-  private def hydrate(spark: SparkSession, wh: Warehouse, runner: ModelRunner,
-      targets: Option[Seq[String]], vars: Map[String, String]): Unit =
-    runner.graph.executionOrder(targets).flatten.foreach { m =>
-      if (wh.exists(m)) wh.refreshView(m)
-      else if (runner.modelSqlMap.contains(m))
-        try wh.registerView(m,
-          spark.sql(runner.render(m, dummyVars(runner, m) ++ vars)))
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw GraftError.classify(e, m) }
-    }
-
   /** Hot-reload loop — the reference's watcher (src/framework/
     * watcher.py:24-148): poll model files, diff hashes via the Planner,
-    * re-run only changed models + their downstream impact. */
+    * re-run only changed models + their downstream impact, in `target`'s
+    * warehouse with its variables (`vars` win, as `--var` does in `run`);
+    * the project, config included, is re-read on every poll. */
   def watch(spark: SparkSession, projectDir: Path, intervalMs: Long,
-      maxIterations: Long = Long.MaxValue): Unit = {
+      maxIterations: Long = Long.MaxValue, target: Option[String] = None,
+      vars: Map[String, String] = Map.empty): Unit = {
     var iter = 0L
     while (iter < maxIterations) {
-      val (wh, runner, _) = openProject(spark, projectDir)
+      val (wh, runner, cfg) = openProject(spark, projectDir, target)
       val plan = Planner.plan(runner.modelSqlMap, runner.configMap, runner.graph, wh.state)
       val toRun = plan.toRun
       if (toRun.nonEmpty) {
         println(s"[watch] change detected: ${toRun.toSeq.sorted.mkString(", ")}")
-        runner.run(Some(toRun.toSeq))
+        runner.run(Some(toRun.toSeq), envVars(cfg, target) ++ vars)
       }
       iter += 1
       if (iter < maxIterations) Thread.sleep(intervalMs)

@@ -95,6 +95,37 @@ final class ModelRunner(
       fullRefresh: Boolean = false): String =
     renderSql(name, modelSql(name), variables, incrementalRun(name, fullRefresh))
 
+  /** [[render]] for a command that analyses a model without running it:
+    * every variable `variables` leaves unbound renders as "0". */
+  def renderWithPlaceholders(
+      name: String, variables: Map[String, String] = Map.empty): String =
+    render(name,
+      SqlTemplate.extractVariables(modelSql(name)).map(_ -> "0").toMap ++ variables)
+
+  /** Register `targets` and their upstream models (all models for None),
+    * in execution order, as a same-session `run` leaves them: a
+    * materialized model (or seed) as a view over its current version,
+    * any other model as a view over [[renderWithPlaceholders]] (SQL that
+    * fails analysis is a typed error naming the model). Temp views are
+    * per session, so the commands that read models in a fresh process or
+    * session call this first. Returns each rendered model's analysed
+    * frame; `renderAll` renders the materialized models too (column
+    * lineage reads every model's plan). */
+  def hydrate(targets: Option[Seq[String]], variables: Map[String, String] = Map.empty,
+      renderAll: Boolean = false): Seq[(String, DataFrame)] =
+    graph.executionOrder(targets).flatten.flatMap { m =>
+      val materialized = wh.exists(m)
+      if (materialized) wh.refreshView(m)
+      if (!modelSql.contains(m) || (materialized && !renderAll)) None
+      else {
+        val df = try wh.spark.sql(renderWithPlaceholders(m, variables))
+          catch { case e: org.apache.spark.sql.AnalysisException =>
+            throw GraftError.classify(e, m) }
+        if (!materialized) wh.registerView(m, df)
+        Some(m -> df)
+      }
+    }
+
   private def incrementalRun(name: String, fullRefresh: Boolean): Boolean =
     modelCfg(name).isIncremental && wh.exists(name) && !fullRefresh
 
@@ -115,8 +146,9 @@ final class ModelRunner(
   // created once per run: every model of the run reads one listing of
   // it, and analysing a model starts no schema job. Cleared when a run
   // starts, so each run sees the files landed before it; filled lazily
-  // by rendering, so renders outside a run (the CLI's hydrate) resolve
-  // the same way.
+  // by rendering, so renders outside a run (hydrate, the CLI's `sql` and
+  // `source-freshness`) resolve the same way, and a source no render
+  // names is never read.
   private val sourceViews = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The relation `{{ source(s, t) }}` renders to: the declared relation,

@@ -1,9 +1,6 @@
 package graft.model
 
 import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
 /** Project configuration: YAML profiles / environments / sources with
   * `${ENV_VAR}` substitution — the Spark re-expression of the reference's
@@ -14,17 +11,32 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
   * Layout under `<project>/config/`:
   *   profiles.yml      default: { target: dev, outputs: { dev: {...} } }
   *   environments.yml  dev: { vars: { k: v }, warehouse_dir: ... }
-  *   sources.yml       sources: [ { name, path?, tables: [ { name,
-  *                     identifier?, path? } ] } ]
+  *   sources.yml       the schema.yml `sources:` shape
+  *                     ([[SchemaYaml.parseSources]])
   */
 final class ProjectConfig(projectDir: Path, env: Map[String, String] = sys.env) {
 
-  private val mapper = new ObjectMapper(new YAMLFactory())
-  private val configDir = projectDir.resolve("config")
+  /** A config file's content after `${VAR}` substitution, and its path;
+    * None when the file is absent. */
+  private def read(name: String): Option[(String, String)] = {
+    val f = projectDir.resolve("config").resolve(name)
+    if (Files.exists(f)) Some((substituteEnvVars(Files.readString(f)), f.toString))
+    else None
+  }
 
-  val profiles: Map[String, Any] = loadYaml("profiles.yml")
-  val environments: Map[String, Any] = loadYaml("environments.yml")
-  val sources: Map[String, Any] = loadYaml("sources.yml")
+  private def doc(name: String): Map[String, Any] =
+    read(name).flatMap((SchemaYaml.readDoc _).tupled).getOrElse(Map.empty)
+
+  val profiles: Map[String, Any] = doc("profiles.yml")
+  val environments: Map[String, Any] = doc("environments.yml")
+
+  /** The tables config/sources.yml declares (config.py:121-176:
+    * source_name.table_name → physical identifier). */
+  val sourceSpecs: Seq[SourceTableSpec] =
+    read("sources.yml").fold(Seq.empty[SourceTableSpec])((SchemaYaml.parseSources _).tupled)
+
+  def sourceTableMap: Map[(String, String), String] =
+    sourceSpecs.map(s => (s.source, s.table) -> s.identifier).toMap
 
   /** config.py:66-69 — target from profiles.default.target, else "dev". */
   val currentTarget: String =
@@ -40,21 +52,6 @@ final class ProjectConfig(projectDir: Path, env: Map[String, String] = sys.env) 
       })
       scala.util.matching.Regex.quoteReplacement(value)
     })
-  }
-
-  private def loadYaml(name: String): Map[String, Any] = {
-    val f = configDir.resolve(name)
-    if (!Files.exists(f)) return Map.empty
-    val content = substituteEnvVars(Files.readString(f))
-    toScala(mapper.readValue(content, classOf[java.util.Map[String, Object]]))
-      .asInstanceOf[Map[String, Any]]
-  }
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, vv) => k.toString -> toScala(vv) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toList
-    case other => other
   }
 
   private def nested(m: Map[String, Any], path: String*): Option[Any] =
@@ -81,26 +78,4 @@ final class ProjectConfig(projectDir: Path, env: Map[String, String] = sys.env) 
       .collect { case m: Map[String, Any] @unchecked => m }
       .getOrElse(Map.empty)
       .map { case (k, v) => k -> v.toString }
-
-  /** (source, table) → path/identifier mapping for ModelRunner
-    * (config.py:121-176: source_name.table_name → physical identifier). */
-  def sourceTableMap: Map[(String, String), String] = {
-    val srcList = sources.get("sources").collect {
-      case l: List[Any] @unchecked => l
-    }.getOrElse(Nil)
-    srcList.collect { case src: Map[String, Any] @unchecked =>
-      val srcName = src("name").toString
-      val basePath = src.get("path").map(_.toString)
-      val tables = src.get("tables").collect {
-        case l: List[Any] @unchecked => l
-      }.getOrElse(Nil)
-      tables.collect { case t: Map[String, Any] @unchecked =>
-        val tName = t("name").toString
-        val ident = t.get("identifier").orElse(t.get("path")).map(_.toString)
-          .orElse(basePath.map(p => s"$p/$tName"))
-          .getOrElse(tName)
-        (srcName, tName) -> ident
-      }
-    }.flatten.toMap
-  }
 }

@@ -1,7 +1,6 @@
 package graft.model
 
 import graft.Json
-import org.apache.spark.sql.SparkSession
 
 /** Cross-model column lineage — the Spark re-expression of the
   * reference's LineageTracker (src/utils/lineage.py:84-160) and
@@ -17,13 +16,7 @@ import org.apache.spark.sql.SparkSession
   * `model.column` names across the whole DAG. Everything here is plan
   * analysis — no data is read or moved.
   */
-final class ProjectLineage(
-    spark: SparkSession,
-    wh: Warehouse,
-    runner: ModelRunner) {
-
-  private def dummyVars(name: String): Map[String, String] =
-    SqlTemplate.extractVariables(runner.modelSqlMap(name)).map(_ -> "0").toMap
+final class ProjectLineage(wh: Warehouse, runner: ModelRunner) {
 
   /** Lowercased relation name → model name, the boundary set for
     * [[Lineage.ofModel]]. */
@@ -31,18 +24,13 @@ final class ProjectLineage(
     runner.modelSqlMap.keys.map(m => wh.relation(m).toLowerCase -> m).toMap
 
   /** Immediate column sources for every model, keyed by model name.
-    * Models are hydrated as rendered views in dependency order so every
-    * ref resolves (materialized models resolve to their current version,
-    * like the reference's warehouse-backed lineage). */
+    * Every model is rendered, in dependency order, with its upstream
+    * models hydrated so every ref resolves (materialized models resolve
+    * to their current version, like the reference's warehouse-backed
+    * lineage). */
   lazy val perModel: Map[String, Seq[Lineage.ColumnLineage]] =
-    runner.graph.executionOrder(None).flatten
-      .filter(runner.modelSqlMap.contains)
-      .map { m =>
-        val df = spark.sql(runner.render(m, dummyVars(m)))
-        val lin = Lineage.ofModel(df, relationOf)
-        if (wh.exists(m)) wh.refreshView(m) else wh.registerView(m, df)
-        m -> lin
-      }.toMap
+    runner.hydrate(None, renderAll = true)
+      .map { case (m, df) => m -> Lineage.ofModel(df, relationOf) }.toMap
 
   /** All downstream `model.column`s transitively derived from
     * `model.column` (reference: lineage.py:115-137 get_column_impact,

@@ -87,11 +87,12 @@ object SchemaYaml {
   private def opt(m: Map[String, Any], key: String): Option[Any] =
     m.get(key).filter(_ != null)
 
-  /** Read one schema YAML document's top-level mapping. A CONTENT-FREE
-    * file (empty, comments-only, a bare `---`) is `None`, not a parse
-    * error — it declares nothing, matching the reference's
-    * `if not data: return` (model.py:_load_schema_file). */
-  private def readDoc(yaml: String, file: String): Option[Map[String, Any]] =
+  /** Read one YAML document's top-level mapping (a schema file or a
+    * project config file). A CONTENT-FREE file (empty, comments-only, a
+    * bare `---`) is `None`, not a parse error — it declares nothing,
+    * matching the reference's `if not data: return`
+    * (model.py:_load_schema_file). */
+  private[model] def readDoc(yaml: String, file: String): Option[Map[String, Any]] =
     if (yaml.trim.isEmpty) None
     else try Option(toScala(mapper.readValue(yaml, classOf[java.util.Map[String, Object]]))
         .asInstanceOf[Map[String, Any]])
@@ -99,7 +100,7 @@ object SchemaYaml {
         case e: com.fasterxml.jackson.databind.exc.MismatchedInputException
             if Option(e.getMessage).exists(_.startsWith("No content")) => None
         case scala.util.control.NonFatal(e) =>
-          throw new ConfigError(s"unparseable schema file: ${e.getMessage}",
+          throw new ConfigError(s"unparseable YAML file: ${e.getMessage}",
             Map("file" -> file))
       }
 
@@ -226,13 +227,13 @@ object SchemaYaml {
     finally s.close()
   }
 
-  /** Parse the `sources:` section of one schema YAML document (dbt
-    * shape: sources → tables, with optional `loaded_at_field` and
+  /** Parse the `sources:` section of one YAML document — a schema.yml
+    * or a project's config/sources.yml (dbt shape: sources → tables,
+    * with optional `loaded_at_field` and
     * `freshness: {warn_after: {count, period}, error_after: ...}` at
-    * either level — table-level overrides source-level). Identifier
-    * resolution mirrors [[ProjectConfig.sourceTableMap]]: explicit
-    * `identifier`/`path`, else `<source path>/<table>`, else the bare
-    * table name. */
+    * either level — table-level overrides source-level). A table's
+    * identifier is its explicit `identifier`/`path`, else
+    * `<source path>/<table>`, else the bare table name. */
   def parseSources(yaml: String, file: String = "schema.yml")
       : Seq[SourceTableSpec] = {
     val root = readDoc(yaml, file).getOrElse(return Nil)

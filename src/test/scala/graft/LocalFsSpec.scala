@@ -18,16 +18,29 @@ import graft.queries.ScaleQueries
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The commands of every process started while `body` ran. */
+  /** Spark's cleanup of a garbage-collected session's artifacts. It runs
+    * on the JVM's `Cleaner-0` thread whenever an earlier session (a
+    * stream's or a loop's clone, any spec's) is collected, and deletes
+    * that session's directory with `rm -rf /tmp/artifacts-<id>/<session>`,
+    * so it is not work of the body under test. */
+  private val artifactCleanup =
+    ("org.apache.spark.sql.artifact.ArtifactManager$StateCleanupRunner", "run")
+
+  /** The commands of every process started while `body` ran, except
+    * those started under [[artifactCleanup]] (told apart by their stack
+    * trace; a process without one counts). */
   private def spawns(body: => Unit): Seq[String] = {
     val r = new Recording()
-    r.enable("jdk.ProcessStart")
+    r.enable("jdk.ProcessStart").withStackTrace()
     r.start()
     try body finally r.stop()
     val f = Files.createTempFile("graft_spawns_", ".jfr")
     try {
       r.dump(f)
-      RecordingFile.readAllEvents(f).asScala.map(_.getString("command")).toSeq
+      RecordingFile.readAllEvents(f).asScala
+        .filterNot(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(fr =>
+          (fr.getMethod.getType.getName, fr.getMethod.getName) == artifactCleanup)))
+        .map(_.getString("command")).toSeq
     } finally { r.close(); Files.delete(f) }
   }
 
